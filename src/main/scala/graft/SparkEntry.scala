@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.index.{DocIdAssigner, IndexBuilder}
-import graft.search.SearchEngine
+import graft.search.{Query, SearchEngine}
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql` twin) per
   * implemented operator from SURVEY.md §2 and the pipeline extensions.
@@ -141,6 +141,16 @@ object SparkEntry {
       .map { case ((d, sr), i) => (i + 1L, d, sr) }
       .toDF("rank", "doc_id", "score_r")
   }
+
+  /** One query's FULL ranking on the segment tier (k unbounded, so the
+    * micro-space re-rank of `rankTopKLocal` is exact).
+    */
+  private def segmentEvaluate(
+      spark: SparkSession,
+      indexDir: String,
+      q: Query,
+      filter: Option[Query.Filter] = None): Seq[(Long, Double)] =
+    graft.search.SegmentSearch.evaluate(spark, indexDir, Seq(q), Int.MaxValue, filter)(0)
 
   /** double -> integer micro-units, the cross-engine-stable score encoding. */
   private def micros(c: org.apache.spark.sql.Column) =
@@ -474,8 +484,8 @@ object SparkEntry {
       rankTopK(engine(s, dir).filteredScoredDF("table scan merge", lang = Some("en")), 10)),
     "q_filter_seg_topk" -> ((s, dir) =>
       rankTopKLocal(s,
-        graft.search.SegmentSearch.searchFilteredBatch(
-          s, segmentDir(s, dir), Seq("table scan merge"), Int.MaxValue, Some("en"), None)(0),
+        segmentEvaluate(s, segmentDir(s, dir), Query.parse("q", "table scan merge"),
+          Query.Filter.of(Some("en"), None)),
         10)),
     "q_filter_serving_topk" -> ((s, dir) => {
       val (eng, store) = serving(s, dir)
@@ -519,13 +529,13 @@ object SparkEntry {
     //     union scores through the normal WAND batch) ---
     "q_prefix_seg_topk" -> ((s, dir) =>
       rankTopKLocal(s,
-        graft.search.SegmentSearch.prefixBatch(s, segmentDir(s, dir), "s", Int.MaxValue), 20)),
+        segmentEvaluate(s, segmentDir(s, dir), Query.parse("prefix", "s")), 20)),
     "q_wildcard_seg_topk" -> ((s, dir) =>
       rankTopKLocal(s,
-        graft.search.SegmentSearch.wildcardBatch(s, segmentDir(s, dir), "*er", Int.MaxValue), 20)),
+        segmentEvaluate(s, segmentDir(s, dir), Query.parse("wildcard", "*er")), 20)),
     "q_fuzzy_seg_topk" -> ((s, dir) =>
       rankTopKLocal(s,
-        graft.search.SegmentSearch.fuzzyBatch(s, segmentDir(s, dir), "hast", Int.MaxValue), 20)),
+        segmentEvaluate(s, segmentDir(s, dir), Query.parse("fuzzy", "hast")), 20)),
     // --- SEGMENT-tier BM25 over PFOR-coded segments (GRFTSEG6, patched
     //     frame-of-reference blocks): the SAME oracle SQL as the varint
     //     gate — codec changes bytes, never answers ---
@@ -541,10 +551,10 @@ object SparkEntry {
         graft.search.SegmentSearch.searchBatch(s, foldedSegmentDir(s, dir), Seq("table scan merge"), Int.MaxValue)(0),
         20)),
     // --- SEGMENT-tier phrase: full AND enumeration + sidecar adjacency
-    //     verification, distributed (phraseBatch) ---
+    //     verification, distributed ---
     "q_phrase_seg_topk" -> ((s, dir) =>
       rankTopKLocal(s,
-        graft.search.SegmentSearch.phraseBatch(s, segmentDir(s, dir), Seq("stream table hash"), Int.MaxValue)(0),
+        segmentEvaluate(s, segmentDir(s, dir), Query.parse("phrase", "stream table hash")),
         10)),
     // --- MULTI-TENANT tier (TenantCatalog): one SegmentIndex per tenant,
     //     so N/avgdl/df are tenant-LOCAL — the oracle recomputes the whole
@@ -896,7 +906,7 @@ object SparkEntry {
     // token stream contains the phrase as a substring bounded by spaces —
     // exactly "the token sequence occurs consecutively"
     "q_phrase_topk" -> phraseOracleSql,
-    // segment tier (phraseBatch) answers the SAME oracle
+    // segment tier answers the SAME oracle
     "q_phrase_seg_topk" -> phraseOracleSql,
     // prefix twin: same scoring chain with the term filter LIKE 's%' and
     // uniform weight 1 per matched term

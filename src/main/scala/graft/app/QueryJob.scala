@@ -2,7 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.SparkSession
 
-import graft.search.SegmentSearch
+import graft.search.{Query, SegmentSearch}
 
 /** EP2 — the spark-submit batch query job over a built segment index
   * (reference: `searchd --serve` + /search, SURVEY §3.2 — batch query sets
@@ -12,9 +12,9 @@ import graft.search.SegmentSearch
   * Prints one JSON line per query: {"query":…,"results":[{docId,score}…]}.
   *
   * Queries of the form `phrase:<text>` / `prefix:<p>` / `fuzzy:<t>` /
-  * `wildcard:<pat>` run the matching distributed extension
-  * (SegmentSearch.phraseBatch / prefixBatch / fuzzyBatch / wildcardBatch —
-  * SURVEY §2.12); plain queries keep the reference-exact language.
+  * `wildcard:<pat>` run the matching extension family (SURVEY §2.12);
+  * plain queries keep the reference-exact language. All of them run as ONE
+  * distributed batch (`SegmentSearch.evaluate`).
   */
 object QueryJob {
   def main(args: Array[String]): Unit = {
@@ -31,24 +31,11 @@ object QueryJob {
       else graft.spark.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt, 16, "graft-job")
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val (phraseQ, rest0) = queries.zipWithIndex.partition(_._1.startsWith("phrase:"))
-      val (expandedQ, plainQ) = rest0.partition { case (q, _) =>
-        q.startsWith("prefix:") || q.startsWith("fuzzy:") || q.startsWith("wildcard:") }
-      val plainRes =
-        if (plainQ.isEmpty) Map.empty[Int, Seq[(Long, Double)]]
-        else SegmentSearch.searchBatch(spark, indexDir, plainQ.map(_._1), k)
-      val phraseRes =
-        if (phraseQ.isEmpty) Map.empty[Int, Seq[(Long, Double)]]
-        else SegmentSearch.phraseBatch(spark, indexDir, phraseQ.map(_._1.substring(7)), k)
-      val expandedRes: Map[Int, Seq[(Long, Double)]] = expandedQ.map { case (q, orig) =>
-        orig -> (if (q.startsWith("prefix:")) SegmentSearch.prefixBatch(spark, indexDir, q.substring(7), k)
-                 else if (q.startsWith("fuzzy:")) SegmentSearch.fuzzyBatch(spark, indexDir, q.substring(6), k)
-                 else SegmentSearch.wildcardBatch(spark, indexDir, q.substring(9), k))
-      }.toMap
-      val byInput: Map[Int, Seq[(Long, Double)]] =
-        plainQ.map(_._2).zipWithIndex.map { case (orig, j) => orig -> plainRes(j) }.toMap ++
-          phraseQ.map(_._2).zipWithIndex.map { case (orig, j) => orig -> phraseRes(j) }.toMap ++
-          expandedRes
+      val parsed = queries.map { q =>
+        Query.Extensions.collectFirst { case f if q.startsWith(f + ":") => Query.parse(f, q.substring(f.length + 1)) }
+          .getOrElse(Query.parse("q", q))
+      }
+      val byInput = SegmentSearch.evaluate(spark, indexDir, parsed, k)
       import graft.core.JsonText.esc
       queries.zipWithIndex.foreach { case (q, i) =>
         val hits = byInput(i).map { case (d, s) => s"""{"docId":$d,"score":$s}""" }.mkString("[", ",", "]")

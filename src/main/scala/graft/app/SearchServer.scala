@@ -8,9 +8,8 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReferenc
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.core.QueryParser
 import graft.index.{DocSidecar, SegmentIndex}
-import graft.search.SegmentSearch
+import graft.search.{Query, SegmentSearch}
 
 /** Long-running HTTP serving endpoint — the twin of the reference's searchd
   * (/root/reference/apps/searchd/main.cpp:423-489):
@@ -139,7 +138,7 @@ object SearchServer {
     * the double-buffer discipline that makes /reload invisible to clients.
     *
     * `segmentsByKey` / `sidecarsByKey` (keyed by path|size|mtime file
-    * identity, the loadCached model) are the DELTA-RELOAD carry surface:
+    * identity, `SegmentIndex.fileKey`) are the DELTA-RELOAD carry surface:
     * loadState reuses a previous generation's unchanged parts so a reload
     * after a 2-bucket addDocuments on a 1000-segment index loads 2 segments,
     * not 1002 — and the transient double-pin shrinks to the delta.
@@ -477,59 +476,28 @@ object SearchServer {
     */
   private[app] def searchBody(st: IndexState, params: Map[String, String]): String = {
           val k = math.max(1, params.get("k").flatMap(_.toIntOption).getOrElse(10))
-          // `lang=` / `source=` are ADDITIVE metadata filters (deferred
-          // Phase 9 "filters"): restrict candidates BEFORE truncation via
-          // rank-order early-exit verification against the sidecar row.
-          val wantLang = params.get("lang").filter(_.nonEmpty)
-          val wantSource = params.get("source").filter(_.nonEmpty)
-          val hasFilter = wantLang.nonEmpty || wantSource.nonEmpty
-          def metaOk(row: DocRow): Boolean =
-            wantLang.forall(_ == row.lang) && wantSource.forall(_ == row.source)
-          def pred(id: Long): Boolean = st.docs(id).exists(metaOk)
           // `phrase=` / `prefix=` / `fuzzy=` / `wildcard=` are ADDITIVE
-          // extension params (SURVEY §2.12/§2.14); the reference contract
-          // (`q=` + QueryParser semantics) is untouched.
+          // extension params (SURVEY §2.12/§2.14), the first present one
+          // picks the family; the reference contract (`q=` + QueryParser
+          // semantics) is untouched. `lang=` / `source=` are ADDITIVE
+          // metadata filters (deferred Phase 9 "filters"): they restrict
+          // candidates BEFORE truncation via rank-order verification against
+          // the sidecar row, for every family.
+          val (family, q) = Query.Extensions.collectFirst { case f if params.contains(f) => f -> params(f) }
+            .getOrElse("q" -> params.getOrElse("q", ""))
+          val query = Query.parse(family, q)
+          val filter = Query.Filter.of(
+            params.get("lang").filter(_.nonEmpty), params.get("source").filter(_.nonEmpty))
           // The PUBLIC surface opts into the engine's maxTerms latency guard:
           // an unbounded `wildcard=*` would score the whole vocabulary as one
           // OR query per request. 4096 terms is far beyond any real
           // expansion; past the cap results diverge from the uncapped engine
           // tiers by contract (first maxTerms in byte-lex order).
-          val maxExp = SearchServer.MaxExpandTerms
-          val (q, top, highlight) = (params.get("phrase"), params.get("prefix"),
-              params.get("fuzzy"), params.get("wildcard")) match {
-            case (Some(p), _, _, _) =>
-              // a filtered phrase composes through textOf: a doc failing the
-              // metadata filter yields no text, so verification rejects it
-              (p,
-               st.engine.searchPhrase(p, k,
-                 id => st.docs(id).filter(metaOk).map(_.text)),
-               graft.core.Tokenizer.tokenize(p))
-            case (None, Some(p), _, _) =>
-              (p,
-               if (hasFilter) st.engine.searchPrefixFiltered(p, k, pred, maxTerms = maxExp)
-               else st.engine.searchPrefix(p, k, maxTerms = maxExp),
-               graft.core.Tokenizer.tokenize(p))
-            case (None, None, Some(p), _) =>
-              // typo-tolerant expansion (distance <= 1); filters compose
-              // through the same bounded rank-order verification as prefix
-              (p,
-               if (hasFilter) st.engine.searchFuzzyFiltered(p, k, pred, maxTerms = maxExp)
-               else st.engine.searchFuzzy(p, k, maxTerms = maxExp),
-               graft.core.Tokenizer.tokenize(p))
-            case (None, None, None, Some(p)) =>
-              // general glob expansion (prefix generalized); snippet
-              // highlighting falls back to the pattern's literal chunks
-              (p,
-               if (hasFilter) st.engine.searchWildcardFiltered(p, k, pred, maxTerms = maxExp)
-               else st.engine.searchWildcard(p, k, maxTerms = maxExp),
-               graft.core.Tokenizer.tokenize(p))
-            case _ =>
-              val qs = params.getOrElse("q", "")
-              val pq = QueryParser.parse(qs)
-              (qs,
-               if (hasFilter) st.engine.searchFiltered(pq, k, pred)
-               else st.engine.search(pq, k),
-               pq.terms)
+          val top = st.engine.evaluate(query, k, st.docs, filter, maxTerms = SearchServer.MaxExpandTerms)
+          // snippets highlight the typed text's tokens (a glob's literal chunks)
+          val highlight = query match {
+            case Query.Terms(pq) => pq.terms
+            case _ => graft.core.Tokenizer.tokenize(q)
           }
           // assemble the response in ONE builder — at thousands of rps the
           // per-hit string concatenation was measurable allocation churn
@@ -617,13 +585,9 @@ object SearchServer {
     */
   def loadState(indexDir: String, prev: Option[IndexState] = None): IndexState = {
     val meta = SegmentIndex.readMeta(indexDir)
-    def fileKey(f: String): String = {
-      val p = java.nio.file.Paths.get(f)
-      s"$f|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-    }
     val segEntries: Seq[(String, SegmentIndex.LoadedSegment)] =
       SegmentIndex.liveSegmentFiles(indexDir, meta).map { f =>
-        val k = fileKey(f)
+        val k = SegmentIndex.fileKey(f)
         k -> prev.flatMap(_.segmentsByKey.get(k)).getOrElse(SegmentIndex.loadSegment(f))
       }
     val segs = segEntries.map(_._2).toIndexedSeq
@@ -662,7 +626,7 @@ object SearchServer {
     val shares: Seq[(String, SharedReader)] =
       try {
         scFiles.foreach { f =>
-          val k = fileKey(f)
+          val k = SegmentIndex.fileKey(f)
           val reused = prev.flatMap(_.sidecarsByKey.get(k)).filter(_.tryAcquire())
           acquired += (k -> reused.getOrElse(new SharedReader(DocSidecar.openBucket(f))))
         }

@@ -1145,6 +1145,15 @@ object SegmentIndex {
   def sha256Hex(bytes: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(bytes).map("%02x".format(_)).mkString
 
+  /** A file's identity for the readers' caches and delta reloads: path, size
+    * and mtime (`path|size|mtime`), so an in-place rewrite of the same path
+    * (resume invalidation, changed corpus, compaction) is a different file.
+    */
+  def fileKey(path: String): String = {
+    val p = Paths.get(path)
+    s"$path|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
+  }
+
   // -------------------------------------------------------------- manifests
   import org.json4s._
   import org.json4s.jackson.{JsonMethods, Serialization}

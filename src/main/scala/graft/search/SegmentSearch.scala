@@ -1,10 +1,9 @@
 package graft.search
 
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, sum}
 import scala.collection.parallel.CollectionConverters._
 
-import graft.core.{Bm25, ParsedQuery, Phrase, QueryParser, Tokenizer}
+import graft.core.{Bm25, ParsedQuery, QueryParser}
 import graft.index.{DocSidecar, SegmentIndex}
 import graft.index.SegmentIndex.LoadedSegment
 
@@ -22,11 +21,41 @@ import graft.index.SegmentIndex.LoadedSegment
   */
 object SegmentSearch {
 
-  /** Executor-local segment cache — one load per (executor, file) across all
-    * queries and jobs in the JVM.
+  /** Executor-local load-once cache per FILE IDENTITY
+    * (`SegmentIndex.fileKey`): an in-place rewrite of a path (resume
+    * invalidation, changed corpus) is re-opened instead of served stale, and
+    * the superseded entry for that path is evicted and CLOSED — long-lived
+    * executors must not leak a descriptor per superseded file. A task racing
+    * the rewrite may see a ClosedChannelException and retry — loud and
+    * correct (the bytes under it changed anyway).
     */
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, LoadedSegment]()
+  private final class FileCache[V](open: String => V, close: V => Unit) {
+    private val map = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    def get(path: String): V = {
+      val key = SegmentIndex.fileKey(path)
+      val hit = map.get(key)
+      if (hit != null) return hit
+      val keys = map.keys()
+      while (keys.hasMoreElements) { // drop superseded versions of this path
+        val k = keys.nextElement()
+        if (k.startsWith(path + "|") && k != key) {
+          val old = map.remove(k)
+          if (old != null) close(old)
+        }
+      }
+      map.computeIfAbsent(key, _ => open(path))
+    }
+  }
+
+  // lazy segments: executor tasks read the term dictionary only; posting
+  // records load on demand for the query terms that actually hit a segment
+  @transient private lazy val segmentCache =
+    new FileCache[LoadedSegment](SegmentIndex.loadSegment(_, eager = false), _.close())
+
+  // sidecar readers for rank-order verification: 20 B/doc pinned
+  // (dictionary only); text rows are positional reads
+  @transient private lazy val sidecarCache =
+    new FileCache[DocSidecar.BucketReader](DocSidecar.openBucket, _.close())
 
   /** Driver-side global-df cache, keyed by index state (dir, n, sumDl,
     * segment-file fingerprint).
@@ -35,55 +64,15 @@ object SegmentSearch {
     new java.util.concurrent.ConcurrentHashMap[
       (String, Long, Long, String), java.util.concurrent.ConcurrentHashMap[String, Long]]()
 
-  /** Executor-local load-once per segment FILE IDENTITY — the key includes
-    * size+mtime so an in-place rebuild of the same path (resume invalidation,
-    * changed corpus) is re-loaded instead of served stale; superseded entries
-    * for the same path are evicted.
-    */
-  def loadCached(path: String): LoadedSegment = {
-    val p = java.nio.file.Paths.get(path)
-    val key = s"$path|${java.nio.file.Files.size(p)}|${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-    val hit = cache.get(key)
-    if (hit != null) return hit
-    val keys = cache.keys()
-    while (keys.hasMoreElements) { // drop superseded versions of this path
-      val k = keys.nextElement()
-      if (k.startsWith(path + "|") && k != key) {
-        // Close the evicted segment's lazy FileChannel — long-lived executors
-        // must not leak a descriptor per superseded segment. A task racing an
-        // in-place rebuild of the same path may see a ClosedChannelException
-        // and retry — loud and correct (the bytes under it changed anyway).
-        val old = cache.remove(k)
-        if (old != null) old.close()
-      }
-    }
-    // lazy: executor tasks read the term dictionary only; posting records
-    // load on demand for the query terms that actually hit this segment
-    cache.computeIfAbsent(key, _ => SegmentIndex.loadSegment(path, eager = false))
-  }
+  /** Executor-local load-once per segment file identity (see `FileCache`). */
+  def loadCached(path: String): LoadedSegment = segmentCache.get(path)
 
-  /** Executor-local sidecar reader cache (phrase batch verification), same
-    * file-identity key + superseded-version eviction discipline as
-    * `loadCached`. A reader pins 20 B/doc (dictionary only); text rows are
-    * positional reads.
+  /** The doc sidecar next to a segment file: swap only the FILENAME prefix
+    * (a dir component containing "segment-" must not be rewritten).
     */
-  @transient private lazy val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DocSidecar.BucketReader]()
-
-  def loadCachedSidecar(path: String): DocSidecar.BucketReader = {
-    val p = java.nio.file.Paths.get(path)
-    val key = s"$path|${java.nio.file.Files.size(p)}|${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-    val hit = sidecarCache.get(key)
-    if (hit != null) return hit
-    val keys = sidecarCache.keys()
-    while (keys.hasMoreElements) {
-      val k = keys.nextElement()
-      if (k.startsWith(path + "|") && k != key) {
-        val old = sidecarCache.remove(k)
-        if (old != null) old.close() // loud ClosedChannelException on racers, like segments
-      }
-    }
-    sidecarCache.computeIfAbsent(key, _ => DocSidecar.openBucket(path))
+  private def sidecarOf(segmentPath: String): String = {
+    val sp = java.nio.file.Paths.get(segmentPath)
+    sp.resolveSibling(sp.getFileName.toString.replace("segment-", "docs-")).toString
   }
 
   /** Segment-file fan-out Dataset: files sliced straight into tasks via
@@ -102,6 +91,9 @@ object SegmentSearch {
   }
 
   final case class QueryHit(qid: Int, docId: Long, score: Double)
+
+  /** Doc lookup for serving queries that verify no rows. */
+  private val NoDocs: Long => Option[DocSidecar.DocRow] = _ => None
 
   /** The ONE did-you-mean pick rule (the oracle contract shared by all
     * tiers): exact presence wins; else argmax global df with byte-lex tie;
@@ -129,13 +121,8 @@ object SegmentSearch {
       if (df > 0) Some(t -> Bm25.idf(n, df)) else None
     }.toMap
 
-  /** Distributed batch search: all queries against all segments.
-    * Returns per query the reference-ranked top-k (epsilon comparator).
-    *
-    * Phase 1 (tiny): sum per-segment local dfs for the batch's query terms —
-    * |terms| x |segments| rows collected, and it warms the executor segment
-    * caches for phase 2. Phase 2: zero-shuffle WAND fan-out + distributed
-    * per-query merge.
+  /** Distributed batch search of reference-language queries: per query the
+    * reference-ranked top-k (epsilon comparator). See `evaluate`.
     */
   def searchBatch(
       spark: SparkSession,
@@ -143,60 +130,102 @@ object SegmentSearch {
       queries: Seq[String],
       k: Int
   ): Map[Int, Seq[(Long, Double)]] =
-    searchBatchParsed(spark, indexDir,
-      queries.zipWithIndex.map { case (q, i) => (i, QueryParser.parse(q)) }, k)
+    evaluate(spark, indexDir, queries.map(Query.parse("q", _)), k)
 
-  private def searchBatchParsed(
+  /** The batch tier's evaluator: all queries against all live segments, per
+    * query (by position) the exact top-k under the reference comparator.
+    *
+    * Phase 0 (only for `Expand` queries): ONE distributed dictionary scan
+    * resolves every expansion — vocabulary never leaves the executors.
+    * Phase 1 (tiny): global df (sum of per-segment local dfs) for the
+    * batch's scored terms; it warms the executor segment caches. Phase 2:
+    * zero-shuffle fan-out — per segment task, block-max WAND per query; a
+    * query that needs a row check (phrase adjacency or the metadata filter)
+    * enumerates its FULL ranking instead (the check must precede
+    * truncation) and verifies it against the segment's sibling doc sidecar
+    * IN RANK ORDER with early exit at k accepted: any global top-k survivor
+    * in this segment is among its first k survivors, so the merge stays
+    * exact while text reads drop to ~k per segment. Then the distributed
+    * per-query merge — the only exchange.
+    */
+  def evaluate(
       spark: SparkSession,
       indexDir: String,
-      parsed: Seq[(Int, ParsedQuery)],
-      k: Int
+      queries: Seq[Query],
+      k: Int,
+      filter: Option[Query.Filter] = None
   ): Map[Int, Seq[(Long, Double)]] = {
     val meta = SegmentIndex.readMeta(indexDir)
     val files = SegmentIndex.liveSegmentFiles(indexDir, meta)
     val avgdl = meta.avgdl
 
-    import spark.implicits._
-    // one segment per task (up to 4x core count): finer granularity than
-    // segments-per-core shortens the straggler tail — with 2 segments/task a
-    // single slow pair doubles the stage wall; single-segment tasks let the
-    // scheduler rebalance
+    val expansions = queries.collect { case Query.Expand(e) => e }.distinct
+    val matched = dictionaryScan(spark, files, expansions).keys.toSeq.sorted
+    val plans: Seq[(Int, Query, ParsedQuery)] = queries.zipWithIndex.map { case (q, i) =>
+      (i, q, Query.scored(q, e => matched.filter(e.matches)))
+    }
+    if (files.isEmpty || plans.forall(_._3.isEmpty))
+      return queries.indices.map(_ -> Seq.empty[(Long, Double)]).toMap
+    if (plans.exists { case (_, q, _) => Query.verifier(q, filter).isDefined })
+      DocSidecar.ensure(spark, indexDir) // idempotent; sidecars are derived data
+
     val fileDs = segmentFileDs(spark, files)
+    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, plans.flatMap(_._3.terms).distinct)
+    val bc = spark.sparkContext.broadcast((plans, idfs, filter))
 
-    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, parsed.flatMap(_._2.terms).distinct)
-    val bc = spark.sparkContext.broadcast((parsed, idfs))
-
-    val queryDiag = sys.env.get("SPARK_GRAFT_QUERY_DIAG").contains("1")
     val hits = fileDs
       .mapPartitions { paths =>
-        val (qs, idfMap) = bc.value
+        val (qs, idfMap, flt) = bc.value
+        val checked = qs.map { case (qid, q, pq) => (qid, pq, Query.verifier(q, flt)) }
         paths.flatMap { p =>
-          val t0 = if (queryDiag) System.nanoTime() else 0L
           val seg = loadCached(p)
-          val out = qs.iterator.flatMap { case (qid, pq) =>
-            Wand.searchSegment(seg, pq, idfMap, avgdl, k).iterator
-              .map(h => QueryHit(qid, h.docId, h.score))
-          }
-          if (!queryDiag) out
-          else {
-            val buf = out.toVector // force, so the timing covers the search
-            System.err.println(f"[qdiag] ${p.split('/').last}%-18s ${(System.nanoTime() - t0) / 1e6}%8.1f ms  thread=${Thread.currentThread().getName}")
-            buf.iterator
+          lazy val sidecar = sidecarCache.get(sidecarOf(p))
+          checked.iterator.flatMap {
+            case (qid, pq, None) =>
+              Wand.searchSegment(seg, pq, idfMap, avgdl, k).iterator
+                .map(h => QueryHit(qid, h.docId, h.score))
+            case (qid, pq, Some(ok)) =>
+              val raw = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
+              Bm25.sortHits(raw.map(h => (h.docId, h.score))).iterator
+                .filter { case (d, _) => sidecar.get(d).exists(ok) }
+                .take(math.max(1, k))
+                .map { case (d, s) => QueryHit(qid, d, s) }
           }
         }
       }(Encoders.product[QueryHit])
 
-    mergeDistributed(hits, parsed.size, k)
+    mergeDistributed(hits, queries.size, k)
   }
 
-  /** Distributed did-you-mean — completes its three-tier story (dataflow
-    * `SearchEngine.didYouMeanDF`, serving `ServingEngine.didYouMean`): one
-    * distributed pass over per-segment dictionaries collects the
-    * Levenshtein<=maxDist candidates WITH their local dfs (length-band
-    * pre-check before the DP; only matched (term, df) rows leave the
-    * executors), dfs sum across segments driver-side, then the shared pick
-    * rule: exact presence wins, else argmax global df (ties byte-lex), else
-    * the term itself with df 0. Output rows: (pos, term, suggestion, df).
+  /** The batch tier's ONE per-segment dictionary scan: every term of a live
+    * segment that some expansion matches, with its GLOBAL df (sum of the
+    * segments' local dfs). Only matched (term, local df) rows leave the
+    * executors — a vocabulary-bounded, usually tiny set — and sum
+    * driver-side.
+    */
+  private def dictionaryScan(
+      spark: SparkSession,
+      files: Seq[String],
+      exps: Seq[Query.Expansion]
+  ): Map[String, Long] =
+    if (files.isEmpty || exps.isEmpty) Map.empty
+    else segmentFileDs(spark, files)
+      .mapPartitions { paths =>
+        paths.flatMap { p =>
+          loadCached(p).terms.iterator.collect {
+            case (t, td) if exps.exists(_.matches(t)) => (t, td.df)
+          }
+        }
+      }(Encoders.product[(String, Long)])
+      .collect()
+      .groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** Distributed did-you-mean — the batch twin of the dataflow
+    * `SearchEngine.didYouMeanDF` and the serving `ServingEngine.didYouMean`:
+    * the dictionary scan collects the Levenshtein<=maxDist candidates of
+    * every query term with their global dfs, then the shared pick rule:
+    * exact presence wins, else argmax global df (ties byte-lex), else the
+    * term itself with df 0. Output rows: (pos, term, suggestion, df).
     */
   def didYouMeanBatch(
       spark: SparkSession,
@@ -205,108 +234,42 @@ object SegmentSearch {
       maxDist: Int = 1
   ): Seq[(Long, String, String, Long)] = {
     val terms = QueryParser.parse(query).terms
-    if (terms.isEmpty) return Nil
-    val tset = terms.distinct
-    val files = SegmentIndex.liveSegmentFiles(indexDir)
-    // Zero live segments (empty corpus / streaming dir before first commit):
-    // every term falls through to (itself, df 0) — same as the serving tier.
-    if (files.isEmpty) return terms.zipWithIndex.map { case (t, i) => (i + 1L, t, t, 0L) }
-    import spark.implicits._
-    val tbc = spark.sparkContext.broadcast(tset)
-    val dfs: Map[String, Long] = segmentFileDs(spark, files)
-      .mapPartitions { paths =>
-        val ts = tbc.value
-        paths.flatMap { p =>
-          loadCached(p).terms.iterator.collect {
-            case (cand, td) if ts.exists(t =>
-              math.abs(cand.length - t.length) <= maxDist &&
-                graft.core.EditDistance.within(cand, t, maxDist)) => (cand, td.df)
-          }
-        }
-      }(Encoders.product[(String, Long)])
-      .toDF("term", "df")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // zero live segments (empty corpus / streaming dir before the first
+    // commit): every term falls through to (itself, df 0), as on serving
+    val dfs = dictionaryScan(spark, SegmentIndex.liveSegmentFiles(indexDir),
+      terms.distinct.map(Query.Fuzzy(_, maxDist)))
     terms.zipWithIndex.map { case (t, i) =>
-      val pick = pickSuggestion(t,
-        dfs.view.filter { case (cand, _) => graft.core.EditDistance.within(cand, t, maxDist) })
+      val near = Query.Fuzzy(t, maxDist)
+      val pick = pickSuggestion(t, dfs.view.filter { case (cand, _) => near.matches(cand) })
       (i + 1L, t, pick._1, pick._2)
     }
   }
 
-  /** Expansion descriptor for the batch tier's dictionary-expanded query
-    * family (prefix / wildcard / fuzzy) — serialized into the expansion
-    * task; normalization happens driver-side before construction.
+  /** Distributed prefix suggestions — EXTENSION (deferred Phase 9
+    * "autocomplete"), the batch twin of `ServingEngine.suggest`: the
+    * dictionary scan's prefix matches ranked by global df desc, term asc.
     */
-  private sealed trait Expansion extends Serializable
-  private final case class PrefixExp(p: String) extends Expansion
-  private final case class WildExp(glob: String) extends Expansion
-  private final case class FuzzyExp(t: String, maxDist: Int) extends Expansion
-
-  /** Distributed batch twins of the serving tier's expanded queries —
-    * completes the three-tier matrix for prefix/wildcard/fuzzy (SURVEY
-    * §2.12/§2.15). Phase 0: expand the pattern against per-segment
-    * dictionaries IN PARALLEL — vocabulary never leaves the executors, only
-    * matched terms come back (a vocabulary-bounded, usually tiny list).
-    * The byte-lex-sorted union then scores OR-mode through the normal
-    * searchBatch machinery (global df = sum of local dfs, WAND, distributed
-    * merge) — identical semantics to the dataflow and serving tiers, so all
-    * three answer the same oracle SQL.
-    */
-  def prefixBatch(spark: SparkSession, indexDir: String, prefix: String, k: Int): Seq[(Long, Double)] = {
-    val norm = Tokenizer.tokenize(prefix)
-    if (norm.size != 1) return Nil
-    expansionBatch(spark, indexDir, PrefixExp(norm.head), k)
-  }
-
-  def wildcardBatch(spark: SparkSession, indexDir: String, pattern: String, k: Int): Seq[(Long, Double)] =
-    graft.core.Glob.normalize(pattern) match {
-      case None => Nil
-      case Some(g) => expansionBatch(spark, indexDir, WildExp(g), k)
-    }
-
-  def fuzzyBatch(spark: SparkSession, indexDir: String, term: String, k: Int, maxDist: Int = 1): Seq[(Long, Double)] = {
-    val norm = Tokenizer.tokenize(term)
-    if (norm.size != 1) return Nil
-    expansionBatch(spark, indexDir, FuzzyExp(norm.head, maxDist), k)
-  }
-
-  private def expansionBatch(
+  def suggestBatch(
       spark: SparkSession,
       indexDir: String,
-      exp: Expansion,
+      prefix: String,
       k: Int
-  ): Seq[(Long, Double)] = {
-    val files = SegmentIndex.liveSegmentFiles(indexDir)
-    if (files.isEmpty) return Nil // repartition(0) would throw on an empty index
-    import spark.implicits._
-    val expanded = segmentFileDs(spark, files)
-      .mapPartitions { paths =>
-        paths.flatMap { p =>
-          val dict = loadCached(p).terms
-          exp match {
-            case PrefixExp(pre) => dict.keysIterator.filter(_.startsWith(pre))
-            case WildExp(g) => dict.keysIterator.filter(graft.core.Glob.matches(g, _))
-            case FuzzyExp(t, d) => dict.keysIterator.filter(c =>
-              math.abs(c.length - t.length) <= d && graft.core.EditDistance.within(c, t, d))
-          }
-        }
-      }(Encoders.STRING)
-      .collect() // matched terms only — vocabulary-bounded, dedup driver-side
-      .distinct.sorted.toSeq
-    if (expanded.isEmpty) Nil
-    else searchBatchParsed(spark, indexDir,
-      Seq(0 -> ParsedQuery(expanded, Nil, isOr = true)), k)(0)
-  }
+  ): Seq[(String, Long)] =
+    Query.parse("prefix", prefix) match {
+      case Query.Expand(e) =>
+        dictionaryScan(spark, SegmentIndex.liveSegmentFiles(indexDir), Seq(e))
+          .toSeq.sortBy { case (t, df) => (-df, t) }.take(k)
+      case _ => Nil
+    }
 
   final case class RankedHit(qid: Int, rank: Int, docId: Long, score: Double)
 
   /** Phase 1 of a batch: global df (sum of per-segment local dfs) for the
     * batch's positive terms. Results are cached per INDEX STATE — (dir, n,
-    * sumDl) plus a fingerprint of the segment files' (name, size, mtime),
-    * so any add/compact/in-place rebuild (even one that happens to preserve
-    * n and sumDl) changes the key. Repeated batches against a warm index
-    * skip the job entirely.
+    * sumDl) plus a fingerprint of the segment files' identities, so any
+    * add/compact/in-place rebuild (even one that happens to preserve n and
+    * sumDl) changes the key. Repeated batches against a warm index skip the
+    * job entirely.
     */
   private def batchIdfs(
       spark: SparkSession,
@@ -317,10 +280,7 @@ object SegmentSearch {
       allTerms: Seq[String]
   ): Map[String, Double] = {
     val filesFp = SegmentIndex.sha256Hex(
-      files.map { f =>
-        val p = java.nio.file.Paths.get(f)
-        s"$f|${java.nio.file.Files.size(p)}|${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-      }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      files.map(SegmentIndex.fileKey).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val cacheKey = (indexDir, meta.n, meta.sumDl, filesFp)
     val dfCache = dfCaches.computeIfAbsent(
       cacheKey, _ => new java.util.concurrent.ConcurrentHashMap[String, Long]())
@@ -370,162 +330,6 @@ object SegmentSearch {
     (0 until nQueries).map { qid =>
       qid -> byQ.getOrElse(qid, Array.empty[RankedHit]).sortBy(_.rank).map(h => (h.docId, h.score)).toSeq
     }.toMap
-  }
-
-  /** Distributed PHRASE batch over on-disk segments — the batch scale path
-    * of the phrase extension (SURVEY §2.12). Per segment task: enumerate the
-    * FULL AND intersection of the phrase's terms (unbounded k — adjacency
-    * filtering must precede truncation for exact top-k), then verify
-    * adjacency against the segment's sibling doc sidecar (positional reads,
-    * executor-locally cached, 20 B/doc pinned) and emit only verified hits.
-    * Zero shuffle on the search side; the only exchange is the
-    * nQueries-group distributed merge — identical to `searchBatch`.
-    */
-  def phraseBatch(
-      spark: SparkSession,
-      indexDir: String,
-      phrases: Seq[String],
-      k: Int
-  ): Map[Int, Seq[(Long, Double)]] = {
-    val meta = SegmentIndex.readMeta(indexDir)
-    DocSidecar.ensure(spark, indexDir) // idempotent; sidecars are derived data
-    val files = SegmentIndex.liveSegmentFiles(indexDir, meta)
-    val parsed: Seq[(Int, IndexedSeq[String])] =
-      phrases.zipWithIndex.map { case (p, i) => (i, Tokenizer.tokenize(p).toIndexedSeq) }
-    val avgdl = meta.avgdl
-
-    import spark.implicits._
-    val fileDs = segmentFileDs(spark, files)
-
-    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, parsed.flatMap(_._2).distinct)
-    val bc = spark.sparkContext.broadcast((parsed, idfs))
-
-    val hits = fileDs
-      .mapPartitions { paths =>
-        val (qs, idfMap) = bc.value
-        paths.flatMap { p =>
-          val seg = loadCached(p)
-          // sibling sidecar: swap only the FILENAME prefix (a dir component
-          // containing "segment-" must not be rewritten)
-          lazy val sidecar = loadCachedSidecar {
-            val sp = java.nio.file.Paths.get(p)
-            sp.resolveSibling(sp.getFileName.toString.replace("segment-", "docs-")).toString
-          }
-          qs.iterator.flatMap { case (qid, terms) =>
-            if (terms.isEmpty) Iterator.empty
-            else {
-              val pq = ParsedQuery(terms, Nil, isOr = false)
-              val raw = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
-              // verify IN SEGMENT-RANK ORDER with early exit at k verified:
-              // any global top-k phrase hit living in this segment is among
-              // the segment's first k verified hits, so the merge stays
-              // exact while text reads drop from O(candidates) to ~k per
-              // segment for selective phrases
-              Bm25.sortHits(raw.map(h => (h.docId, h.score))).iterator
-                .filter { case (d, _) => sidecar.get(d).exists(r => Phrase.containsPhrase(r.text, terms)) }
-                .take(if (k == Int.MaxValue) Int.MaxValue else math.max(1, k))
-                .map { case (d, s) => QueryHit(qid, d, s) }
-            }
-          }
-        }
-      }(Encoders.product[QueryHit])
-
-    mergeDistributed(hits, phrases.size, k)
-  }
-
-  /** Distributed prefix suggestions over on-disk segments — EXTENSION
-    * (deferred Phase 9 "autocomplete"), the batch twin of
-    * `ServingEngine.suggest`. Per segment task: scan the (pinned, vocab-sized)
-    * dictionary for prefix matches and emit (term, LOCAL df); global df = sum
-    * over segments (the Lucene model), aggregated with map-side combine —
-    * the only shuffled rows are per-(segment, matching-term) partials, and
-    * the top-k runs as TakeOrderedAndProject (no global sort, the driver
-    * receives k rows).
-    */
-  def suggestBatch(
-      spark: SparkSession,
-      indexDir: String,
-      prefix: String,
-      k: Int
-  ): Seq[(String, Long)] = {
-    val norm = Tokenizer.tokenize(prefix)
-    if (norm.size != 1) return Nil
-    val p = norm.head
-    val files = SegmentIndex.liveSegmentFiles(indexDir)
-    import spark.implicits._
-    segmentFileDs(spark, files)
-      .mapPartitions { paths =>
-        paths.flatMap { f =>
-          loadCached(f).terms.iterator.collect {
-            case (t, td) if t.startsWith(p) => (t, td.df)
-          }
-        }
-      }(Encoders.product[(String, Long)])
-      .toDF("term", "df")
-      .groupBy("term")
-      .agg(org.apache.spark.sql.functions.sum("df").as("df"))
-      .orderBy(org.apache.spark.sql.functions.col("df").desc,
-               org.apache.spark.sql.functions.col("term").asc)
-      .limit(k)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .toSeq
-  }
-
-  /** Distributed metadata-filtered batch search — EXTENSION (deferred Phase 9
-    * "filters"), the batch twin of `ServingEngine.searchFiltered`. Per
-    * segment task: full enumeration (k unbounded — the filter must precede
-    * truncation for exact top-k), then the metadata predicate is verified
-    * against the segment's sibling doc sidecar IN RANK ORDER with early exit
-    * at k accepted (exact per segment because the filter only filters; the
-    * cross-segment merge stays exact because any global top-k survivor in
-    * this segment is among its first k survivors). Identical shape to
-    * `phraseBatch` with a metadata predicate instead of adjacency.
-    */
-  def searchFilteredBatch(
-      spark: SparkSession,
-      indexDir: String,
-      queries: Seq[String],
-      k: Int,
-      lang: Option[String],
-      source: Option[String]
-  ): Map[Int, Seq[(Long, Double)]] = {
-    val meta = SegmentIndex.readMeta(indexDir)
-    DocSidecar.ensure(spark, indexDir)
-    val files = SegmentIndex.liveSegmentFiles(indexDir, meta)
-    val parsed: Seq[(Int, ParsedQuery)] =
-      queries.zipWithIndex.map { case (q, i) => (i, QueryParser.parse(q)) }
-    val avgdl = meta.avgdl
-
-    import spark.implicits._
-    val fileDs = segmentFileDs(spark, files)
-
-    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, parsed.flatMap(_._2.terms).distinct)
-    val bc = spark.sparkContext.broadcast((parsed, idfs, lang, source))
-
-    val hits = fileDs
-      .mapPartitions { paths =>
-        val (qs, idfMap, wantLang, wantSource) = bc.value
-        paths.flatMap { p =>
-          val seg = loadCached(p)
-          lazy val sidecar = loadCachedSidecar {
-            val sp = java.nio.file.Paths.get(p)
-            sp.resolveSibling(sp.getFileName.toString.replace("segment-", "docs-")).toString
-          }
-          def accept(d: Long): Boolean = sidecar.get(d).exists { r =>
-            wantLang.forall(_ == r.lang) && wantSource.forall(_ == r.source)
-          }
-          qs.iterator.flatMap { case (qid, pq) =>
-            val raw = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
-            Bm25.sortHits(raw.map(h => (h.docId, h.score))).iterator
-              .filter { case (d, _) => accept(d) }
-              .take(if (k == Int.MaxValue) Int.MaxValue else math.max(1, k))
-              .map { case (d, s) => QueryHit(qid, d, s) }
-          }
-        }
-      }(Encoders.product[QueryHit])
-
-    mergeDistributed(hits, queries.size, k)
   }
 
   /** Same batch contract served from pre-loaded in-memory segments (no Spark
@@ -591,7 +395,6 @@ object SegmentSearch {
   final class ServingEngine(
       val segments: IndexedSeq[LoadedSegment],
       val meta: SegmentIndex.Meta,
-      parallelSegments: Boolean = true,
       // deletion-index depth for the fuzzy family: 1 (default) answers
       // maxDist=1 without a vocab scan; 2 (opt-in per generation — r6,
       // VERDICT r5 #5 — ~5-6x the depth-1 index memory) extends that to
@@ -674,6 +477,31 @@ object SegmentSearch {
         if (df > 0) Bm25.idf(meta.n, df) else Double.NaN // NaN marks absent
       })
 
+    private def dfOf(t: String): Long = segments.iterator.flatMap(_.terms.get(t)).map(_.df).sum
+
+    /** The serving tier's evaluator: the exact top-k of `q` under the
+      * reference comparator. A query with no row check (see
+      * `Query.verifier`) runs top-k WAND; a phrase or a filtered query
+      * verifies its full ranking in rank order against `docs` (see
+      * `searchFiltered`). `maxTerms` caps an expansion to its byte-lex-first
+      * matches — a latency guard for degenerate patterns; the default is
+      * UNCAPPED so this tier scores the exact term set the dataflow twin does
+      * (a cap makes results diverge on large vocabularies).
+      */
+    def evaluate(
+        q: Query,
+        k: Int,
+        docs: Long => Option[DocSidecar.DocRow],
+        filter: Option[Query.Filter] = None,
+        maxTerms: Int = Int.MaxValue,
+        maxVerify: Int = 100000): Seq[(Long, Double)] = {
+      val pq = Query.scored(q, expand(_, maxTerms))
+      Query.verifier(q, filter) match {
+        case None => search(pq, k)
+        case Some(ok) => searchFiltered(pq, k, id => docs(id).exists(ok), maxVerify)
+      }
+    }
+
     /** Ranked top-k (reference epsilon comparator) for one query. */
     def search(query: String, k: Int): Seq[(Long, Double)] =
       search(QueryParser.parse(query), k)
@@ -687,7 +515,7 @@ object SegmentSearch {
           .toMap
         val shared = new Wand.SharedTheta // cross-segment pruning for this request
         val raw =
-          if (parallelSegments && segments.length > 1 && load <= parThreshold)
+          if (segments.length > 1 && load <= parThreshold)
             segments.par.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared)).seq
           else
             segments.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared))
@@ -695,155 +523,119 @@ object SegmentSearch {
       } finally inFlight.decrementAndGet()
     }
 
-    /** Prefix term suggestions — EXTENSION (the reference's deferred Phase 9
-      * "autocomplete"): top-k dictionary terms for a prefix, ranked by GLOBAL
-      * df (sum of per-segment local dfs — the same Lucene-model summation as
-      * scoring) desc, then term asc. Round 5: rides the sorted-vocabulary
-      * range scan (the in-memory twin of the sorted v5 footer) —
-      * O(log V + |matches| x segments) per request, never O(V).
-      */
-    def suggest(prefix: String, k: Int): Seq[(String, Long)] = {
-      val norm = Tokenizer.tokenize(prefix)
-      if (norm.size != 1) return Nil
-      // range scan gives the matches; df = Σ per-segment local dfs via hash
-      // gets — O(log V + |matches| x segments), never O(V)
-      prefixRange(norm.head)
-        .map(t => t -> segments.iterator.flatMap(_.terms.get(t)).map(_.df).sum)
-        .sortBy { case (t, df) => (-df, t) }
-        .take(k)
-    }
-
-    /** Metadata-filtered top-k — EXTENSION (the reference's deferred Phase 9
-      * "filters"). The filter only RESTRICTS candidates (scores are global-idf
-      * BM25, unchanged), so the exact filtered top-k is obtained by ranking
-      * the FULL enumeration and verifying the predicate IN RANK ORDER with
-      * early exit at k accepted — the same argument (and code) as
-      * `searchPhrase`'s adjacency verification. `pred` typically reads the
-      * doc sidecar (source/lang travel on the 3-field sidecar row).
+    /** Filtered top-k: the filter only RESTRICTS candidates (scores are
+      * global-idf BM25, unchanged), so the exact filtered top-k is obtained
+      * by ranking the FULL enumeration and verifying `pred` IN RANK ORDER
+      * with early exit at k accepted — expected sidecar reads ≈ k /
+      * selectivity instead of O(all candidates). Score pruning cannot apply
+      * before the check without losing exactness. `maxVerify` hard-bounds
+      * the checked candidates: a never-matching predicate on a frequent-term
+      * query (a phrase that never occurs adjacently) returns best-effort-
+      * truncated results instead of becoming a full-corpus sidecar scan from
+      * one cheap HTTP request.
       */
     def searchFiltered(
         pq: ParsedQuery,
         k: Int,
         pred: Long => Boolean,
         maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val ranked = search(pq, Int.MaxValue)
-      verifyInRankOrder(ranked, k, pred, maxVerify)
-    }
-
-    /** Metadata-filtered prefix search — the prefix expansion scored OR-mode
-      * with the Phase-9 filter verified in rank order (see `searchFiltered`).
-      */
-    def searchPrefixFiltered(
-        prefix: String,
-        k: Int,
-        pred: Long => Boolean,
-        maxTerms: Int = Int.MaxValue,
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val expanded = expandPrefix(prefix, maxTerms)
-      if (expanded.isEmpty) Nil
-      else searchFiltered(ParsedQuery(expanded, Nil, isOr = true), k, pred, maxVerify)
-    }
-
-    /** Wildcard + metadata filter: glob expansion composed through the same
-      * bounded rank-order verification as prefix.
-      */
-    def searchWildcardFiltered(
-        pattern: String,
-        k: Int,
-        pred: Long => Boolean,
-        maxTerms: Int = Int.MaxValue,
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val expanded = expandWildcard(pattern, maxTerms)
-      if (expanded.isEmpty) Nil
-      else searchFiltered(ParsedQuery(expanded, Nil, isOr = true), k, pred, maxVerify)
-    }
-
-    /** Prefix top-k over segments — EXTENSION (same deferred wildcard phase
-      * as phrases; SURVEY §2.12). Expands the prefix against each segment's
-      * in-memory term dictionary, then scores the union OR-mode in byte-lex
-      * term order (matching `SearchEngine.prefixScoredDF`). Round 5: the
-      * expansion is a binary search + range walk over the lazily-built
-      * sorted global vocabulary (the in-memory twin of the sorted v5
-      * dictionary footer) — O(log V + |matches|), never O(V) per request.
-      * Default UNCAPPED so this tier scores the
-      * exact term set the dataflow twin does (tier parity is the oracle
-      * contract); pass `maxTerms` as an opt-in latency guard for degenerate
-      * one-letter prefixes — note a cap makes results diverge from the
-      * dataflow tier on large vocabularies.
-      */
-    def searchPrefix(prefix: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] = {
-      val expanded = expandPrefix(prefix, maxTerms)
-      if (expanded.isEmpty) Nil
-      else search(ParsedQuery(expanded, Nil, isOr = true), k)
-    }
-
-    /** General wildcard (`*bar`, `foo*bar`) — prefix generalized; expands
-      * per-segment dictionaries through the compiled glob
-      * ([[graft.core.Glob.matches]], identical term set to the dataflow
-      * tier's pushed-down LIKE) and scores the union OR-mode in byte-lex
-      * order. A literal leading chunk bounds the walk to its sorted-vocab
-      * range; a leading `*` walks the (one, global, sorted) vocabulary.
-      */
-    def searchWildcard(pattern: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] = {
-      val expanded = expandWildcard(pattern, maxTerms)
-      if (expanded.isEmpty) Nil
-      else search(ParsedQuery(expanded, Nil, isOr = true), k)
-    }
-
-    private def expandWildcard(pattern: String, maxTerms: Int): Seq[String] =
-      graft.core.Glob.normalize(pattern) match {
-        case None => Nil
-        case Some(g) =>
-          // a literal leading chunk bounds the scan to its dictionary range
-          // (`foo*bar` walks only foo*); a leading '*' with a literal TAIL
-          // (`*bar`) range-scans the REVERSED dictionary (r6) — matches are
-          // re-sorted byte-lex so the capped set and score order are
-          // identical to the forward walk; only an unanchored pattern
-          // (`*a*`) still walks the whole (one, global, sorted) vocab
-          val lit = g.takeWhile(_ != '*')
-          if (lit.nonEmpty)
-            prefixRange(lit).iterator
-              .filter(graft.core.Glob.matches(g, _)).take(maxTerms).toSeq
-          else {
-            val tail = g.reverse.takeWhile(_ != '*').reverse
-            if (tail.nonEmpty)
-              suffixRange(tail.reverse)
-                .filter(graft.core.Glob.matches(g, _))
-                .sorted.take(maxTerms)
-            else
-              sortedVocab.iterator
-                .filter(graft.core.Glob.matches(g, _)).take(maxTerms).toSeq
-          }
+      val kk = math.max(1, k)
+      val out = Seq.newBuilder[(Long, Double)]
+      var found = 0
+      var checked = 0
+      val it = search(pq, Int.MaxValue).iterator
+      while (found < kk && checked < maxVerify && it.hasNext) {
+        val hit = it.next()
+        checked += 1
+        if (pred(hit._1)) {
+          out += hit
+          found += 1
+        }
       }
-
-    /** Typo-tolerant top-k over segments — EXTENSION (the reference's own
-      * competitive-gap row, COMMERCIAL_ROADMAP.md:31). Expands the term
-      * against each segment's in-memory dictionary at Levenshtein <=
-      * `maxDist` (banded DP, length pre-check — `graft.core.EditDistance`,
-      * DuckDB `levenshtein` semantics), then scores the union OR-mode in
-      * byte-lex term order — exactly `searchPrefix`'s discipline. Round 5:
-      * maxDist=1 (the default) rides the precomputed SymSpell deletion
-      * neighborhood (O(|term|) probes per request); round 6: a generation
-      * built with `symspellDepth = 2` extends that to maxDist=2
-      * (O(|term|^2) probes); radii past the built depth fall back to the
-      * dictionary scan.
-      */
-    def searchFuzzy(term: String, k: Int, maxDist: Int = 1, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] = {
-      val expanded = expandFuzzy(term, maxDist, maxTerms)
-      if (expanded.isEmpty) Nil
-      else search(ParsedQuery(expanded, Nil, isOr = true), k)
+      out.result()
     }
+
+    /** Phrase-adjacent top-k — EXTENSION (the reference's deferred phrase
+      * phase; see `graft.core.Phrase` and SURVEY §2.12): the AND of the
+      * phrase's terms, adjacency verified against `textOf` in rank order.
+      */
+    def searchPhrase(
+        phrase: String,
+        k: Int,
+        textOf: Long => Option[String],
+        maxVerify: Int = 100000): Seq[(Long, Double)] =
+      evaluate(Query.parse("phrase", phrase), k,
+        id => textOf(id).map(DocSidecar.DocRow(_, "", "")), maxVerify = maxVerify)
+
+    /** Prefix top-k — EXTENSION (SURVEY §2.12): the prefix's dictionary
+      * range scored OR-mode in byte-lex term order (`SearchEngine.prefixScoredDF`).
+      */
+    def searchPrefix(prefix: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] =
+      evaluate(Query.parse("prefix", prefix), k, NoDocs, maxTerms = maxTerms)
+
+    /** General wildcard (`*bar`, `foo*bar`) top-k: the glob's dictionary
+      * matches scored OR-mode in byte-lex order (`SearchEngine.wildcardScoredDF`).
+      */
+    def searchWildcard(pattern: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] =
+      evaluate(Query.parse("wildcard", pattern), k, NoDocs, maxTerms = maxTerms)
+
+    /** Typo-tolerant top-k — EXTENSION (the reference's own competitive-gap
+      * row, COMMERCIAL_ROADMAP.md:31): the term's Levenshtein <= `maxDist`
+      * neighbors scored OR-mode in byte-lex order (`SearchEngine.fuzzyScoredDF`).
+      */
+    def searchFuzzy(term: String, k: Int, maxDist: Int = 1, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] =
+      evaluate(Query.fuzzy(term, maxDist), k, NoDocs, maxTerms = maxTerms)
+
+    /** The dictionary terms `e` matches, byte-lex ascending, the first
+      * `maxTerms` of them. Every path rides a lazily-built per-generation
+      * structure instead of an O(V) walk per request where one exists:
+      *   - prefix: binary search + range walk over the sorted vocabulary —
+      *     O(log V + |matches|);
+      *   - wildcard: a literal leading chunk bounds the walk to its sorted
+      *     range (`foo*bar` walks only foo*); a leading `*` with a literal
+      *     tail (`*bar`) range-scans the REVERSED dictionary (r6), re-sorted
+      *     byte-lex so the capped set is the forward walk's; only an
+      *     unanchored pattern (`*a*`) walks the whole sorted vocabulary;
+      *   - fuzzy: maxDist <= `symspellDepth` probes the SymSpell deletion
+      *     neighborhood (O(|term|^depth)); larger radii scan the segment
+      *     dictionaries.
+      */
+    private def expand(e: Query.Expansion, maxTerms: Int): Seq[String] = e match {
+      case Query.Prefix(p) => prefixRange(p).take(maxTerms)
+      case Query.Wildcard(g) =>
+        val lit = g.takeWhile(_ != '*')
+        val tail = g.reverse.takeWhile(_ != '*').reverse
+        if (lit.nonEmpty) prefixRange(lit).iterator.filter(e.matches).take(maxTerms).toSeq
+        else if (tail.nonEmpty) suffixRange(tail.reverse).filter(e.matches).sorted.take(maxTerms)
+        else sortedVocab.iterator.filter(e.matches).take(maxTerms).toSeq
+      case Query.Fuzzy(t, d) =>
+        if (d <= symspellDepth) symspell.neighbors(t, d).take(maxTerms)
+        else segments.iterator.flatMap(_.terms.keysIterator.filter(e.matches))
+          .toSeq.distinct.sorted.take(maxTerms)
+    }
+
+    /** Prefix term suggestions — EXTENSION (the reference's deferred Phase 9
+      * "autocomplete"): top-k dictionary terms for a prefix, ranked by GLOBAL
+      * df (sum of per-segment local dfs — the same Lucene-model summation as
+      * scoring) desc, then term asc. Rides the sorted-vocabulary range scan:
+      * O(log V + |matches| x segments) per request, never O(V).
+      */
+    def suggest(prefix: String, k: Int): Seq[(String, Long)] =
+      Query.parse("prefix", prefix) match {
+        case Query.Expand(e) =>
+          expand(e, Int.MaxValue).map(t => t -> dfOf(t)).sortBy { case (t, df) => (-df, t) }.take(k)
+        case _ => Nil
+      }
 
     /** Serving twin of `SearchEngine.didYouMeanDF` — same pick rule (exact
       * presence wins; else highest GLOBAL df within Levenshtein <= maxDist,
       * ties byte-lex; else the term itself with df 0). Global df = Σ of the
       * segments' local dfs, so the answer is bit-identical to the dataflow
-      * tier's. One dictionary scan per request (the searchFuzzy note).
+      * tier's.
       */
     def didYouMean(query: String, maxDist: Int = 1): Seq[(Long, String, String, Long)] = {
       val terms = QueryParser.parse(query).terms
       if (terms.isEmpty) return Nil
-      def dfOf(c: String): Long = segments.iterator.flatMap(_.terms.get(c)).map(_.df).sum
       if (maxDist <= symspellDepth) {
         // SymSpell path: per term, O(|t|^depth) probes + a verified candidate
         // set whose dfs are summed with per-segment hash gets — nothing here
@@ -855,58 +647,19 @@ object SegmentSearch {
         }
       } else {
         // fallback scan for radii the deletion index does not cover
-        val tset = terms.distinct
+        val radii = terms.distinct.map(Query.Fuzzy(_, maxDist))
         val dfs = scala.collection.mutable.HashMap[String, Long]()
         segments.foreach { seg =>
           seg.terms.foreach { case (cand, td) =>
-            if (tset.exists(t =>
-              math.abs(cand.length - t.length) <= maxDist &&
-                graft.core.EditDistance.within(cand, t, maxDist)))
-              dfs.update(cand, dfs.getOrElse(cand, 0L) + td.df)
+            if (radii.exists(_.matches(cand))) dfs.update(cand, dfs.getOrElse(cand, 0L) + td.df)
           }
         }
         terms.zipWithIndex.map { case (t, i) =>
-          val pick = SegmentSearch.pickSuggestion(t,
-            dfs.view.filter { case (cand, _) => graft.core.EditDistance.within(cand, t, maxDist) })
+          val near = Query.Fuzzy(t, maxDist)
+          val pick = pickSuggestion(t, dfs.view.filter { case (cand, _) => near.matches(cand) })
           (i + 1L, t, pick._1, pick._2)
         }
       }
-    }
-
-    /** Metadata-filtered fuzzy search — the expansion scored OR-mode with the
-      * Phase-9 filter verified in rank order (see `searchFiltered`).
-      */
-    def searchFuzzyFiltered(
-        term: String,
-        k: Int,
-        pred: Long => Boolean,
-        maxDist: Int = 1,
-        maxTerms: Int = Int.MaxValue,
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val expanded = expandFuzzy(term, maxDist, maxTerms)
-      if (expanded.isEmpty) Nil
-      else searchFiltered(ParsedQuery(expanded, Nil, isOr = true), k, pred, maxVerify)
-    }
-
-    private def expandFuzzy(term: String, maxDist: Int, maxTerms: Int): Seq[String] = {
-      val norm = Tokenizer.tokenize(term)
-      if (norm.size != 1) return Nil
-      val t = norm.head
-      val all =
-        if (maxDist <= symspellDepth) symspell.neighbors(t, maxDist) // probes, not O(vocab)
-        else // fallback: radii past the built deletion depth scan
-          segments.iterator
-            .flatMap(_.terms.keysIterator.filter(c =>
-              graft.core.EditDistance.within(c, t, maxDist)))
-            .toSeq.distinct.sorted
-      all.take(maxTerms)
-    }
-
-    private def expandPrefix(prefix: String, maxTerms: Int): Seq[String] = {
-      val norm = Tokenizer.tokenize(prefix)
-      if (norm.size != 1) return Nil
-      // sorted-vocab range scan (already byte-lex ascending and distinct)
-      prefixRange(norm.head).take(maxTerms)
     }
 
     /** Learning-to-rank re-rank — EXTENSION (the roadmap's optional Phase 10
@@ -952,74 +705,6 @@ object SegmentSearch {
         }
         .sortBy { case (id, r) => (-r, id) }
         .take(k)
-    }
-
-    /** Phrase-adjacent top-k over segments — EXTENSION (the reference's
-      * deferred phrase phase; see `graft.core.Phrase` and SURVEY §2.12).
-      *
-      * Stage 1 enumerates the FULL AND intersection (k unbounded, no theta —
-      * posting-level work only, the same cost as a plain AND query; score
-      * pruning cannot apply before the adjacency filter without losing
-      * exactness). Stage 2 ranks the candidates with the reference epsilon
-      * comparator FIRST, then verifies adjacency IN RANK ORDER with early
-      * exit: because the phrase only FILTERS (scores are the BM25 AND
-      * scores), the first k candidates that pass verification ARE the exact
-      * phrase top-k — expected sidecar text reads ≈ k / selectivity instead
-      * of O(all candidates). `maxVerify` hard-bounds the pathological case
-      * (a frequent-term phrase that never occurs adjacently): past the cap
-      * the result is best-effort-truncated instead of an accidental-DoS
-      * full-corpus text scan from one cheap HTTP request.
-      */
-    def searchPhrase(
-        phrase: String,
-        k: Int,
-        textOf: Long => Option[String],
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val terms = Tokenizer.tokenize(phrase).toIndexedSeq
-      if (terms.isEmpty) return Nil
-      val pq = ParsedQuery(terms, Nil, isOr = false)
-      val load = inFlight.incrementAndGet()
-      try {
-        val idfs = terms.distinct
-          .flatMap { t => val v = idfOf(t); if (v.isNaN) None else Some(t -> v) }
-          .toMap
-        if (idfs.size < terms.distinct.size) return Nil // AND with a 0-df term
-        val raw =
-          if (parallelSegments && segments.length > 1 && load <= parThreshold)
-            segments.par.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, Int.MaxValue)).seq
-          else
-            segments.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, Int.MaxValue))
-        val ranked = Bm25.sortHits(raw.map(h => (h.docId, h.score)))
-        verifyInRankOrder(ranked, k,
-          id => textOf(id).exists(t => Phrase.containsPhrase(t, terms)), maxVerify)
-      } finally inFlight.decrementAndGet()
-    }
-
-    /** Accept ranked hits passing `pred` IN RANK ORDER, early-exiting at k
-      * accepted (exact when the predicate only filters — the k first
-      * survivors ARE the filtered top-k) and hard-bounded by `maxVerify`
-      * checked candidates (a never-matching predicate on a frequent-term
-      * query must not become a full-corpus sidecar scan from one request).
-      */
-    private def verifyInRankOrder(
-        ranked: Seq[(Long, Double)],
-        k: Int,
-        pred: Long => Boolean,
-        maxVerify: Int): Seq[(Long, Double)] = {
-      val kk = math.max(1, k)
-      val out = Seq.newBuilder[(Long, Double)]
-      var found = 0
-      var checked = 0
-      val it = ranked.iterator
-      while (found < kk && checked < maxVerify && it.hasNext) {
-        val hit = it.next()
-        checked += 1
-        if (pred(hit._1)) {
-          out += hit
-          found += 1
-        }
-      }
-      out.result()
     }
   }
 

@@ -82,7 +82,8 @@ class PhraseSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-phrase-batch").toString
     SegmentIndex.build(docs, dir, buckets = 2)
 
-    val got = SegmentSearch.phraseBatch(spark, dir, Seq("red green blue", "green red", "zzz"), 10)
+    val got = SegmentSearch.evaluate(spark, dir,
+      Seq("red green blue", "green red", "zzz").map(Query.parse("phrase", _)), 10)
     assert(got(0).map(_._1).toSet == Set(1L, 4L))
     assert(got(1).map(_._1) == Seq(2L))
     assert(got(2).isEmpty)

@@ -1,0 +1,145 @@
+package graft.search
+
+import java.net.{HttpURLConnection, URL, URLEncoder}
+import java.nio.file.Files
+
+import graft.SparkTestBase
+import graft.app.SearchServer
+import graft.core.Bm25
+import graft.index.{IndexBuilder, SegmentIndex}
+
+/** Table-driven parity of every query family × filter × tier against one
+  * definition of the answer: the dataflow `SearchEngine`'s full ranking
+  * (the oracle twin), filtered by the predicate, then cut to k. The filter
+  * only restricts candidates, so that is the exact filtered top-k.
+  *
+  * Families: q (the reference language), phrase, prefix, wildcard, fuzzy.
+  * Filters: none, `lang=en`. Tiers: the serving evaluator
+  * (`ServingEngine.evaluate`), the batch evaluator (`SegmentSearch.evaluate`)
+  * and HTTP `/search`.
+  *
+  * Corpus: a seeded multi-segment index whose dense terms carry more than
+  * 128 postings per segment (posting lists span several blocks, so WAND's
+  * block-max skipping is live) and whose docs come in exact replicas (equal
+  * scores — epsilon ties straddle the k cut). Replicas differ in `lang`, so a
+  * filter splits tie groups.
+  */
+class QueryParitySpec extends SparkTestBase {
+
+  private val K = 5 // above the replica count: a tie group straddles the cut
+  private val Replicas = 4
+  private val Langs = Seq("en", "de", "fr")
+  private val Words = Seq("scan", "scale", "scalar", "sort", "merge", "merger", "order", "filter",
+    "hash", "hashed", "join", "joiner", "table", "row", "rows", "data", "date", "stream")
+
+  /** (doc_id, text, source, lang): 300 seeded base texts x 4 exact replicas. */
+  private lazy val docs: Seq[(Long, String, String, String)] = {
+    val rnd = new scala.util.Random(7)
+    val bases = (0 until 300).map { _ =>
+      (0 until 6 + rnd.nextInt(30)).map(_ => Words(rnd.nextInt(Words.size))).mkString(" ")
+    }
+    for {
+      rep <- 0 until Replicas
+      (text, i) <- bases.zipWithIndex
+    } yield (rep * 1000L + i, text, s"src${i % 5}", Langs((i + rep) % Langs.size))
+  }
+  private lazy val langOf: Map[Long, String] = docs.map(d => d._1 -> d._4).toMap
+
+  private lazy val docsFrame = {
+    val sp = spark
+    import sp.implicits._
+    docs.toDF("doc_id", "text", "source", "lang")
+  }
+  private lazy val oracle = new SearchEngine(IndexBuilder.build(docsFrame).cache())
+  private lazy val dir: String = {
+    val d = Files.createTempDirectory("graft-parity").toString
+    SegmentIndex.build(docsFrame, d, buckets = 3)
+    d
+  }
+  private var started: Option[SearchServer.Running] = None
+  private def server: SearchServer.Running = started.getOrElse {
+    val s = SearchServer.start(SearchServer.loadState(dir), 0)
+    started = Some(s)
+    s
+  }
+
+  override def afterAll(): Unit = {
+    try started.foreach(_.stop()) finally super.afterAll()
+  }
+
+  private val Queries: Seq[(String, Seq[String])] = Seq(
+    "q" -> Seq("scan merge", "hash OR join -filter", "table row data", "zzzz"),
+    "phrase" -> Seq("scan merge", "hash join table", "rows data"),
+    "prefix" -> Seq("sca", "ro", "zz"),
+    "wildcard" -> Seq("*er", "s*e", "*a*"),
+    "fuzzy" -> Seq("dat", "rowz", "hasx"))
+  private val Filters: Seq[(String, Option[String])] = Seq("none" -> None, "lang=en" -> Some("en"))
+
+  private def ranked(family: String, raw: String): IndexedSeq[(Long, Double)] = {
+    val scored = family match {
+      case "q" => oracle.scoredDF(raw)
+      case "phrase" => oracle.phraseScoredDF(raw)
+      case "prefix" => oracle.prefixScoredDF(raw)
+      case "wildcard" => oracle.wildcardScoredDF(raw)
+      case "fuzzy" => oracle.fuzzyScoredDF(raw)
+    }
+    Bm25.sortHits(scored.collect()
+      .map(r => (r.getLong(r.fieldIndex("doc_id")), r.getDouble(r.fieldIndex("score")))).toIndexedSeq)
+  }
+
+  private def expected(family: String, raw: String, lang: Option[String]): Seq[(Long, Double)] =
+    ranked(family, raw).filter { case (id, _) => lang.forall(_ == langOf(id)) }.take(K)
+
+  private def serving(family: String, raws: Seq[String], lang: Option[String]): Seq[Seq[(Long, Double)]] = {
+    val st = server.current
+    raws.map(raw => st.engine.evaluate(Query.parse(family, raw), K, st.docs, Query.Filter.of(lang, None)))
+  }
+
+  private def batch(family: String, raws: Seq[String], lang: Option[String]): Seq[Seq[(Long, Double)]] = {
+    val res = SegmentSearch.evaluate(spark, dir, raws.map(Query.parse(family, _)), K, Query.Filter.of(lang, None))
+    raws.indices.map(res)
+  }
+
+  private def http(family: String, raws: Seq[String], lang: Option[String]): Seq[Seq[(Long, Double)]] =
+    raws.map { raw =>
+      val url = s"http://127.0.0.1:${server.port}/search?$family=${URLEncoder.encode(raw, "UTF-8")}&k=$K" +
+        lang.fold("")(l => s"&lang=$l")
+      val conn = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
+      conn.setConnectTimeout(2000)
+      conn.setReadTimeout(10000)
+      assert(conn.getResponseCode == 200, url)
+      val body = try new String(conn.getInputStream.readAllBytes(), "UTF-8") finally conn.disconnect()
+      val ids = """"docId":(\d+)""".r.findAllMatchIn(body).map(_.group(1).toLong).toSeq
+      val scores = """"score":([-0-9.E]+)""".r.findAllMatchIn(body).map(_.group(1).toDouble).toSeq
+      ids.zip(scores)
+    }
+
+  private val Tiers: Seq[(String, (String, Seq[String], Option[String]) => Seq[Seq[(Long, Double)]])] =
+    Seq("serving" -> serving, "batch" -> batch, "http" -> http)
+
+  test("parity corpus: multi-block posting lists, several segments, replica ties") {
+    val meta = SegmentIndex.readMeta(dir)
+    val segs = SegmentIndex.liveSegmentFiles(dir, meta).map(SegmentIndex.loadSegment(_))
+    assert(segs.size == 3)
+    segs.foreach(seg => assert(seg.terms("scan").df > 128 && seg.terms("scan").blocks.size > 1))
+    // the k-th hit of a dense query ties with the (k+1)-th: an equal-score
+    // replica group straddles the cut
+    val all = ranked("q", "scan merge")
+    assert(all.size > K && all(K - 1)._2 == all(K)._2)
+  }
+
+  for {
+    (family, raws) <- Queries
+    (fname, lang) <- Filters
+    (tier, run) <- Tiers
+  } test(s"parity: $family, filter $fname, $tier") {
+    val want = raws.map(expected(family, _, lang))
+    assert(want.exists(_.nonEmpty), "vacuous row: no query has an answer")
+    run(family, raws, lang).zip(want).zip(raws).foreach { case ((got, exp), raw) =>
+      assert(got.map(_._1) == exp.map(_._1), s"$family '$raw' ($fname, $tier): docIds")
+      got.zip(exp).foreach { case ((_, a), (_, b)) =>
+        assert(math.abs(a - b) <= 1e-9, s"$family '$raw' ($fname, $tier): score $a vs $b")
+      }
+    }
+  }
+}

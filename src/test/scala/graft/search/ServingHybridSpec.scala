@@ -151,16 +151,4 @@ class ServingHybridSpec extends SparkTestBase {
     assert(eng.searchFuzzy("zzzzzz", 10).isEmpty)
     assert(eng.searchFuzzy("two words", 10).isEmpty)
   }
-
-  test("searchFuzzyFiltered composes the metadata predicate in rank order") {
-    val dir = Files.createTempDirectory("graft-serving-fuzzyf").toString
-    val eng = servingEngine(dir)
-    val meta = corpus.collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    val all = eng.searchFuzzy("hast", 10)
-    val en = eng.searchFuzzyFiltered("hast", 10, id => meta(id) == "en")
-    assert(en == all.filter { case (id, _) => meta(id) == "en" })
-    assert(en.nonEmpty && en.size < all.size)
-    // k truncation happens AFTER filtering
-    assert(eng.searchFuzzyFiltered("hast", 1, id => meta(id) == "en") == en.take(1))
-  }
 }

@@ -73,8 +73,8 @@ class SuggestFilterSpec extends SparkTestBase {
       eng.filteredScoredDF("scan merge", lang = Some("en")).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toIndexedSeq)
 
-    val batch = SegmentSearch.searchFilteredBatch(
-      spark, dir, Seq("scan merge"), 10, Some("en"), None)(0)
+    val batch = SegmentSearch.evaluate(
+      spark, dir, Seq(Query.parse("q", "scan merge")), 10, Query.Filter.of(Some("en"), None))(0)
     assert(batch == expect)
 
     val meta = SegmentIndex.readMeta(dir)

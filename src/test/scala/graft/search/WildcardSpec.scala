@@ -89,10 +89,6 @@ class WildcardSpec extends SparkTestBase {
       sv.zip(df).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) <= 1e-9, s"'$pat'") }
     }
 
-    // filtered compose: predicate intersects before truncation
-    val even = serving.searchWildcardFiltered("*er", 10, id => id % 2 == 0)
-    assert(even.nonEmpty && even.forall(_._1 % 2 == 0))
-    assert(even.map(_._1).toSet == serving.searchWildcard("*er", 10).filter(_._1 % 2 == 0).map(_._1).toSet)
   }
 
   test("batch tier == serving tier for the expanded family (prefix/wildcard/fuzzy)") {
@@ -102,18 +98,20 @@ class WildcardSpec extends SparkTestBase {
     val segs = graft.index.SegmentIndex.liveSegmentFiles(dir, meta)
       .map(graft.index.SegmentIndex.loadSegment(_)).toIndexedSeq
     val serving = new SegmentSearch.ServingEngine(segs, meta)
+    def batch(family: String, raw: String) =
+      SegmentSearch.evaluate(spark, dir, Seq(Query.parse(family, raw)), 10)(0)
     Seq("w*ter", "*er", "zz*zz").foreach { pat =>
-      assert(SegmentSearch.wildcardBatch(spark, dir, pat, 10) == serving.searchWildcard(pat, 10), pat)
+      assert(batch("wildcard", pat) == serving.searchWildcard(pat, 10), pat)
     }
     Seq("wat", "t", "zz").foreach { p =>
-      assert(SegmentSearch.prefixBatch(spark, dir, p, 10) == serving.searchPrefix(p, 10), p)
+      assert(batch("prefix", p) == serving.searchPrefix(p, 10), p)
     }
     Seq("watr", "tigr", "qqqq").foreach { t =>
-      assert(SegmentSearch.fuzzyBatch(spark, dir, t, 10) == serving.searchFuzzy(t, 10), t)
+      assert(batch("fuzzy", t) == serving.searchFuzzy(t, 10), t)
     }
     // multi-token / invalid inputs stay empty on the batch tier too
-    assert(SegmentSearch.prefixBatch(spark, dir, "a b", 10).isEmpty)
-    assert(SegmentSearch.wildcardBatch(spark, dir, "a b*", 10).isEmpty)
+    assert(batch("prefix", "a b").isEmpty)
+    assert(batch("wildcard", "a b*").isEmpty)
   }
 
   test("batch tier on a zero-segment index: empty results, no repartition(0) crash") {
@@ -121,9 +119,10 @@ class WildcardSpec extends SparkTestBase {
     graft.index.SegmentIndex.build(docsDF(Seq.empty), dir, buckets = 2)
     assert(graft.index.SegmentIndex.liveSegmentFiles(dir).isEmpty)
     assert(SegmentSearch.searchBatch(spark, dir, Seq("anything"), 5)(0).isEmpty)
-    assert(SegmentSearch.prefixBatch(spark, dir, "wat", 5).isEmpty)
-    assert(SegmentSearch.wildcardBatch(spark, dir, "w*t", 5).isEmpty)
-    assert(SegmentSearch.fuzzyBatch(spark, dir, "watr", 5).isEmpty)
+    Seq("prefix" -> "wat", "wildcard" -> "w*t", "fuzzy" -> "watr", "phrase" -> "water term").foreach {
+      case (family, raw) =>
+        assert(SegmentSearch.evaluate(spark, dir, Seq(Query.parse(family, raw)), 5)(0).isEmpty, family)
+    }
     // did-you-mean mirrors the serving tier: every term falls back to itself, df 0
     assert(SegmentSearch.didYouMeanBatch(spark, dir, "alpha beta") ==
       Seq((1L, "alpha", "alpha", 0L), (2L, "beta", "beta", 0L)))
