@@ -492,7 +492,7 @@ object SparkEntry {
       rankTopKLocal(s,
         eng.searchFiltered(
           graft.core.QueryParser.parse("table scan merge"), Int.MaxValue,
-          id => store.get(id).exists(_.lang == "en")),
+          id => { val m = store.meta(id); m != null && m.lang == "en" }),
         10)
     }),
     // --- synonym-expanded search (optional Phase 10 "synonyms"): OR within

@@ -26,8 +26,9 @@ import graft.search.{Query, SegmentSearch}
   * Serving memory model (SCALE-SAFE, unlike the reference's pin-everything):
   * segments are pinned (postings), but documents are decorated per request
   * from the positional-read doc sidecar (DocSidecar) — the server holds only
-  * the (docId -> offset) dictionaries plus a byte-capped LRU of hot docs, so
-  * heap is O(corpus doc count), not O(corpus text bytes).
+  * the (docId -> offset) dictionaries and each doc's interned filter fields,
+  * plus a byte-capped LRU of hot docs, so heap is O(corpus doc count), not
+  * O(corpus text bytes).
   *
   * Usage: SearchServer <indexDir> [port]   (port 0 = ephemeral)
   */
@@ -145,7 +146,7 @@ object SearchServer {
     */
   final class IndexState(
       val engine: SegmentSearch.ServingEngine,
-      val docs: Long => Option[DocRow],
+      val docs: DocSidecar.Docs,
       onClose: () => Unit = () => (),
       private[app] val segmentsByKey: Map[String, SegmentIndex.LoadedSegment] = Map.empty,
       private[app] val sidecarsByKey: Map[String, SharedReader] = Map.empty
@@ -311,6 +312,7 @@ object SearchServer {
           respond(ex, 200, "application/json", body)
         } finally st.release()
       } catch {
+        case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
         case e: Exception =>
           metrics.errors.increment()
           respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
@@ -345,6 +347,7 @@ object SearchServer {
           respond(ex, 200, "application/json", sb.toString)
         } finally st.release()
       } catch {
+        case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
         case e: Exception =>
           metrics.errors.increment()
           respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
@@ -380,6 +383,7 @@ object SearchServer {
           respond(ex, 200, "application/json", sb.toString)
         } finally st.release()
       } catch {
+        case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
         case e: Exception =>
           metrics.errors.increment()
           respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
@@ -481,8 +485,9 @@ object SearchServer {
           // picks the family; the reference contract (`q=` + QueryParser
           // semantics) is untouched. `lang=` / `source=` are ADDITIVE
           // metadata filters (deferred Phase 9 "filters"): they restrict
-          // candidates BEFORE truncation via rank-order verification against
-          // the sidecar row, for every family.
+          // candidates BEFORE truncation, checked against the sidecar row
+          // inside the top-k collector (a phrase: in rank order), for every
+          // family.
           val (family, q) = Query.Extensions.collectFirst { case f if params.contains(f) => f -> params(f) }
             .getOrElse("q" -> params.getOrElse("q", ""))
           val query = Query.parse(family, q)
@@ -529,7 +534,7 @@ object SearchServer {
       engine: SegmentSearch.ServingEngine,
       docs: Long => Option[DocRow],
       port: Int
-  ): Running = start(new IndexState(engine, docs), port, None)
+  ): Running = start(new IndexState(engine, DocSidecar.Docs(docs)), port, None)
 
   private[app] def respond(ex: HttpExchange, code: Int, ctype: String, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -543,13 +548,20 @@ object SearchServer {
     ex.close()
   }
 
+  /** A query string that does not decode (`%zz`): the client's error. The
+    * handlers answer 400 and do not count it in `errors`.
+    */
+  private[app] final class MalformedQuery(msg: String) extends RuntimeException(msg)
+
   private[app] def queryParams(ex: HttpExchange): Map[String, String] = {
     val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
+    def decode(s: String): String =
+      try java.net.URLDecoder.decode(s, "UTF-8")
+      catch { case e: IllegalArgumentException => throw new MalformedQuery(e.getMessage) }
     raw.split('&').filter(_.nonEmpty).flatMap { kv =>
       kv.split("=", 2) match {
-        case Array(k, v) =>
-          Some(java.net.URLDecoder.decode(k, "UTF-8") -> java.net.URLDecoder.decode(v, "UTF-8"))
-        case Array(k) => Some(java.net.URLDecoder.decode(k, "UTF-8") -> "")
+        case Array(k, v) => Some(decode(k) -> decode(v))
+        case Array(k) => Some(decode(k) -> "")
         case _ => None
       }
     }.toMap
@@ -639,7 +651,7 @@ object SearchServer {
     val store = new DocSidecar.DocStore(shares.map(_._2.reader).toIndexedSeq, 64L << 20)
     new IndexState(
       new SegmentSearch.ServingEngine(segs, meta),
-      store.get(_),
+      store,
       () => shares.foreach(_._2.release()),
       segEntries.toMap,
       shares.toMap)

@@ -8,7 +8,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.index.TenantCatalog
-import SearchServer.{respond, queryParams, searchBody, IndexState}
+import SearchServer.{respond, queryParams, searchBody, IndexState, MalformedQuery}
 
 /** Multi-tenant serving gateway over a [[TenantCatalog]] root — the serving
   * half of the reference's Phase 5 commercial fork ("Multi-tenancy: isolate
@@ -205,7 +205,7 @@ object TenantServer {
       }
     })
 
-    def presentedKey(ex: HttpExchange, params: Map[String, String]): Option[String] =
+    def presentedKey(ex: HttpExchange): Option[String] =
       Option(ex.getRequestHeaders.getFirst("X-Api-Key")) // header only — never a query param
 
     def respondTenants(ex: HttpExchange, visible: Seq[String]): Unit = {
@@ -229,7 +229,7 @@ object TenantServer {
         auth match {
           case None => respondTenants(ex, TenantCatalog.tenants(rootDir))
           case Some(reg) =>
-            reg.authenticate(presentedKey(ex, queryParams(ex))) match {
+            reg.authenticate(presentedKey(ex)) match {
               case None => respond(ex, 401, "text/plain", "missing or invalid API key")
               case Some(rec) =>
                 respondTenants(ex, TenantCatalog.tenants(rootDir).filter(_ == rec.tenant))
@@ -246,7 +246,7 @@ object TenantServer {
       try auth match {
         case None => respond(ex, 200, "application/json", "{\"usage\":{}}")
         case Some(reg) =>
-          reg.authenticate(presentedKey(ex, queryParams(ex))) match {
+          reg.authenticate(presentedKey(ex)) match {
             case None => respond(ex, 401, "text/plain", "missing or invalid API key")
             case Some(rec) if rec.role != "admin" =>
               respond(ex, 403, "text/plain", "admin key required")
@@ -288,6 +288,7 @@ object TenantServer {
           }
         }
       } catch {
+        case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
         case e: Exception =>
           respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
       }
@@ -321,6 +322,7 @@ object TenantServer {
           }
         }
       } catch {
+        case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
         case e: Exception =>
           respond(ex, 500, "text/plain", s"reload failed: ${e.getMessage}")
       }

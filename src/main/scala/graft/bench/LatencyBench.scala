@@ -84,7 +84,7 @@ object LatencyBench {
         } else {
           val store = DocSidecar.openStore(out).get
           httpServer = graft.app.SearchServer.start(
-            new graft.app.SearchServer.IndexState(engine, store.get(_), () => store.close()),
+            new graft.app.SearchServer.IndexState(engine, store, () => store.close()),
             port = 0, reloader = None)
           docMemNote = f"doc memory: sidecar dictionaries ${store.pinnedBytes / 1e6}%.1f MB pinned " +
             f"+ 64 MB LRU cap (vs ~${textBytes / 1e6}%.0f MB full-text pin in the reference model)"

@@ -14,15 +14,17 @@ import graft.index.BlockCodec
   * Args: [nLists] [postingsPerList] [rounds] (defaults 2000 1000 5).
   */
 object PforMicro {
-  def main(args: Array[String]): Unit = {
-    val nLists = if (args.length > 0) args(0).toInt else 2000
-    val perList = if (args.length > 1) args(1).toInt else 1000
-    val rounds = if (args.length > 2) args(2).toInt else 5
 
-    // deterministic synthetic posting lists: mixed gap widths (dense runs +
-    // occasional large jumps -> PFOR exceptions), small tfs, realistic dls
-    val rng = new java.util.Random(20260822L)
-    val lists = Array.fill(nLists) {
+  /** The instrument's corpus, fixed by `seed`: `nLists` posting lists of
+    * `perList` postings as (docIds, tfs, dls) — mixed gap widths (dense runs
+    * + occasional large jumps -> PFOR exceptions), small tfs, realistic dls.
+    */
+  def corpus(
+      nLists: Int = 2000,
+      perList: Int = 1000,
+      seed: Long = 20260822L): Array[(Array[Long], Array[Int], Array[Int])] = {
+    val rng = new java.util.Random(seed)
+    Array.fill(nLists) {
       val docIds = new Array[Long](perList)
       val tfs = new Array[Int](perList)
       val dls = new Array[Int](perList)
@@ -38,18 +40,29 @@ object PforMicro {
       }
       (docIds, tfs, dls)
     }
-    val totalPostings = nLists.toLong * perList
+  }
 
-    def digestOf(pfor: Boolean): String = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      lists.foreach { case (ds, ts, ls) =>
-        val blocks =
-          if (pfor) BlockCodec.encodeColumnarPfor(ds, ts, ls, perList)
-          else BlockCodec.encodeColumnar(ds, ts, ls, perList)
-        blocks.foreach(b => md.update(b.bytes))
-      }
-      md.digest().map("%02x".format(_)).mkString.take(16)
+  /** First 16 hex digits of the SHA-256 over the encoded bytes of `lists`
+    * (every list cut into `BlockCodec.BlockSize` blocks), PFOR or varint.
+    */
+  def digest(lists: Array[(Array[Long], Array[Int], Array[Int])], pfor: Boolean): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lists.foreach { case (ds, ts, ls) =>
+      val blocks =
+        if (pfor) BlockCodec.encodeColumnarPfor(ds, ts, ls, ds.length)
+        else BlockCodec.encodeColumnar(ds, ts, ls, ds.length)
+      blocks.foreach(b => md.update(b.bytes))
     }
+    md.digest().map("%02x".format(_)).mkString.take(16)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val nLists = if (args.length > 0) args(0).toInt else 2000
+    val perList = if (args.length > 1) args(1).toInt else 1000
+    val rounds = if (args.length > 2) args(2).toInt else 5
+
+    val lists = corpus(nLists, perList)
+    val totalPostings = nLists.toLong * perList
 
     def time(label: String)(f: => Long): Unit = {
       var best = Long.MaxValue
@@ -106,6 +119,6 @@ object PforMicro {
       val dp = bp.flatMap(b => { val d = BlockCodec.decodePrimitive(b); d.docIds.indices.map(i => (d.docIds(i), d.tfs(i), d.dls(i))) })
       require(dv == dp, "codec parity violation")
     }
-    println(s"[pfor-micro] parity ok; varint digest ${digestOf(pfor = false)}  pfor digest ${digestOf(pfor = true)}")
+    println(s"[pfor-micro] parity ok; varint digest ${digest(lists, pfor = false)}  pfor digest ${digest(lists, pfor = true)}")
   }
 }

@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   *
   *   magic | bucket | doc records... | dictionary | dictOffset (last 8 bytes)
   *
-  * A reader pins ONLY the dictionary — (docId, offset, len), 20 bytes per doc
-  * vs kilobytes of text — and serves each requested doc with one positional
-  * read (the docstore is doc_id-sorted per bucket, so ids binary-search).
-  * Decoded rows go through a bounded byte-capped LRU for hot docs.
+  * A reader pins the dictionary — (docId, offset, len), 20 bytes per doc
+  * vs kilobytes of text — and a reference per doc to its interned filter
+  * fields (`DocMeta`), nothing more. It serves each requested doc with one
+  * positional read (the docstore is doc_id-sorted per bucket, so ids
+  * binary-search). Decoded rows go through a bounded byte-capped LRU for hot
+  * docs; a metadata filter reads only the pinned fields, never a row.
   *
   * Sidecars are DERIVED data: generated lazily at server load when missing
   * (one column-pruned pass over the docstore parquet — off the build hot
@@ -27,7 +29,32 @@ import org.apache.spark.sql.functions._
   */
 object DocSidecar {
 
-  final case class DocRow(text: String, source: String, lang: String)
+  final case class DocRow(text: String, source: String, lang: String) {
+    def meta: DocMeta = DocMeta(source, lang)
+  }
+
+  /** A doc's filter fields: what a `lang=` / `source=` filter reads. */
+  final case class DocMeta(source: String, lang: String)
+
+  /** A serving generation's doc lookup: `apply` gives a doc's row (phrase
+    * adjacency, snippets), `meta` its filter fields (null when the doc is
+    * unknown).
+    */
+  trait Docs extends (Long => Option[DocRow]) {
+    def meta(docId: Long): DocMeta
+  }
+
+  object Docs {
+    /** Docs over a row function (an in-memory doc map): the filter fields
+      * come from the row.
+      */
+    def apply(rows: Long => Option[DocRow]): Docs = new Docs {
+      def apply(docId: Long): Option[DocRow] = rows(docId)
+      def meta(docId: Long): DocMeta = rows(docId).map(_.meta).orNull
+    }
+
+    val empty: Docs = Docs(_ => None)
+  }
 
   private val Magic = "GRFTDOC1".getBytes(StandardCharsets.US_ASCII)
 
@@ -156,7 +183,8 @@ object DocSidecar {
       ch: java.nio.channels.FileChannel,
       val docIds: Array[Long],
       offsets: Array[Long],
-      lens: Array[Int]
+      lens: Array[Int],
+      metas: Array[DocMeta]
   ) {
     def minDoc: Long = if (docIds.isEmpty) Long.MaxValue else docIds(0)
     def maxDoc: Long = if (docIds.isEmpty) Long.MinValue else docIds(docIds.length - 1)
@@ -175,6 +203,12 @@ object DocSidecar {
       Some(DocRow(readStr(buf), readStr(buf), readStr(buf)))
     }
 
+    /** The doc's pinned filter fields; null when it is not in this bucket. */
+    def meta(docId: Long): DocMeta = {
+      val i = java.util.Arrays.binarySearch(docIds, docId)
+      if (i < 0) null else metas(i)
+    }
+
     private def readStr(buf: java.nio.ByteBuffer): String = {
       val len = buf.getInt
       val b = new Array[Byte](len)
@@ -182,8 +216,10 @@ object DocSidecar {
       new String(b, StandardCharsets.UTF_8)
     }
 
-    /** Pinned dictionary footprint (what the serving node actually holds). */
-    def pinnedBytes: Long = docIds.length.toLong * 20
+    /** Pinned footprint (what the serving node actually holds): the
+      * dictionary and a reference per doc to its interned `DocMeta`.
+      */
+    def pinnedBytes: Long = docIds.length.toLong * 24
 
     def close(): Unit = ch.close()
   }
@@ -220,8 +256,40 @@ object DocSidecar {
       val lens = new Array[Int](n)
       var i = 0
       while (i < n) { ids(i) = dict.getLong; offs(i) = dict.getLong; lens(i) = dict.getInt; i += 1 }
-      new BucketReader(bucket, path, ch, ids, offs, lens)
+      new BucketReader(bucket, path, ch, ids, offs, lens, readMetas(path, offs))
     } catch { case t: Throwable => ch.close(); throw t }
+  }
+
+  /** Every record's (source, lang), in one sequential pass over the records
+    * (the text is skipped, not decoded); equal pairs share one instance.
+    */
+  private def readMetas(path: String, offsets: Array[Long]): Array[DocMeta] = {
+    val metas = new Array[DocMeta](offsets.length)
+    val interned = new java.util.HashMap[DocMeta, DocMeta]()
+    val in = new java.io.DataInputStream(
+      new java.io.BufferedInputStream(Files.newInputStream(Paths.get(path)), 1 << 16))
+    try {
+      var pos = 0L
+      def str(): String = {
+        val b = new Array[Byte](in.readInt())
+        in.readFully(b)
+        pos += 4 + b.length
+        new String(b, StandardCharsets.UTF_8)
+      }
+      var i = 0
+      while (i < offsets.length) {
+        in.skipNBytes(offsets(i) - pos) // the header, then nothing: records are contiguous
+        pos = offsets(i)
+        val textLen = in.readInt()
+        in.skipNBytes(textLen)
+        pos += 4 + textLen
+        val m = DocMeta(str(), str())
+        val prev = interned.putIfAbsent(m, m)
+        metas(i) = if (prev == null) m else prev
+        i += 1
+      }
+    } finally in.close()
+    metas
   }
 
   /** Serving-tier doc store over all of an index's sidecars: routes a docId
@@ -233,7 +301,7 @@ object DocSidecar {
     * through one monitor (a single global lock serializes every get AND
     * every fill at thousands of requests per second).
     */
-  final class DocStore(readers: IndexedSeq[BucketReader], cacheCapBytes: Long) {
+  final class DocStore(readers: IndexedSeq[BucketReader], cacheCapBytes: Long) extends Docs {
     private val byMin = readers.sortBy(_.minDoc).toArray
     private val mins = byMin.map(_.minDoc)
     // every writer path range-partitions by doc_id, so bucket ranges are
@@ -241,7 +309,6 @@ object DocSidecar {
     private val overlapping =
       byMin.length > 1 && byMin.sliding(2).exists(p => p(0).maxDoc >= p(1).minDoc)
 
-    private val Stripes = 16 // power of two
     private final class Shard(capBytes: Long) {
       val lru = new java.util.LinkedHashMap[java.lang.Long, DocRow](256, 0.75f, true)
       var bytes = 0L
@@ -265,34 +332,56 @@ object DocSidecar {
     }
     private val shards =
       Array.fill(Stripes)(new Shard(math.max(1L, cacheCapBytes / Stripes)))
-    // doc ids are dense and ascending, so low bits alone distribute evenly;
-    // mix the high word anyway for replicated/bench id patterns
-    private def shardOf(docId: Long): Shard =
-      shards(((docId ^ (docId >>> 32)).toInt) & (Stripes - 1))
+    private def shardOf(docId: Long): Shard = shards(stripeOf(docId))
     private def rowBytes(r: DocRow): Long =
       2L * (r.text.length + r.source.length + r.lang.length) + 64
+
+    /** The bucket whose doc-id range holds `docId`; null when none does. */
+    private def readerOf(docId: Long): BucketReader = {
+      var i = java.util.Arrays.binarySearch(mins, docId)
+      if (i < 0) i = -i - 2 // last bucket with minDoc <= docId
+      if (i >= 0 && docId <= byMin(i).maxDoc) byMin(i) else null
+    }
+    private def covering(docId: Long): Iterator[BucketReader] =
+      byMin.iterator.filter(r => r.minDoc <= docId && docId <= r.maxDoc)
 
     def get(docId: Long): Option[DocRow] = {
       val shard = shardOf(docId)
       val hit = shard.get(docId)
       if (hit != null) return Some(hit)
-      var i = java.util.Arrays.binarySearch(mins, docId)
-      if (i < 0) i = -i - 2 // last bucket with minDoc <= docId
-      var found: Option[DocRow] =
-        if (i >= 0 && docId <= byMin(i).maxDoc) byMin(i).get(docId) else None
+      val r = readerOf(docId)
+      var found: Option[DocRow] = if (r == null) None else r.get(docId)
       if (found.isEmpty && overlapping)
-        found = byMin.iterator
-          .filter(r => r.minDoc <= docId && docId <= r.maxDoc)
-          .flatMap(_.get(docId))
-          .nextOption()
+        found = covering(docId).flatMap(_.get(docId)).nextOption()
       found.foreach(shard.put(docId, _))
       found
+    }
+
+    def apply(docId: Long): Option[DocRow] = get(docId)
+
+    /** The doc's pinned filter fields: no row read, no LRU. */
+    def meta(docId: Long): DocMeta = {
+      val r = readerOf(docId)
+      val m = if (r == null) null else r.meta(docId)
+      if (m == null && overlapping) covering(docId).map(_.meta(docId)).find(_ != null).orNull
+      else m
     }
 
     def nDocs: Long = readers.map(_.docIds.length.toLong).sum
     def pinnedBytes: Long = readers.map(_.pinnedBytes).sum
     def close(): Unit = readers.foreach(_.close())
   }
+
+  private val StripeBits = 4
+  private val Stripes = 1 << StripeBits
+
+  /** The DocStore LRU stripe of a doc id: the top bits of a multiplicative
+    * (Fibonacci) hash. Not the low bits: each stripe's `LinkedHashMap` also
+    * picks its bin from an id's low bits, so a stripe holding only ids
+    * congruent mod 16 would use 1/16 of its bins, and those bins treeify.
+    */
+  private[index] def stripeOf(docId: Long): Int =
+    ((docId * 0x9E3779B97F4A7C15L) >>> (64 - StripeBits)).toInt
 
   /** Open the index's sidecar-backed doc store; None when no sidecars exist
     * (caller backfills via ensure()).

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.core.{EditDistance, Glob, ParsedQuery, QueryParser, Tokenizer}
-import graft.index.DocSidecar.DocRow
+import graft.index.DocSidecar.{DocMeta, DocRow}
 
 /** One query description for the batch (`SegmentSearch.evaluate`) and
   * serving (`ServingEngine.evaluate`) tiers: the reference's AND/OR/NOT
@@ -11,9 +11,15 @@ import graft.index.DocSidecar.DocRow
   * Every family scores BM25 over a `ParsedQuery`: the reference query
   * itself, the AND of the phrase's terms, or the OR of an expansion's
   * matched terms in byte-lex order. A phrase or a filter then only FILTERS
-  * (scores never change), so the exact answer is the ranking verified row by
-  * row in rank order and cut at k. The dataflow `SearchEngine` stays the
-  * independent oracle twin and does not use this type.
+  * (scores never change), so the exact answer is the top-k of the docs that
+  * pass. The two checks run in different places. A metadata filter reads
+  * a doc's pinned filter fields (`DocSidecar.DocMeta`), never its row: the
+  * tiers hand it to WAND's top-k collector
+  * (`Wand.searchSegment`'s `accept`), which checks only candidates that
+  * would enter the top-k, so pruning stays live. A phrase's adjacency check
+  * scans the text: its ranking is verified row by row in rank order and cut
+  * at k (`verifier`). The dataflow `SearchEngine` stays the independent
+  * oracle twin and does not use this type.
   */
 sealed trait Query extends Serializable
 
@@ -44,14 +50,16 @@ object Query {
     def matches(cand: String): Boolean = EditDistance.within(cand, term, maxDist)
   }
 
-  /** Additive metadata filter (`lang=` / `source=`), checked against the doc
-    * sidecar row; it only restricts candidates.
+  /** Additive metadata filter (`lang=` / `source=`), checked against a
+    * doc's filter fields; it only restricts candidates.
     */
   final case class Filter(lang: Option[String], source: Option[String]) {
-    def accepts(r: DocRow): Boolean = lang.forall(_ == r.lang) && source.forall(_ == r.source)
+    def accepts(m: DocMeta): Boolean =
+      (lang.isEmpty || lang.get == m.lang) && (source.isEmpty || source.get == m.source)
+    def accepts(r: DocRow): Boolean = accepts(r.meta)
   }
   object Filter {
-    /** None when neither field is set (no verification pass at all). */
+    /** None when neither field is set (no row check at all). */
     def of(lang: Option[String], source: Option[String]): Option[Filter] =
       if (lang.isEmpty && source.isEmpty) None else Some(Filter(lang, source))
   }
@@ -97,13 +105,15 @@ object Query {
     case Expand(e) => ParsedQuery(expand(e), Nil, isOr = true)
   }
 
-  /** The row check a ranking must pass before truncation: adjacency for a
-    * phrase, the filter when one is set. None = the ranking is the answer
-    * (top-k WAND, no enumeration, no sidecar reads).
+  /** The rank-order row check: Some only for a phrase — adjacency, plus the
+    * filter when one is set — verified over the ranking in rank order before
+    * truncation. A non-phrase query's filter is not here: the tiers pass
+    * `Filter.accepts` to the top-k collector instead. None = no rank-order
+    * pass (no enumeration, no text reads).
     */
   def verifier(q: Query, filter: Option[Filter]): Option[DocRow => Boolean] = q match {
     case Phrase(terms) =>
       Some(r => filter.forall(_.accepts(r)) && graft.core.Phrase.containsPhrase(r.text, terms))
-    case _ => filter.map(f => f.accepts _)
+    case _ => None
   }
 }

@@ -52,8 +52,8 @@ object SegmentSearch {
   @transient private lazy val segmentCache =
     new FileCache[LoadedSegment](SegmentIndex.loadSegment(_, eager = false), _.close())
 
-  // sidecar readers for rank-order verification: 20 B/doc pinned
-  // (dictionary only); text rows are positional reads
+  // sidecar readers for the filter and phrase checks: 24 B/doc pinned
+  // (dictionary + filter fields); text rows are positional reads
   @transient private lazy val sidecarCache =
     new FileCache[DocSidecar.BucketReader](DocSidecar.openBucket, _.close())
 
@@ -92,8 +92,6 @@ object SegmentSearch {
 
   final case class QueryHit(qid: Int, docId: Long, score: Double)
 
-  /** Doc lookup for serving queries that verify no rows. */
-  private val NoDocs: Long => Option[DocSidecar.DocRow] = _ => None
 
   /** The ONE did-you-mean pick rule (the oracle contract shared by all
     * tiers): exact presence wins; else argmax global df with byte-lex tie;
@@ -139,14 +137,15 @@ object SegmentSearch {
     * resolves every expansion — vocabulary never leaves the executors.
     * Phase 1 (tiny): global df (sum of per-segment local dfs) for the
     * batch's scored terms; it warms the executor segment caches. Phase 2:
-    * zero-shuffle fan-out — per segment task, block-max WAND per query; a
-    * query that needs a row check (phrase adjacency or the metadata filter)
-    * enumerates its FULL ranking instead (the check must precede
-    * truncation) and verifies it against the segment's sibling doc sidecar
-    * IN RANK ORDER with early exit at k accepted: any global top-k survivor
-    * in this segment is among its first k survivors, so the merge stays
-    * exact while text reads drop to ~k per segment. Then the distributed
-    * per-query merge — the only exchange.
+    * zero-shuffle fan-out — per segment task, block-max WAND per query. The
+    * metadata filter of a non-phrase query runs inside WAND's top-k
+    * collector against the segment's sibling doc sidecar, only for
+    * candidates that would enter the top-k (no budget: the answer is exact).
+    * A phrase enumerates its FULL ranking instead (adjacency is a text scan)
+    * and verifies it IN RANK ORDER with early exit at k accepted: any global
+    * top-k survivor in this segment is among its first k survivors, so the
+    * merge stays exact while text reads drop to ~k per segment. Then the
+    * distributed per-query merge — the only exchange.
     */
   def evaluate(
       spark: SparkSession,
@@ -166,12 +165,13 @@ object SegmentSearch {
     }
     if (files.isEmpty || plans.forall(_._3.isEmpty))
       return queries.indices.map(_ -> Seq.empty[(Long, Double)]).toMap
-    if (plans.exists { case (_, q, _) => Query.verifier(q, filter).isDefined })
+    if (filter.isDefined || plans.exists { case (_, q, _) => Query.verifier(q, filter).isDefined })
       DocSidecar.ensure(spark, indexDir) // idempotent; sidecars are derived data
 
     val fileDs = segmentFileDs(spark, files)
     val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, plans.flatMap(_._3.terms).distinct)
     val bc = spark.sparkContext.broadcast((plans, idfs, filter))
+    val kk = math.max(1, k)
 
     val hits = fileDs
       .mapPartitions { paths =>
@@ -180,15 +180,17 @@ object SegmentSearch {
         paths.flatMap { p =>
           val seg = loadCached(p)
           lazy val sidecar = sidecarCache.get(sidecarOf(p))
+          lazy val accept: Long => Boolean =
+            flt.map(f => (d: Long) => { val m = sidecar.meta(d); m != null && f.accepts(m) }).orNull
           checked.iterator.flatMap {
             case (qid, pq, None) =>
-              Wand.searchSegment(seg, pq, idfMap, avgdl, k).iterator
+              Wand.searchSegment(seg, pq, idfMap, avgdl, kk, accept = accept).iterator
                 .map(h => QueryHit(qid, h.docId, h.score))
             case (qid, pq, Some(ok)) =>
               val raw = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
               Bm25.sortHits(raw.map(h => (h.docId, h.score))).iterator
                 .filter { case (d, _) => sidecar.get(d).exists(ok) }
-                .take(math.max(1, k))
+                .take(kk)
                 .map { case (d, s) => QueryHit(qid, d, s) }
           }
         }
@@ -467,9 +469,12 @@ object SegmentSearch {
     // cores only while few requests are in flight (cuts unloaded latency);
     // under saturation each request runs serially on its own client thread —
     // fanning out there only adds subtask queueing delay to the tail while
-    // total throughput is already core-bound.
+    // total throughput is already core-bound. One fan-out already fills a
+    // small host, so below 8 cores only a request that is alone fans out: a
+    // second fan-out would oversubscribe the cores, and whether a request
+    // fans out would follow the timing of the others.
     private val parThreshold =
-      math.max(2, Runtime.getRuntime.availableProcessors() / 4)
+      math.max(1, Runtime.getRuntime.availableProcessors() / 4)
 
     private def idfOf(t: String): Double =
       idfCache.computeIfAbsent(t, tt => {
@@ -480,25 +485,29 @@ object SegmentSearch {
     private def dfOf(t: String): Long = segments.iterator.flatMap(_.terms.get(t)).map(_.df).sum
 
     /** The serving tier's evaluator: the exact top-k of `q` under the
-      * reference comparator. A query with no row check (see
-      * `Query.verifier`) runs top-k WAND; a phrase or a filtered query
-      * verifies its full ranking in rank order against `docs` (see
-      * `searchFiltered`). `maxTerms` caps an expansion to its byte-lex-first
-      * matches — a latency guard for degenerate patterns; the default is
-      * UNCAPPED so this tier scores the exact term set the dataflow twin does
-      * (a cap makes results diverge on large vocabularies).
+      * reference comparator. A query without a filter runs top-k WAND; a
+      * filtered one runs top-k WAND with the filter checked inside the
+      * collector against `docs.meta` (`searchFiltered`); a phrase verifies
+      * its full ranking in rank order against the rows of `docs` (see
+      * `Query.verifier`). `maxTerms` caps an
+      * expansion to its byte-lex-first matches — a latency guard for
+      * degenerate patterns; the default is UNCAPPED so this tier scores the
+      * exact term set the dataflow twin does (a cap makes results diverge on
+      * large vocabularies).
       */
     def evaluate(
         q: Query,
         k: Int,
-        docs: Long => Option[DocSidecar.DocRow],
+        docs: DocSidecar.Docs,
         filter: Option[Query.Filter] = None,
         maxTerms: Int = Int.MaxValue,
         maxVerify: Int = 100000): Seq[(Long, Double)] = {
       val pq = Query.scored(q, expand(_, maxTerms))
-      Query.verifier(q, filter) match {
-        case None => search(pq, k)
-        case Some(ok) => searchFiltered(pq, k, id => docs(id).exists(ok), maxVerify)
+      (Query.verifier(q, filter), filter) match {
+        case (Some(ok), _) => verifyInRankOrder(pq, k, id => docs(id).exists(ok), maxVerify)
+        case (None, Some(f)) =>
+          searchFiltered(pq, k, id => { val m = docs.meta(id); m != null && f.accepts(m) }, maxVerify)
+        case (None, None) => search(pq, k)
       }
     }
 
@@ -506,39 +515,67 @@ object SegmentSearch {
     def search(query: String, k: Int): Seq[(Long, Double)] =
       search(QueryParser.parse(query), k)
 
-    def search(pq: ParsedQuery, k: Int): Seq[(Long, Double)] = {
-      if (pq.terms.isEmpty) return Nil
-      val load = inFlight.incrementAndGet()
-      try {
-        val idfs = pq.terms.distinct
-          .flatMap { t => val v = idfOf(t); if (v.isNaN) None else Some(t -> v) }
-          .toMap
-        val shared = new Wand.SharedTheta // cross-segment pruning for this request
-        val raw =
-          if (segments.length > 1 && load <= parThreshold)
-            segments.par.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared)).seq
-          else
-            segments.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared))
-        Bm25.sortHits(raw.map(h => (h.docId, h.score))).take(k)
-      } finally inFlight.decrementAndGet()
-    }
+    def search(pq: ParsedQuery, k: Int): Seq[(Long, Double)] = topK(pq, k, null, Int.MaxValue)
 
     /** Filtered top-k: the filter only RESTRICTS candidates (scores are
-      * global-idf BM25, unchanged), so the exact filtered top-k is obtained
-      * by ranking the FULL enumeration and verifying `pred` IN RANK ORDER
-      * with early exit at k accepted — expected sidecar reads ≈ k /
-      * selectivity instead of O(all candidates). Score pruning cannot apply
-      * before the check without losing exactness. `maxVerify` hard-bounds
-      * the checked candidates: a never-matching predicate on a frequent-term
-      * query (a phrase that never occurs adjacently) returns best-effort-
-      * truncated results instead of becoming a full-corpus sidecar scan from
-      * one cheap HTTP request.
+      * global-idf BM25, unchanged), so `pred` runs inside each segment's
+      * top-k collector, only for a candidate that would enter the top-k, and
+      * a rejected doc is dropped: the threshold tracks the kth-best ACCEPTED
+      * doc, block-max skipping and pivoting stay live, and the answer is the
+      * exact filtered top-k. `maxVerify` hard-bounds the `pred` calls: each
+      * segment may check ⌈maxVerify / segments⌉ candidates, in doc order,
+      * and stops there — a never-matching predicate on a frequent-term query
+      * returns best-effort-truncated results instead of becoming a
+      * full-corpus sidecar scan from one cheap HTTP request. Segments prune
+      * with their own thresholds only (no `Wand.SharedTheta`), so that
+      * best-effort answer does not depend on thread timing.
       */
     def searchFiltered(
         pq: ParsedQuery,
         k: Int,
         pred: Long => Boolean,
         maxVerify: Int = 100000): Seq[(Long, Double)] = {
+      val n = math.max(1, segments.length)
+      topK(pq, math.max(1, k), pred, ((maxVerify.toLong + n - 1) / n).toInt)
+    }
+
+    /** One top-k WAND pass over all segments; `accept` (null = none) and
+      * `maxChecks` go to every segment's collector (see `Wand.searchSegment`).
+      * Unfiltered passes share one threshold across segments.
+      */
+    private def topK(
+        pq: ParsedQuery,
+        k: Int,
+        accept: Long => Boolean,
+        maxChecks: Int): Seq[(Long, Double)] = {
+      if (pq.terms.isEmpty) return Nil
+      val load = inFlight.incrementAndGet()
+      try {
+        val idfs = pq.terms.distinct
+          .flatMap { t => val v = idfOf(t); if (v.isNaN) None else Some(t -> v) }
+          .toMap
+        val shared = if (accept == null) new Wand.SharedTheta else null
+        def one(seg: LoadedSegment) =
+          Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared, accept, maxChecks)
+        val raw =
+          if (segments.length > 1 && load <= parThreshold) segments.par.flatMap(one).seq
+          else segments.flatMap(one)
+        Bm25.sortHits(raw.map(h => (h.docId, h.score))).take(k)
+      } finally inFlight.decrementAndGet()
+    }
+
+    /** A phrase's check: adjacency is a text scan, so the FULL ranking is
+      * enumerated and `pred` runs IN RANK ORDER with early exit at k
+      * accepted — expected text reads ≈ k / selectivity. `maxVerify`
+      * hard-bounds the checked candidates (the first `maxVerify` in rank
+      * order): a phrase that never occurs adjacently returns
+      * best-effort-truncated results instead of a full-corpus text scan.
+      */
+    private def verifyInRankOrder(
+        pq: ParsedQuery,
+        k: Int,
+        pred: Long => Boolean,
+        maxVerify: Int): Seq[(Long, Double)] = {
       val kk = math.max(1, k)
       val out = Seq.newBuilder[(Long, Double)]
       var found = 0
@@ -565,26 +602,26 @@ object SegmentSearch {
         textOf: Long => Option[String],
         maxVerify: Int = 100000): Seq[(Long, Double)] =
       evaluate(Query.parse("phrase", phrase), k,
-        id => textOf(id).map(DocSidecar.DocRow(_, "", "")), maxVerify = maxVerify)
+        DocSidecar.Docs(id => textOf(id).map(DocSidecar.DocRow(_, "", ""))), maxVerify = maxVerify)
 
     /** Prefix top-k — EXTENSION (SURVEY §2.12): the prefix's dictionary
       * range scored OR-mode in byte-lex term order (`SearchEngine.prefixScoredDF`).
       */
     def searchPrefix(prefix: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] =
-      evaluate(Query.parse("prefix", prefix), k, NoDocs, maxTerms = maxTerms)
+      evaluate(Query.parse("prefix", prefix), k, DocSidecar.Docs.empty, maxTerms = maxTerms)
 
     /** General wildcard (`*bar`, `foo*bar`) top-k: the glob's dictionary
       * matches scored OR-mode in byte-lex order (`SearchEngine.wildcardScoredDF`).
       */
     def searchWildcard(pattern: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] =
-      evaluate(Query.parse("wildcard", pattern), k, NoDocs, maxTerms = maxTerms)
+      evaluate(Query.parse("wildcard", pattern), k, DocSidecar.Docs.empty, maxTerms = maxTerms)
 
     /** Typo-tolerant top-k — EXTENSION (the reference's own competitive-gap
       * row, COMMERCIAL_ROADMAP.md:31): the term's Levenshtein <= `maxDist`
       * neighbors scored OR-mode in byte-lex order (`SearchEngine.fuzzyScoredDF`).
       */
     def searchFuzzy(term: String, k: Int, maxDist: Int = 1, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] =
-      evaluate(Query.fuzzy(term, maxDist), k, NoDocs, maxTerms = maxTerms)
+      evaluate(Query.fuzzy(term, maxDist), k, DocSidecar.Docs.empty, maxTerms = maxTerms)
 
     /** The dictionary terms `e` matches, byte-lex ascending, the first
       * `maxTerms` of them. Every path rides a lazily-built per-generation

@@ -133,18 +133,6 @@ object Wand {
     }
   }
 
-  /** Bounded top collector: a k-sized min-heap (plain score order) gives an
-    * O(1) pruning threshold = kth-best - epsilon; hits evicted from the heap
-    * that still sit within epsilon of the CURRENT kth-best go to a side
-    * buffer so epsilon ties at the k boundary survive to the driver merge
-    * (which applies the reference comparator). The buffer is logically
-    * unbounded — a tie at the final k boundary is NEVER dropped (the
-    * reference ranks fully and truncates last) — but is compacted whenever it
-    * exceeds `HeapSlack`: entries that have fallen more than epsilon below
-    * the CURRENT kth-best can never re-enter the final top-k (the threshold
-    * only rises), so they are discarded; memory stays bounded by the number
-    * of genuinely live boundary ties.
-    */
   /** Heap order equivalent to `Ordering.by(h => (-h.score, h.docId))` but
     * allocation-free (the tuple ordering boxed two values per compare in the
     * hottest loop of the query path — visible in JFR samples).
@@ -156,11 +144,33 @@ object Wand {
     }
   }
 
-  private final class TopK(k: Int, shared: SharedTheta) {
+  /** Bounded top collector: a k-sized min-heap (plain score order) gives an
+    * O(1) pruning threshold = kth-best - epsilon; hits evicted from the heap
+    * that still sit within epsilon of the CURRENT kth-best go to a side
+    * buffer so epsilon ties at the k boundary survive to the driver merge
+    * (which applies the reference comparator). The buffer is logically
+    * unbounded — a tie at the final k boundary is NEVER dropped (the
+    * reference ranks fully and truncates last) — but is compacted whenever it
+    * exceeds `HeapSlack`: entries that have fallen more than epsilon below
+    * the CURRENT kth-best can never re-enter the final top-k (the threshold
+    * only rises), so they are discarded; memory stays bounded by the number
+    * of genuinely live boundary ties.
+    *
+    * `accept` (null = none) is a row check that only RESTRICTS candidates:
+    * it runs only for a candidate that would enter the heap or the tie
+    * buffer, and a rejected doc is dropped — so the threshold, and with it
+    * block-max skipping and pivoting, tracks the kth-best ACCEPTED doc: the
+    * exact top-k of the accepted set, with pruning. `maxChecks` bounds the
+    * calls to `accept`; once spent, `exhausted` ends the scan. That best
+    * effort is deterministic when `shared` is null: candidates then arrive
+    * in doc order under this segment's own threshold alone.
+    */
+  private final class TopK(k: Int, shared: SharedTheta, accept: Long => Boolean, maxChecks: Int) {
     // min-heap: worst of the top-k on top (score asc, docId desc)
     private val heap = mutable.PriorityQueue.empty[SegmentHit](heapOrdering)
     private var ties = List.empty[SegmentHit]
     private var nTies = 0
+    private var checks = 0
 
     def threshold: Double = {
       val local = if (heap.size < k) Double.NegativeInfinity else heap.head.score
@@ -168,6 +178,12 @@ object Wand {
       if (best == Double.NegativeInfinity) Double.NegativeInfinity
       else best - Bm25.ScoreTieEpsilon
     }
+
+    /** The check budget is spent: the scan should stop. */
+    def exhausted: Boolean = checks >= maxChecks
+
+    private def admit(docId: Long): Boolean =
+      accept == null || (checks < maxChecks && { checks += 1; accept(docId) })
 
     private def addTie(h: SegmentHit): Unit = {
       if (nTies >= HeapSlack) { // compact: drop ties that are now stale
@@ -181,18 +197,22 @@ object Wand {
     /** Primitive-args twin (r6): dense queries offer nearly every doc, so a
       * SegmentHit per CANDIDATE was pure young-gen churn — the object now
       * materializes only when the hit actually enters the heap or tie
-      * buffer. Logic unchanged.
+      * buffer.
       */
     def offer(docId: Long, score: Double): Unit = {
       if (heap.size < k) {
-        heap.enqueue(SegmentHit(docId, score))
-        if (heap.size == k && shared != null) shared.publish(heap.head.score)
+        if (admit(docId)) {
+          heap.enqueue(SegmentHit(docId, score))
+          if (heap.size == k && shared != null) shared.publish(heap.head.score)
+        }
       } else if (score > heap.head.score) {
-        val evicted = heap.dequeue()
-        heap.enqueue(SegmentHit(docId, score))
-        if (shared != null) shared.publish(heap.head.score)
-        if (evicted.score >= threshold) addTie(evicted)
-      } else if (score >= threshold) { // within epsilon of kth but not above
+        if (admit(docId)) {
+          val evicted = heap.dequeue()
+          heap.enqueue(SegmentHit(docId, score))
+          if (shared != null) shared.publish(heap.head.score)
+          if (evicted.score >= threshold) addTie(evicted)
+        }
+      } else if (score >= threshold && admit(docId)) { // within epsilon of kth but not above
         addTie(SegmentHit(docId, score))
       }
     }
@@ -205,6 +225,11 @@ object Wand {
     * `idfs` carries the GLOBAL idf per positive query term (global df = sum
     * of per-segment local dfs, computed by the caller once per batch) —
     * segments themselves only know local stats.
+    *
+    * `accept` (null = every doc) restricts the candidates: the result is the
+    * top-k of the docs it accepts, and it is called only for competitive
+    * candidates (see `TopK`), at most `maxChecks` times — past that the
+    * scan stops and returns what it has.
     */
   def searchSegment(
       seg: LoadedSegment,
@@ -212,7 +237,9 @@ object Wand {
       idfs: Map[String, Double],
       avgdl: Double,
       k: Int,
-      shared: SharedTheta = null
+      shared: SharedTheta = null,
+      accept: Long => Boolean = null,
+      maxChecks: Int = Int.MaxValue
   ): Seq[SegmentHit] = {
     if (pq.terms.isEmpty) return Nil
 
@@ -245,9 +272,9 @@ object Wand {
       // GLOBAL df == 0 kills the query everywhere. Either way: all distinct
       // terms must have a cursor here for any local match.
       if (cursors.length < distinct.length) return Nil
-      andMerge(cursors, excluded, avgdl, k, shared)
+      andMerge(cursors, excluded, avgdl, new TopK(k, shared, accept, maxChecks))
     } else {
-      orWand(cursors, excluded, avgdl, k, shared)
+      orWand(cursors, excluded, avgdl, new TopK(k, shared, accept, maxChecks))
     }
   }
 
@@ -260,10 +287,8 @@ object Wand {
       cursorsIn: IndexedSeq[Cursor],
       excluded: Excluder,
       avgdl: Double,
-      k: Int,
-      shared: SharedTheta
+      top: TopK
   ): Seq[SegmentHit] = {
-    val top = new TopK(k, shared)
     val cursors: Array[Cursor] = cursorsIn.toArray
     val n = cursors.length
     if (n == 0) return Nil
@@ -325,6 +350,7 @@ object Wand {
             var j = 0
             while (j < n) { s += cursors(j).score(avgdl); j += 1 }
             top.offer(target, s)
+            if (top.exhausted) continue = false
           }
           var a = 0
           while (a < n) {
@@ -353,10 +379,8 @@ object Wand {
       cursorsIn: IndexedSeq[Cursor],
       excluded: Excluder,
       avgdl: Double,
-      k: Int,
-      shared: SharedTheta
+      top: TopK
   ): Seq[SegmentHit] = {
-    val top = new TopK(k, shared)
     val arr: Array[Cursor] = cursorsIn.filter(_.curDoc != Long.MaxValue).toArray
     var n = arr.length
     // Sort key is (curDoc, qpos): cursors parked on the SAME doc stay in
@@ -451,6 +475,7 @@ object Wand {
             m += 1
           }
           top.offer(pivotDoc, s)
+          if (top.exhausted) return top.results
         } else {
           while (m < n && arr(m).curDoc == pivotDoc) m += 1
         }

@@ -298,6 +298,36 @@ class ServerSpec extends SparkTestBase {
     } finally server.stop()
   }
 
+  test("malformed query strings: 400 on every parameter route, not counted as errors") {
+    val sp = spark
+    import sp.implicits._
+    val docs = Seq((1L, "alpha bravo", "acme", "en"), (2L, "alpha charlie", "acme", "de"))
+      .toDF("doc_id", "text", "source", "lang")
+    val dir = Files.createTempDirectory("graft-server-400").toString
+    SegmentIndex.build(docs, dir, buckets = 1)
+    val root = Files.createTempDirectory("graft-tenants-400").toString
+    graft.index.TenantCatalog.buildAll(docs, root, buckets = 1)
+
+    val server = SearchServer.start(SearchServer.loadState(dir), 0)
+    val gateway = TenantServer.start(root, port = 0, maxLoaded = 1)
+    try {
+      val base = s"http://127.0.0.1:${server.port}"
+      Seq("/search?q=%zz", "/search?q=alpha&lang=%e", "/suggest?q=%zz", "/didyoumean?q=a%zzb")
+        .foreach(p => assert(get(base + p)._1 == 400, p))
+      assert(get(s"$base/search?q=alpha")._1 == 200)
+      val (_, mBody) = get(s"$base/metrics")
+      assert(mBody.contains(""""errors":0"""), mBody)
+
+      val gw = s"http://127.0.0.1:${gateway.port}"
+      Seq("/search?tenant=acme&q=%zz", "/search?tenant=%zz&q=alpha", "/reload?tenant=%zz")
+        .foreach(p => assert(get(gw + p)._1 == 400, p))
+      assert(get(s"$gw/search?tenant=acme&q=alpha")._1 == 200)
+    } finally {
+      server.stop()
+      gateway.stop()
+    }
+  }
+
   test("sidecar serving: loadState pins dictionaries only; decoration parity with a pinned doc map") {
     val sp = spark
     import sp.implicits._

@@ -42,9 +42,38 @@ class DocSidecarSpec extends SparkTestBase {
       assert(store.get(0L).isEmpty && store.get(999L).isEmpty)
       // the whole point: pinned bytes are dictionary-sized, not text-sized
       val textBytes = expected.valuesIterator.map(_.text.length.toLong).sum
-      assert(store.pinnedBytes == 60L * 20)
+      assert(store.pinnedBytes == 60L * 24)
       assert(store.pinnedBytes < textBytes)
     } finally store.close()
+  }
+
+  test("meta: every doc's filter fields come from the pinned copy, equal pairs shared; misses are null") {
+    val docs = metaDocs((1L to 60L).map(i =>
+      (i, s"alpha body$i " + ("filler " * 20), s"repo${i % 3}", if (i % 4 == 0) "de" else "en")))
+    val dir = tmpDir()
+    SegmentIndex.build(docs, dir, buckets = 3)
+    DocSidecar.ensure(spark, dir)
+    val store = DocSidecar.openStore(dir).get
+    try {
+      (1L to 60L).foreach { i =>
+        assert(store.meta(i) == store.get(i).get.meta, s"doc $i")
+        assert(store.meta(i) == DocSidecar.DocMeta(s"repo${i % 3}", if (i % 4 == 0) "de" else "en"))
+      }
+      // 60 docs, 6 distinct (source, lang) pairs: one instance per pair and bucket
+      assert((1L to 60L).map(i => System.identityHashCode(store.meta(i))).distinct.size <= 6 * 3)
+      assert(store.meta(0L) == null && store.meta(999L) == null)
+    } finally store.close()
+  }
+
+  test("LRU stripes: a contiguous id range spreads over every stripe, not by low bits") {
+    // each stripe's LinkedHashMap bins by the id's low bits too: a stripe
+    // whose ids are all congruent mod 16 would use 1/16 of its bins
+    val byStripe = (1L to 4096L).groupBy(DocSidecar.stripeOf)
+    assert(byStripe.keySet == (0 until 16).toSet)
+    byStripe.foreach { case (stripe, ids) =>
+      assert(ids.size >= 128 && ids.size <= 512, s"stripe $stripe holds ${ids.size} ids")
+      assert(ids.map(_ % 16).distinct.size > 1, s"stripe $stripe: ids all congruent mod 16")
+    }
   }
 
   test("LRU: a tiny byte cap still serves correct rows (evictions re-read from disk)") {

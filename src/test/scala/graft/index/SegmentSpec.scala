@@ -107,6 +107,19 @@ class BlockCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       typical.map(_.dl).toArray, typical.size).map(_.bytes.length.toLong).sum
     assert(pB < vB, s"pfor $pB bytes should beat varint $vB bytes on small-value lists")
   }
+
+  // Pins the block byte layout: both codecs' bytes over PforMicro's seeded
+  // corpus (seed 20260822, 2,000 lists x 1,000 postings) hash to committed
+  // digests, so layout drift fails here instead of in segment files.
+  private lazy val microCorpus = graft.bench.PforMicro.corpus(nLists = 2000, perList = 1000, seed = 20260822L)
+
+  test("golden digest: encodeColumnarPfor bytes over the PforMicro corpus") {
+    assert(graft.bench.PforMicro.digest(microCorpus, pfor = true) == "bbcc3c03a30fa3bc")
+  }
+
+  test("golden digest: encodeColumnar (varint) bytes over the PforMicro corpus") {
+    assert(graft.bench.PforMicro.digest(microCorpus, pfor = false) == "663e28ad68959402")
+  }
 }
 
 class SegmentSpec extends SparkTestBase {

@@ -7,6 +7,7 @@ import graft.SparkTestBase
 import graft.app.SearchServer
 import graft.core.Bm25
 import graft.index.{IndexBuilder, SegmentIndex}
+import graft.index.DocSidecar.DocRow
 
 /** Table-driven parity of every query family × filter × tier against one
   * definition of the answer: the dataflow `SearchEngine`'s full ranking
@@ -14,9 +15,11 @@ import graft.index.{IndexBuilder, SegmentIndex}
   * only restricts candidates, so that is the exact filtered top-k.
   *
   * Families: q (the reference language), phrase, prefix, wildcard, fuzzy.
-  * Filters: none, `lang=en`. Tiers: the serving evaluator
-  * (`ServingEngine.evaluate`), the batch evaluator (`SegmentSearch.evaluate`)
-  * and HTTP `/search`.
+  * Filters: none, `lang=en`; for q also a selective `source=` (12.5% of
+  * docs) and a source on fewer than k docs in the whole index, which the
+  * top-k collector must fill from the bottom of the ranking. Tiers: the
+  * serving evaluator (`ServingEngine.evaluate`), the batch evaluator
+  * (`SegmentSearch.evaluate`) and HTTP `/search`.
   *
   * Corpus: a seeded multi-segment index whose dense terms carry more than
   * 128 postings per segment (posting lists span several blocks, so WAND's
@@ -32,7 +35,9 @@ class QueryParitySpec extends SparkTestBase {
   private val Words = Seq("scan", "scale", "scalar", "sort", "merge", "merger", "order", "filter",
     "hash", "hashed", "join", "joiner", "table", "row", "rows", "data", "date", "stream")
 
-  /** (doc_id, text, source, lang): 300 seeded base texts x 4 exact replicas. */
+  /** (doc_id, text, source, lang): 300 seeded base texts x 4 exact replicas;
+    * the first two replicas of bases 42 and 192 carry the source "rare".
+    */
   private lazy val docs: Seq[(Long, String, String, String)] = {
     val rnd = new scala.util.Random(7)
     val bases = (0 until 300).map { _ =>
@@ -41,9 +46,13 @@ class QueryParitySpec extends SparkTestBase {
     for {
       rep <- 0 until Replicas
       (text, i) <- bases.zipWithIndex
-    } yield (rep * 1000L + i, text, s"src${i % 5}", Langs((i + rep) % Langs.size))
+    } yield {
+      val source = if (i % 150 == 42 && rep < 2) Rare else s"src${i % 8}"
+      (rep * 1000L + i, text, source, Langs((i + rep) % Langs.size))
+    }
   }
-  private lazy val langOf: Map[Long, String] = docs.map(d => d._1 -> d._4).toMap
+  private val Rare = "rare"
+  private lazy val rowOf: Map[Long, DocRow] = docs.map(d => d._1 -> DocRow(d._2, d._3, d._4)).toMap
 
   private lazy val docsFrame = {
     val sp = spark
@@ -73,7 +82,12 @@ class QueryParitySpec extends SparkTestBase {
     "prefix" -> Seq("sca", "ro", "zz"),
     "wildcard" -> Seq("*er", "s*e", "*a*"),
     "fuzzy" -> Seq("dat", "rowz", "hasx"))
-  private val Filters: Seq[(String, Option[String])] = Seq("none" -> None, "lang=en" -> Some("en"))
+  private val Filters: Seq[(String, Option[Query.Filter])] =
+    Seq("none" -> None, "lang=en" -> Query.Filter.of(Some("en"), None))
+  /** Filter rows run for the q family only. */
+  private val QFilters: Seq[(String, Option[Query.Filter])] = Seq(
+    "source=src3" -> Query.Filter.of(None, Some("src3")),
+    s"source=$Rare" -> Query.Filter.of(None, Some(Rare)))
 
   private def ranked(family: String, raw: String): IndexedSeq[(Long, Double)] = {
     val scored = family match {
@@ -87,23 +101,24 @@ class QueryParitySpec extends SparkTestBase {
       .map(r => (r.getLong(r.fieldIndex("doc_id")), r.getDouble(r.fieldIndex("score")))).toIndexedSeq)
   }
 
-  private def expected(family: String, raw: String, lang: Option[String]): Seq[(Long, Double)] =
-    ranked(family, raw).filter { case (id, _) => lang.forall(_ == langOf(id)) }.take(K)
+  private def expected(family: String, raw: String, filter: Option[Query.Filter]): Seq[(Long, Double)] =
+    ranked(family, raw).filter { case (id, _) => filter.forall(_.accepts(rowOf(id))) }.take(K)
 
-  private def serving(family: String, raws: Seq[String], lang: Option[String]): Seq[Seq[(Long, Double)]] = {
+  private def serving(family: String, raws: Seq[String], filter: Option[Query.Filter]): Seq[Seq[(Long, Double)]] = {
     val st = server.current
-    raws.map(raw => st.engine.evaluate(Query.parse(family, raw), K, st.docs, Query.Filter.of(lang, None)))
+    raws.map(raw => st.engine.evaluate(Query.parse(family, raw), K, st.docs, filter))
   }
 
-  private def batch(family: String, raws: Seq[String], lang: Option[String]): Seq[Seq[(Long, Double)]] = {
-    val res = SegmentSearch.evaluate(spark, dir, raws.map(Query.parse(family, _)), K, Query.Filter.of(lang, None))
+  private def batch(family: String, raws: Seq[String], filter: Option[Query.Filter]): Seq[Seq[(Long, Double)]] = {
+    val res = SegmentSearch.evaluate(spark, dir, raws.map(Query.parse(family, _)), K, filter)
     raws.indices.map(res)
   }
 
-  private def http(family: String, raws: Seq[String], lang: Option[String]): Seq[Seq[(Long, Double)]] =
+  private def http(family: String, raws: Seq[String], filter: Option[Query.Filter]): Seq[Seq[(Long, Double)]] =
     raws.map { raw =>
       val url = s"http://127.0.0.1:${server.port}/search?$family=${URLEncoder.encode(raw, "UTF-8")}&k=$K" +
-        lang.fold("")(l => s"&lang=$l")
+        filter.flatMap(_.lang).fold("")(l => s"&lang=$l") +
+        filter.flatMap(_.source).fold("")(s => s"&source=$s")
       val conn = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
       conn.setConnectTimeout(2000)
       conn.setReadTimeout(10000)
@@ -114,7 +129,7 @@ class QueryParitySpec extends SparkTestBase {
       ids.zip(scores)
     }
 
-  private val Tiers: Seq[(String, (String, Seq[String], Option[String]) => Seq[Seq[(Long, Double)]])] =
+  private val Tiers: Seq[(String, (String, Seq[String], Option[Query.Filter]) => Seq[Seq[(Long, Double)]])] =
     Seq("serving" -> serving, "batch" -> batch, "http" -> http)
 
   test("parity corpus: multi-block posting lists, several segments, replica ties") {
@@ -126,16 +141,23 @@ class QueryParitySpec extends SparkTestBase {
     // replica group straddles the cut
     val all = ranked("q", "scan merge")
     assert(all.size > K && all(K - 1)._2 == all(K)._2)
+    // the selective filter keeps under 15% of the docs; the rare one fewer
+    // than k in the whole index
+    assert(docs.count(_._3 == "src3") < docs.size * 15 / 100)
+    assert(docs.count(_._3 == Rare) < K)
   }
 
+  private val Rows: Seq[(String, Seq[String], String, Option[Query.Filter])] =
+    (for ((family, raws) <- Queries; (fname, f) <- Filters) yield (family, raws, fname, f)) ++
+      QFilters.map { case (fname, f) => ("q", Queries.head._2, fname, f) }
+
   for {
-    (family, raws) <- Queries
-    (fname, lang) <- Filters
+    (family, raws, fname, filter) <- Rows
     (tier, run) <- Tiers
   } test(s"parity: $family, filter $fname, $tier") {
-    val want = raws.map(expected(family, _, lang))
+    val want = raws.map(expected(family, _, filter))
     assert(want.exists(_.nonEmpty), "vacuous row: no query has an answer")
-    run(family, raws, lang).zip(want).zip(raws).foreach { case ((got, exp), raw) =>
+    run(family, raws, filter).zip(want).zip(raws).foreach { case ((got, exp), raw) =>
       assert(got.map(_._1) == exp.map(_._1), s"$family '$raw' ($fname, $tier): docIds")
       got.zip(exp).foreach { case ((_, a), (_, b)) =>
         assert(math.abs(a - b) <= 1e-9, s"$family '$raw' ($fname, $tier): score $a vs $b")
