@@ -294,63 +294,59 @@ object SearchServer {
       }
     })
 
-    server.createContext("/search", (ex: HttpExchange) => {
-      val t0 = System.nanoTime()
-      metrics.searches.increment()
+    /** Answer `ex` from a pinned generation: a concurrent /reload swap
+      * cannot close it underneath `body` (retain fails only when the state
+      * is already fully drained, in which case the NEW state is current —
+      * or the server stopped, in which case stateRef holds the null sentinel
+      * and the request gets 503 instead of spinning). A malformed query
+      * string is a 400 and not counted in `errors`; any other failure is a
+      * counted 500.
+      */
+    def serve(ex: HttpExchange)(body: IndexState => Unit): Unit =
       try {
-        // pin this request's generation; a concurrent /reload swap cannot
-        // close it underneath us (retain fails only when the state is
-        // already fully drained, in which case the NEW state is current —
-        // or the server stopped, in which case stateRef holds the null
-        // sentinel and we 503 instead of spinning)
         var st = stateRef.get
         while (st != null && !st.retain()) st = stateRef.get
         if (st == null) respond(ex, 503, "text/plain", "") // stopped
-        else try {
-          val body = cachedSearchBody(st, queryParams(ex))
-          metrics.recordSearchMicros((System.nanoTime() - t0) / 1000L)
-          respond(ex, 200, "application/json", body)
-        } finally st.release()
+        else try body(st) finally st.release()
       } catch {
         case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
         case e: Exception =>
           metrics.errors.increment()
           respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
       }
+
+    server.createContext("/search", (ex: HttpExchange) => {
+      val t0 = System.nanoTime()
+      metrics.searches.increment()
+      serve(ex) { st =>
+        val body = cachedSearchBody(st, queryParams(ex))
+        metrics.recordSearchMicros((System.nanoTime() - t0) / 1000L)
+        respond(ex, 200, "application/json", body)
+      }
     })
     // Phase-9 autocomplete: top-k dictionary terms for a prefix, ranked by
     // global df (sum of per-segment local dfs) desc, term asc.
     server.createContext("/suggest", (ex: HttpExchange) => {
       metrics.suggests.increment()
-      try {
-        var st = stateRef.get
-        while (st != null && !st.retain()) st = stateRef.get
-        if (st == null) respond(ex, 503, "text/plain", "")
-        else try {
-          val params = queryParams(ex)
-          val q = params.getOrElse("q", "")
-          val k = math.max(1, params.get("k").flatMap(_.toIntOption).getOrElse(10))
-          val rows = st.engine.suggest(q, k)
-          val sb = new java.lang.StringBuilder(64 + 32 * rows.size)
-          sb.append("{\"prefix\":\"")
-          graft.core.JsonText.escInto(sb, q)
-          sb.append("\",\"suggestions\":[")
-          var first = true
-          rows.foreach { case (term, df) =>
-            if (!first) sb.append(',')
-            first = false
-            sb.append("{\"term\":\"")
-            graft.core.JsonText.escInto(sb, term)
-            sb.append("\",\"df\":").append(df).append('}')
-          }
-          sb.append("]}")
-          respond(ex, 200, "application/json", sb.toString)
-        } finally st.release()
-      } catch {
-        case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
-        case e: Exception =>
-          metrics.errors.increment()
-          respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
+      serve(ex) { st =>
+        val params = queryParams(ex)
+        val q = params.getOrElse("q", "")
+        val k = math.max(1, params.get("k").flatMap(_.toIntOption).getOrElse(10))
+        val rows = st.engine.suggest(q, k)
+        val sb = new java.lang.StringBuilder(64 + 32 * rows.size)
+        sb.append("{\"prefix\":\"")
+        graft.core.JsonText.escInto(sb, q)
+        sb.append("\",\"suggestions\":[")
+        var first = true
+        rows.foreach { case (term, df) =>
+          if (!first) sb.append(',')
+          first = false
+          sb.append("{\"term\":\"")
+          graft.core.JsonText.escInto(sb, term)
+          sb.append("\",\"df\":").append(df).append('}')
+        }
+        sb.append("]}")
+        respond(ex, 200, "application/json", sb.toString)
       }
     })
 
@@ -358,35 +354,25 @@ object SearchServer {
     // vocabulary (exact presence wins; else highest-df within Levenshtein
     // <= 1, ties byte-lex; else the term itself with df 0).
     server.createContext("/didyoumean", (ex: HttpExchange) => {
-      try {
-        var st = stateRef.get
-        while (st != null && !st.retain()) st = stateRef.get
-        if (st == null) respond(ex, 503, "text/plain", "")
-        else try {
-          val q = queryParams(ex).getOrElse("q", "")
-          val rows = st.engine.didYouMean(q)
-          val sb = new java.lang.StringBuilder(64 + 48 * rows.size)
-          sb.append("{\"query\":\"")
-          graft.core.JsonText.escInto(sb, q)
-          sb.append("\",\"terms\":[")
-          var first = true
-          rows.foreach { case (_, term, suggestion, df) =>
-            if (!first) sb.append(',')
-            first = false
-            sb.append("{\"term\":\"")
-            graft.core.JsonText.escInto(sb, term)
-            sb.append("\",\"suggestion\":\"")
-            graft.core.JsonText.escInto(sb, suggestion)
-            sb.append("\",\"df\":").append(df).append('}')
-          }
-          sb.append("]}")
-          respond(ex, 200, "application/json", sb.toString)
-        } finally st.release()
-      } catch {
-        case e: MalformedQuery => respond(ex, 400, "text/plain", s"malformed query string: ${e.getMessage}")
-        case e: Exception =>
-          metrics.errors.increment()
-          respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
+      serve(ex) { st =>
+        val q = queryParams(ex).getOrElse("q", "")
+        val rows = st.engine.didYouMean(q)
+        val sb = new java.lang.StringBuilder(64 + 48 * rows.size)
+        sb.append("{\"query\":\"")
+        graft.core.JsonText.escInto(sb, q)
+        sb.append("\",\"terms\":[")
+        var first = true
+        rows.foreach { case (_, term, suggestion, df) =>
+          if (!first) sb.append(',')
+          first = false
+          sb.append("{\"term\":\"")
+          graft.core.JsonText.escInto(sb, term)
+          sb.append("\",\"suggestion\":\"")
+          graft.core.JsonText.escInto(sb, suggestion)
+          sb.append("\",\"df\":").append(df).append('}')
+        }
+        sb.append("]}")
+        respond(ex, 200, "application/json", sb.toString)
       }
     })
 

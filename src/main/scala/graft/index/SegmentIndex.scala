@@ -144,11 +144,18 @@ object SegmentIndex {
     }
   }
 
+  /** One segment's term dictionary: `terms` is the lookup (WAND's hot
+    * path), `sortedTerms` the same `String`s in the footer's byte-lex order,
+    * exposed for expansion as `dict`.
+    */
   final case class LoadedSegment(
       bucket: Int,
       terms: Map[String, TermData],
+      sortedTerms: Array[String],
       closer: () => Unit = () => ()
   ) {
+    lazy val dict: TermDict = TermDict.of(IndexedSeq(this))
+
     /** all docIds of a term's postings (decoded), ascending */
     def postings(term: String): Iterator[BlockCodec.Posting] =
       terms.get(term).iterator.flatMap(_.blocks.iterator.flatMap(BlockCodec.decode(_).iterator))
@@ -270,22 +277,7 @@ object SegmentIndex {
     // and meta aggregates the returned manifests. One fewer corpus pass +
     // one fewer job boundary on the hot path.
     val resume = (0 until buckets).exists(b => readManifest(outDir, b).isDefined)
-    val bucketAgg =
-      if (!resume) Array.empty[org.apache.spark.sql.Row]
-      else spark.read.parquet(storePath)
-        .select(
-          col("bucket"),
-          col("dl"),
-          conv(substring(sha2(concat(col("doc_id").cast("string"), lit(":"), col("sha")), 256), 1, 15), 16, 10)
-            .cast("long")
-            .as("h")
-        )
-        .groupBy(col("bucket"))
-        .agg(expr("bit_xor(h)").as("lineage_xor"), count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-        .collect()
-    val lineage: Option[Map[Int, (Long, Long)]] =
-      if (!resume) None
-      else Some(bucketAgg.map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap)
+    val agg = if (resume) Some(bucketLineage(spark.read.parquet(storePath))) else None
 
     // ---- job 3: postings (from the tfbin column) -> segment write with
     // ZERO exchange.
@@ -301,13 +293,11 @@ object SegmentIndex {
     // >= the largest file so nothing splits; openCostInBytes equally large so
     // nothing packs) hands each write task its whole bucket in order — the
     // round-3 bucket re-shuffle of the entire tf-payload corpus is gone.
-    val manifests = writeSegmentsFileAligned(spark, storePath, outDir, lineage, codec)
+    val manifests = writeSegmentsFileAligned(spark, storePath, outDir, agg.map(_.lineage), codec)
 
     // corpus scalars: from the resume aggregation when it ran, else from the
     // write tasks' own counts (fresh manifests always carry sumDl)
-    val (n, sumDl) =
-      if (resume) (bucketAgg.map(_.getLong(2)).sum, bucketAgg.map(_.getLong(3)).sum)
-      else (manifests.map(_.nDocs).sum, manifests.map(_.sumDl).sum)
+    val (n, sumDl) = agg.fold((manifests.map(_.nDocs).sum, manifests.map(_.sumDl).sum))(a => (a.n, a.sumDl))
     val avgdl = if (n == 0) 0.0 else sumDl.toDouble / n
     writeMeta(outDir, Meta(SchemaVersion, n, sumDl, avgdl, buckets, BlockCodec.BlockSize, codec, codeAware, batchId))
     manifests
@@ -410,33 +400,20 @@ object SegmentIndex {
 
     // stats + lineage over the NEW buckets only (column-pruned, no text read)
     val newStore = spark.read.parquet(storePath).filter(col("bucket") >= offset)
-    val bucketAgg = newStore
-      .select(
-        col("bucket"),
-        col("dl"),
-        conv(substring(sha2(concat(col("doc_id").cast("string"), lit(":"), col("sha")), 256), 1, 15), 16, 10)
-          .cast("long")
-          .as("h")
-      )
-      .groupBy(col("bucket"))
-      .agg(expr("bit_xor(h)").as("lineage_xor"), count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .collect()
-    val nDelta = bucketAgg.map(_.getLong(2)).sum
-    val sumDlDelta = bucketAgg.map(_.getLong(3)).sum
-    val lineage = bucketAgg.map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val agg = bucketLineage(newStore)
 
     // compact-row exchange, in-task inversion (see build job 3)
     val rows = segmentRows(newStore, newBuckets)
     val out = outDir
     val codec = old.codec
     val manifests = rows.queryExecution.toRdd
-      .mapPartitions(it => writePartition(it, out, Some(lineage), codec))
+      .mapPartitions(it => writePartition(it, out, Some(agg.lineage), codec))
       .collect()
       .toSeq
       .sortBy(_.bucket)
 
-    val n = old.n + nDelta
-    val sumDl = old.sumDl + sumDlDelta
+    val n = old.n + agg.n
+    val sumDl = old.sumDl + agg.sumDl
     val avgdl = if (n == 0) 0.0 else sumDl.toDouble / n
     writeMeta(outDir, Meta(SchemaVersion, n, sumDl, avgdl, offset + newBuckets, BlockCodec.BlockSize,
       old.codec, codeAware, batchId.orElse(old.lastBatchId),
@@ -478,8 +455,30 @@ object SegmentIndex {
       .withColumn("bucket", spark_partition_id())
       .pipe(storeWriter).mode("overwrite").parquet(dstStore)
 
-    val store = spark.read.parquet(dstStore)
-    val bucketAgg = store
+    val agg = bucketLineage(spark.read.parquet(dstStore))
+    require(
+      agg.n == meta.n && agg.sumDl == meta.sumDl,
+      s"compact: docstore stats disagree with $srcDir meta — refusing to write"
+    )
+
+    // exchange-free segment pass: the compacted docstore just written above
+    // is one doc_id-sorted file per bucket, same as a fresh build's
+    val manifests = writeSegmentsFileAligned(spark, dstStore, dstDir, Some(agg.lineage), meta.codec)
+
+    // lastBatchId travels with the data: if the caller swaps the compacted
+    // dir in under a live streaming checkpoint, replayed batches stay no-ops
+    writeMeta(dstDir, Meta(SchemaVersion, meta.n, meta.sumDl, meta.avgdl, buckets, BlockCodec.BlockSize,
+      meta.codec, meta.codeAware, meta.lastBatchId))
+    manifests
+  }
+
+  /** Docstore rows' per-bucket (lineage XOR, doc count) — the XOR of a
+    * 60-bit slice of sha256(doc_id:sha) per doc — plus their total doc count
+    * and dl sum. `writePartition` computes the same figures in-task for a
+    * fresh build; resume, add and compact compare against this form.
+    */
+  private def bucketLineage(store: DataFrame): BucketLineage = {
+    val rows = store
       .select(
         col("bucket"),
         col("dl"),
@@ -490,22 +489,10 @@ object SegmentIndex {
       .groupBy(col("bucket"))
       .agg(expr("bit_xor(h)").as("lineage_xor"), count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .collect()
-    val lineage = bucketAgg.map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    require(
-      bucketAgg.map(_.getLong(2)).sum == meta.n && bucketAgg.map(_.getLong(3)).sum == meta.sumDl,
-      s"compact: docstore stats disagree with $srcDir meta — refusing to write"
-    )
-
-    // exchange-free segment pass: the compacted docstore just written above
-    // is one doc_id-sorted file per bucket, same as a fresh build's
-    val manifests = writeSegmentsFileAligned(spark, dstStore, dstDir, Some(lineage), meta.codec)
-
-    // lastBatchId travels with the data: if the caller swaps the compacted
-    // dir in under a live streaming checkpoint, replayed batches stay no-ops
-    writeMeta(dstDir, Meta(SchemaVersion, meta.n, meta.sumDl, meta.avgdl, buckets, BlockCodec.BlockSize,
-      meta.codec, meta.codeAware, meta.lastBatchId))
-    manifests
+    BucketLineage(rows.map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap,
+      rows.map(_.getLong(2)).sum, rows.map(_.getLong(3)).sum)
   }
+  private final case class BucketLineage(lineage: Map[Int, (Long, Long)], n: Long, sumDl: Long)
 
   /** Delete every index artifact of buckets matching `dead` — docstore
     * part-files (through the Hadoop FileSystem of each URI: at the 100 TB
@@ -748,10 +735,6 @@ object SegmentIndex {
     TfBin.encode(ks, cs, m.size)
   }
 
-  /** Stream one shuffle partition's rows (sorted by bucket, term, doc_id)
-    * into one segment file per bucket. Skips buckets whose manifest is
-    * already complete (resume).
-    */
   /** Compact doc rows (bucket, doc_id, dl:int, tfbin) hashed to their bucket
     * and doc_id-sorted within it. The write task inverts to term-major IN
     * MEMORY ([[Inverter]]) — no exploded-posting rows exist anywhere: the
@@ -929,7 +912,6 @@ object SegmentIndex {
   ): Iterator[Manifest] = {
     val pfor = codec == BlockCodec.CodecPfor
     val results = scala.collection.mutable.ArrayBuffer[Manifest]()
-    val diag = sys.env.get("SPARK_GRAFT_WRITE_DIAG").contains("1")
     val md = MessageDigest.getInstance("SHA-256")
     val seenBuckets = scala.collection.mutable.HashSet[Int]()
     var cur = Int.MinValue
@@ -939,14 +921,9 @@ object SegmentIndex {
     var sumDl = 0L
     var lineageXor = 0L
     var prevDocId = Long.MinValue
-    var t0 = 0L
 
-    def flush(): Unit = if (cur != Int.MinValue && !skipping) {
-      val m = writeBucket(inv, cur, nDocs, sumDl, lineageXor, outDir, pfor)
-      if (diag)
-        System.err.println(f"[wdiag] bucket=$cur%5d docs=$nDocs%7d terms=${m.nTerms}%7d postings=${m.nPostings}%9d ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
-      results += m
-    }
+    def flush(): Unit =
+      if (cur != Int.MinValue && !skipping) results += writeBucket(inv, cur, nDocs, sumDl, lineageXor, outDir, pfor)
 
     while (it.hasNext) {
       val r = it.next()
@@ -958,7 +935,7 @@ object SegmentIndex {
         // aligned and a silent write would truncate the segment.
         require(seenBuckets.add(b), s"bucket $b rows are not contiguous — docstore layout violated")
         cur = b; nDocs = 0L; sumDl = 0L; lineageXor = 0L; prevDocId = Long.MinValue
-        t0 = System.nanoTime(); inv = null
+        inv = null
         // Skip ONLY when the existing manifest provably describes this run's
         // data: same lineage XOR and doc count as the current corpus slice.
         // A stale segment (source data changed under the same outDir) fails
@@ -988,9 +965,9 @@ object SegmentIndex {
           // zero-copy probe view; Inverter copies only on first occurrence
           invv.add(UTF8String.fromBytes(b, off, len), docId, tf, dl)
         }
-        // in-task lineage: the same 60-bit slice of sha256(doc_id:sha) the
-        // SQL path computes — first 15 hex nibbles == big-endian first 8
-        // digest bytes >>> 4
+        // in-task lineage: the same 60-bit slice of sha256(doc_id:sha) that
+        // `bucketLineage` computes in SQL — first 15 hex nibbles ==
+        // big-endian first 8 digest bytes >>> 4
         md.reset()
         md.update((docId.toString + ":" + r.getUTF8String(4).toString)
           .getBytes(StandardCharsets.US_ASCII))
@@ -1240,6 +1217,11 @@ object SegmentIndex {
 
   // -------------------------------------------------------------------- read
 
+  /** Diagnostic: segment loads performed by this JVM (delta-reload specs
+    * assert a reload after a small addDocuments re-loads only the delta).
+    */
+  val segmentLoads = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** Load a segment. `eager = true` (the pinned serving model) materializes
     * every term's blocks and closes the file; `eager = false` (executor
     * batch tasks) reads ONLY the term dictionary — O(vocabulary), not
@@ -1248,11 +1230,6 @@ object SegmentIndex {
     * can be far larger than an executor heap; the lazy path touches just the
     * query's terms.
     */
-  /** Diagnostic: segment loads performed by this JVM (delta-reload specs
-    * assert a reload after a small addDocuments re-loads only the delta).
-    */
-  val segmentLoads = new java.util.concurrent.atomic.AtomicLong(0)
-
   def loadSegment(path: String, eager: Boolean = true): LoadedSegment = {
     segmentLoads.incrementAndGet()
     val ch = java.nio.channels.FileChannel.open(
@@ -1291,12 +1268,18 @@ object SegmentIndex {
     val dict = readAt(dictOffset, (size - 8 - dictOffset).toInt)
     val nTerms = dict.getInt
     val terms = Map.newBuilder[String, TermData]
+    val sorted = new Array[String](nTerms)
     var i = 0
     while (i < nTerms) {
       val tlen = dict.getShort & 0xffff
       val tb = new Array[Byte](tlen)
       dict.get(tb)
       val term = new String(tb, StandardCharsets.UTF_8)
+      // the writer emits byte-lex order, which is String order for the
+      // tokenizer's ASCII terms: TermDict's binary searches rely on it
+      require(i == 0 || sorted(i - 1).compareTo(term) < 0,
+        s"dictionary of $path is not strictly ascending at term $i ('${sorted(i - 1)}' then '$term')")
+      sorted(i) = term
       val df = dict.getLong
       val offset = dict.getLong
       val len = dict.getInt
@@ -1306,7 +1289,7 @@ object SegmentIndex {
     if (eager) {
       // Force every term's blocks, then close the channel — in try/finally so
       // a read failure mid-force cannot leak the descriptor.
-      val seg = LoadedSegment(bucket, terms.result())
+      val seg = LoadedSegment(bucket, terms.result(), sorted)
       try seg.terms.valuesIterator.foreach(_.blocks)
       finally ch.close()
       seg
@@ -1314,7 +1297,7 @@ object SegmentIndex {
       // Lazy loads keep the channel open for per-term positional reads; the
       // LoadedSegment owns it and close() releases it (loadCached closes
       // superseded entries; long-lived executors no longer leak descriptors).
-      LoadedSegment(bucket, terms.result(), () => ch.close())
+      LoadedSegment(bucket, terms.result(), sorted, () => ch.close())
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.core.{EditDistance, Glob, ParsedQuery, QueryParser, Tokenizer}
+import graft.index.TermDict
 import graft.index.DocSidecar.{DocMeta, DocRow}
 
 /** One query description for the batch (`SegmentSearch.evaluate`) and
@@ -34,15 +35,19 @@ object Query {
   /** Dictionary-expanded family: every index term `e` matches. */
   final case class Expand(e: Expansion) extends Query
 
-  /** A dictionary match rule over (normalized) index terms. */
-  sealed trait Expansion extends Serializable {
-    def matches(term: String): Boolean
-  }
+  /** A dictionary match rule over (normalized) index terms; both tiers
+    * resolve it with `TermDict.expand` (serving answers a fuzzy radius
+    * within its SymSpell depth from SymSpell).
+    */
+  sealed trait Expansion extends TermDict.Pattern with Serializable
   final case class Prefix(prefix: String) extends Expansion {
+    override def lead: String = prefix
     def matches(term: String): Boolean = term.startsWith(prefix)
   }
   /** `glob` is `Glob.normalize`d: alnum chunks separated by single `*`. */
   final case class Wildcard(glob: String) extends Expansion {
+    override def lead: String = glob.takeWhile(_ != '*')
+    override def tail: String = glob.substring(glob.lastIndexOf('*') + 1)
     def matches(term: String): Boolean = Glob.matches(glob, term)
   }
   /** Levenshtein <= maxDist (DuckDB `levenshtein` semantics). */

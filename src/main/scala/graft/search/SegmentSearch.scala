@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Encoders, SparkSession}
 import scala.collection.parallel.CollectionConverters._
 
 import graft.core.{Bm25, ParsedQuery, QueryParser}
-import graft.index.{DocSidecar, SegmentIndex}
+import graft.index.{DocSidecar, SegmentIndex, TermDict}
 import graft.index.SegmentIndex.LoadedSegment
 
 /** Query serving over on-disk segments (the scale path / EP2).
@@ -115,7 +115,7 @@ object SegmentSearch {
       terms: Seq[String]
   ): Map[String, Double] =
     terms.distinct.flatMap { t =>
-      val df = segments.iterator.flatMap(_.terms.get(t)).map(_.df).sum
+      val df = TermDict.df(segments, t)
       if (df > 0) Some(t -> Bm25.idf(n, df)) else None
     }.toMap
 
@@ -199,11 +199,11 @@ object SegmentSearch {
     mergeDistributed(hits, queries.size, k)
   }
 
-  /** The batch tier's ONE per-segment dictionary scan: every term of a live
-    * segment that some expansion matches, with its GLOBAL df (sum of the
-    * segments' local dfs). Only matched (term, local df) rows leave the
-    * executors — a vocabulary-bounded, usually tiny set — and sum
-    * driver-side.
+  /** The batch tier's ONE dictionary pass: every term of a live segment
+    * that some expansion matches (`TermDict.expand` on each segment's own
+    * dictionary), with its GLOBAL df (sum of the segments' local dfs). Only
+    * matched (term, local df) rows leave the executors — a
+    * vocabulary-bounded, usually tiny set — and sum driver-side.
     */
   private def dictionaryScan(
       spark: SparkSession,
@@ -214,9 +214,8 @@ object SegmentSearch {
     else segmentFileDs(spark, files)
       .mapPartitions { paths =>
         paths.flatMap { p =>
-          loadCached(p).terms.iterator.collect {
-            case (t, td) if exps.exists(_.matches(t)) => (t, td.df)
-          }
+          val dict = loadCached(p).dict
+          exps.flatMap(dict.expand(_, Int.MaxValue)).distinct.map(t => (t, dict.df(t)))
         }
       }(Encoders.product[(String, Long)])
       .collect()
@@ -400,70 +399,19 @@ object SegmentSearch {
       // deletion-index depth for the fuzzy family: 1 (default) answers
       // maxDist=1 without a vocab scan; 2 (opt-in per generation — r6,
       // VERDICT r5 #5 — ~5-6x the depth-1 index memory) extends that to
-      // maxDist=2. Radii past the depth fall back to the dictionary scan.
+      // maxDist=2. Radii past the depth walk the generation's TermDict.
       symspellDepth: Int = 1
   ) {
     private val idfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+    // The generation's dictionary, merged from the segments' sorted footers
+    // on the first expansion, suggest or did-you-mean request (never on the
+    // `q=` path).
+    private lazy val dict: TermDict = TermDict.of(segments)
     // SymSpell deletion neighborhood (SURVEY §2.14's 100 TB shape for the
-    // fuzzy family): built once per serving generation, and ONLY when the
-    // first fuzzy/did-you-mean request arrives (lazy) — per-request cost is
-    // then O(|term|^depth) probes + the verified candidate set, not O(vocab)
-    private lazy val symspell: SymSpell =
-      SymSpell.build(segments.iterator.flatMap(_.terms.keysIterator), symspellDepth)
-    // Byte-lex-sorted global vocabulary — the in-memory twin of the v5
-    // dictionary footer's on-disk sort order: prefix expansion and suggest
-    // become an O(log V) binary search + an O(|matches|) range walk instead
-    // of an O(V) scan per request (the "production tier can range-scan"
-    // note SURVEY §2.12/§2.16 carried since round 4). Built lazily once per
-    // serving generation, only when a prefix-family request arrives.
-    private lazy val sortedVocab: Array[String] = {
-      val set = new java.util.HashSet[String]()
-      segments.foreach(_.terms.keysIterator.foreach(set.add))
-      val arr = set.toArray(new Array[String](set.size))
-      java.util.Arrays.sort(arr, java.util.Comparator.naturalOrder[String]())
-      arr
-    }
-
-    /** All vocabulary terms with `p` as prefix, byte-lex ascending — the
-      * sorted-dictionary range scan.
-      */
-    private def prefixRange(p: String): Seq[String] = {
-      val v = sortedVocab
-      var lo = java.util.Arrays.binarySearch(v.asInstanceOf[Array[AnyRef]], p)
-      if (lo < 0) lo = -lo - 1
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = lo
-      while (i < v.length && v(i).startsWith(p)) { out += v(i); i += 1 }
-      out.toSeq
-    }
-
-    // Reversed-term dictionary (r6, VERDICT r5 #4): every vocab term
-    // REVERSED, sorted — a `*bar` request becomes a range scan on `rab`
-    // instead of an O(vocab) walk per request. Built lazily once per
-    // serving generation (the SymSpell discipline), only when the first
-    // leading-wildcard request arrives; memory = one extra String per term.
-    private lazy val reversedVocab: Array[String] = {
-      val v = sortedVocab
-      val arr = new Array[String](v.length)
-      var i = 0
-      while (i < v.length) { arr(i) = v(i).reverse; i += 1 }
-      java.util.Arrays.sort(arr, java.util.Comparator.naturalOrder[String]())
-      arr
-    }
-
-    /** All vocabulary terms whose REVERSED form has `rp` as prefix (i.e.
-      * terms ending with rp.reverse), returned in the reversed dictionary's
-      * order — callers needing byte-lex order sort the (small) match set.
-      */
-    private def suffixRange(rp: String): Seq[String] = {
-      val v = reversedVocab
-      var lo = java.util.Arrays.binarySearch(v.asInstanceOf[Array[AnyRef]], rp)
-      if (lo < 0) lo = -lo - 1
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = lo
-      while (i < v.length && v(i).startsWith(rp)) { out += v(i).reverse; i += 1 }
-      out.toSeq
-    }
+    // fuzzy family), built from `dict` on the first fuzzy/did-you-mean
+    // request: per-request cost is then O(|term|^depth) probes + the
+    // verified candidate set, not O(vocab)
+    private lazy val symspell: SymSpell = SymSpell.build(dict.terms.iterator, symspellDepth)
     private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     // Adaptive intra-request parallelism: fan a request's segments out across
     // cores only while few requests are in flight (cuts unloaded latency);
@@ -478,11 +426,9 @@ object SegmentSearch {
 
     private def idfOf(t: String): Double =
       idfCache.computeIfAbsent(t, tt => {
-        val df = segments.iterator.flatMap(_.terms.get(tt)).map(_.df).sum
+        val df = TermDict.df(segments, tt)
         if (df > 0) Bm25.idf(meta.n, df) else Double.NaN // NaN marks absent
       })
-
-    private def dfOf(t: String): Long = segments.iterator.flatMap(_.terms.get(t)).map(_.df).sum
 
     /** The serving tier's evaluator: the exact top-k of `q` under the
       * reference comparator. A query without a filter runs top-k WAND; a
@@ -624,43 +570,24 @@ object SegmentSearch {
       evaluate(Query.fuzzy(term, maxDist), k, DocSidecar.Docs.empty, maxTerms = maxTerms)
 
     /** The dictionary terms `e` matches, byte-lex ascending, the first
-      * `maxTerms` of them. Every path rides a lazily-built per-generation
-      * structure instead of an O(V) walk per request where one exists:
-      *   - prefix: binary search + range walk over the sorted vocabulary —
-      *     O(log V + |matches|);
-      *   - wildcard: a literal leading chunk bounds the walk to its sorted
-      *     range (`foo*bar` walks only foo*); a leading `*` with a literal
-      *     tail (`*bar`) range-scans the REVERSED dictionary (r6), re-sorted
-      *     byte-lex so the capped set is the forward walk's; only an
-      *     unanchored pattern (`*a*`) walks the whole sorted vocabulary;
-      *   - fuzzy: maxDist <= `symspellDepth` probes the SymSpell deletion
-      *     neighborhood (O(|term|^depth)); larger radii scan the segment
-      *     dictionaries.
+      * `maxTerms` of them: SymSpell for a fuzzy radius within its depth,
+      * else the generation's `TermDict`.
       */
     private def expand(e: Query.Expansion, maxTerms: Int): Seq[String] = e match {
-      case Query.Prefix(p) => prefixRange(p).take(maxTerms)
-      case Query.Wildcard(g) =>
-        val lit = g.takeWhile(_ != '*')
-        val tail = g.reverse.takeWhile(_ != '*').reverse
-        if (lit.nonEmpty) prefixRange(lit).iterator.filter(e.matches).take(maxTerms).toSeq
-        else if (tail.nonEmpty) suffixRange(tail.reverse).filter(e.matches).sorted.take(maxTerms)
-        else sortedVocab.iterator.filter(e.matches).take(maxTerms).toSeq
-      case Query.Fuzzy(t, d) =>
-        if (d <= symspellDepth) symspell.neighbors(t, d).take(maxTerms)
-        else segments.iterator.flatMap(_.terms.keysIterator.filter(e.matches))
-          .toSeq.distinct.sorted.take(maxTerms)
+      case Query.Fuzzy(t, d) if d <= symspellDepth => symspell.neighbors(t, d).take(maxTerms)
+      case _ => dict.expand(e, maxTerms)
     }
 
     /** Prefix term suggestions — EXTENSION (the reference's deferred Phase 9
       * "autocomplete"): top-k dictionary terms for a prefix, ranked by GLOBAL
       * df (sum of per-segment local dfs — the same Lucene-model summation as
-      * scoring) desc, then term asc. Rides the sorted-vocabulary range scan:
+      * scoring) desc, then term asc. Rides the dictionary's range walk:
       * O(log V + |matches| x segments) per request, never O(V).
       */
     def suggest(prefix: String, k: Int): Seq[(String, Long)] =
       Query.parse("prefix", prefix) match {
         case Query.Expand(e) =>
-          expand(e, Int.MaxValue).map(t => t -> dfOf(t)).sortBy { case (t, df) => (-df, t) }.take(k)
+          expand(e, Int.MaxValue).map(t => t -> dict.df(t)).sortBy { case (t, df) => (-df, t) }.take(k)
         case _ => Nil
       }
 
@@ -670,34 +597,12 @@ object SegmentSearch {
       * segments' local dfs, so the answer is bit-identical to the dataflow
       * tier's.
       */
-    def didYouMean(query: String, maxDist: Int = 1): Seq[(Long, String, String, Long)] = {
-      val terms = QueryParser.parse(query).terms
-      if (terms.isEmpty) return Nil
-      if (maxDist <= symspellDepth) {
-        // SymSpell path: per term, O(|t|^depth) probes + a verified candidate
-        // set whose dfs are summed with per-segment hash gets — nothing here
-        // is proportional to vocabulary size
-        terms.zipWithIndex.map { case (t, i) =>
-          val cands = symspell.neighbors(t, maxDist) // byte-lex sorted, verified
-          val pick = pickSuggestion(t, cands.view.map(c => (c, dfOf(c))))
-          (i + 1L, t, pick._1, pick._2)
-        }
-      } else {
-        // fallback scan for radii the deletion index does not cover
-        val radii = terms.distinct.map(Query.Fuzzy(_, maxDist))
-        val dfs = scala.collection.mutable.HashMap[String, Long]()
-        segments.foreach { seg =>
-          seg.terms.foreach { case (cand, td) =>
-            if (radii.exists(_.matches(cand))) dfs.update(cand, dfs.getOrElse(cand, 0L) + td.df)
-          }
-        }
-        terms.zipWithIndex.map { case (t, i) =>
-          val near = Query.Fuzzy(t, maxDist)
-          val pick = pickSuggestion(t, dfs.view.filter { case (cand, _) => near.matches(cand) })
-          (i + 1L, t, pick._1, pick._2)
-        }
+    def didYouMean(query: String, maxDist: Int = 1): Seq[(Long, String, String, Long)] =
+      QueryParser.parse(query).terms.zipWithIndex.map { case (t, i) =>
+        val cands = expand(Query.Fuzzy(t, maxDist), Int.MaxValue) // byte-lex sorted, verified
+        val pick = pickSuggestion(t, cands.view.map(c => (c, dict.df(c))))
+        (i + 1L, t, pick._1, pick._2)
       }
-    }
 
     /** Learning-to-rank re-rank — EXTENSION (the roadmap's optional Phase 10
       * "LTR" row; see [[graft.search.Ltr]] for the model and the distributed
