@@ -471,9 +471,9 @@ object SearchServer {
           // picks the family; the reference contract (`q=` + QueryParser
           // semantics) is untouched. `lang=` / `source=` are ADDITIVE
           // metadata filters (deferred Phase 9 "filters"): they restrict
-          // candidates BEFORE truncation, checked against the sidecar row
-          // inside the top-k collector (a phrase: in rank order), for every
-          // family.
+          // candidates BEFORE truncation, checked against the sidecar's
+          // pinned fields inside the top-k collector (a phrase: before its
+          // text), for every family.
           val (family, q) = Query.Extensions.collectFirst { case f if params.contains(f) => f -> params(f) }
             .getOrElse("q" -> params.getOrElse("q", ""))
           val query = Query.parse(family, q)
@@ -539,8 +539,11 @@ object SearchServer {
     */
   private[app] final class MalformedQuery(msg: String) extends RuntimeException(msg)
 
-  private[app] def queryParams(ex: HttpExchange): Map[String, String] = {
-    val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
+  private[app] def queryParams(ex: HttpExchange): Map[String, String] =
+    parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
+
+  /** Decode a raw query string; an illegal escape throws `MalformedQuery`. */
+  private[app] def parseQuery(raw: String): Map[String, String] = {
     def decode(s: String): String =
       try java.net.URLDecoder.decode(s, "UTF-8")
       catch { case e: IllegalArgumentException => throw new MalformedQuery(e.getMessage) }

@@ -128,7 +128,7 @@ object SearchUi {
       |  if($("source").value.trim())url+="&source="+encodeURIComponent($("source").value.trim());
       |  if($("tenant").value.trim())url+="&tenant="+encodeURIComponent($("tenant").value.trim());
       |  var t0=performance.now();
-      |  $("stat").textContent="searching\u2026";$("dym").style.display="none";
+      |  $("stat").textContent="searching…";$("dym").style.display="none";
       |  api(url).then(function(r){
       |    if(!r.ok)throw new Error("search failed with "+r.status);
       |    return r.json()

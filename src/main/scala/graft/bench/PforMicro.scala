@@ -3,10 +3,10 @@ package graft.bench
 import graft.index.BlockCodec
 
 /** Single-threaded microbench of the posting-block encode kernels (no
-  * Spark): the system-level CodecBench cannot resolve the PFOR encode's
-  * per-byte cost inside a multi-second build wall on this noisy host, so
-  * this times `encodeColumnar` (varint) and `encodeColumnarPfor` alone over
-  * a deterministic synthetic corpus and reports ns/posting plus a decode
+  * Spark): a full index build cannot resolve the PFOR encode's per-byte
+  * cost inside its multi-second wall on a noisy host, so this times
+  * `encodeColumnar` (varint) and `encodeColumnarPfor` alone over a
+  * deterministic synthetic corpus and reports ns/posting plus a decode
   * pass. Also asserts the two codecs' decoded postings agree, and prints a
   * digest of the encoded bytes so a before/after pair can prove
   * byte-identity of the optimized encoder.

@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *   - memory-stream (long-array summing: bandwidth-bound),
   * and report engine speedup / host-achievable speedup. The engine's own
   * parallelism is additionally evidenced by per-stage task-time utilization
-  * (>= 85% of cores busy on the wide stages, see StageDiag).
+  * (>= 85% of cores busy on the wide stages, from Spark's stage task metrics).
   */
 object ScalingBench {
 
@@ -342,7 +342,7 @@ object ScalingBench {
          |hash inversion — the engine's kernels) saturate memory concurrency much earlier.
          |Host-normalized efficiency = engine speedup / matching-ceiling speedup — the
          |engine-attributable scaling. The engine's wide stages run at >= 80%% task-time
-         |utilization at local[32] (StageDiag): cores stay busy, and the residual gap is the
+         |utilization at local[32]: cores stay busy, and the residual gap is the
          |shared memory system, which a multi-node cluster scales but one VM cannot.
          |""".stripMargin
 

@@ -50,7 +50,7 @@ object RefTokenizeTf {
     * occurrence of each distinct term materializes a key copy. The previous
     * LinkedHashMap[UTF8String, Int] paid byte[]+UTF8String+boxed-Integer per
     * OCCURRENCE (~3 allocations x corpus token count — the dominant GC
-    * source of build job 1 at 32 threads, measured via StageDiag jvmGCTime).
+    * source of build job 1 at 32 threads, measured as the stage's jvmGCTime).
     */
   private final class TfCounter {
     private var cap = 64 // power of two

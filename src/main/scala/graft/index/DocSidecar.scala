@@ -36,9 +36,9 @@ object DocSidecar {
   /** A doc's filter fields: what a `lang=` / `source=` filter reads. */
   final case class DocMeta(source: String, lang: String)
 
-  /** A serving generation's doc lookup: `apply` gives a doc's row (phrase
-    * adjacency, snippets), `meta` its filter fields (null when the doc is
-    * unknown).
+  /** A doc lookup (a serving generation's store, or one sidecar bucket):
+    * `apply` gives a doc's row (phrase adjacency, snippets), `meta` its
+    * filter fields (null when the doc is unknown).
     */
   trait Docs extends (Long => Option[DocRow]) {
     def meta(docId: Long): DocMeta
@@ -185,11 +185,11 @@ object DocSidecar {
       offsets: Array[Long],
       lens: Array[Int],
       metas: Array[DocMeta]
-  ) {
+  ) extends Docs {
     def minDoc: Long = if (docIds.isEmpty) Long.MaxValue else docIds(0)
     def maxDoc: Long = if (docIds.isEmpty) Long.MinValue else docIds(docIds.length - 1)
 
-    def get(docId: Long): Option[DocRow] = {
+    def apply(docId: Long): Option[DocRow] = {
       val i = java.util.Arrays.binarySearch(docIds, docId)
       if (i < 0) return None
       val buf = java.nio.ByteBuffer.allocate(lens(i))
@@ -350,9 +350,9 @@ object DocSidecar {
       val hit = shard.get(docId)
       if (hit != null) return Some(hit)
       val r = readerOf(docId)
-      var found: Option[DocRow] = if (r == null) None else r.get(docId)
+      var found: Option[DocRow] = if (r == null) None else r(docId)
       if (found.isEmpty && overlapping)
-        found = covering(docId).flatMap(_.get(docId)).nextOption()
+        found = covering(docId).flatMap(_(docId)).nextOption()
       found.foreach(shard.put(docId, _))
       found
     }

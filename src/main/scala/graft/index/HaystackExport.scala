@@ -143,7 +143,7 @@ object HaystackExport {
     if (exp < -4 || exp >= 17) { // C %g's scientific-notation rule at precision 17
       val digits = bd.unscaledValue.abs.toString
       val sign = if (bd.signum < 0) "-" else ""
-      val mant = if (digits.length == 1) digits else digits.head + "." + digits.tail
+      val mant = if (digits.length == 1) digits else digits.head.toString + "." + digits.tail
       val eabs = math.abs(exp)
       val estr = (if (exp < 0) "e-" else "e+") + (if (eabs < 10) "0" + eabs else eabs.toString)
       sign + mant + estr

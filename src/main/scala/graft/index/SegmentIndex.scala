@@ -609,7 +609,7 @@ object SegmentIndex {
     val staging = s"$outDir/_staging/compact-$newBucket"
     val pickSet = picks.toSet
     val store = spark.read.parquet(storePath)
-    val cols = store.columns.map(col)
+    val cols = store.columns.toSeq.map(col)
     store
       .filter(col("bucket").isInCollection(pickSet))
       .withColumn("bucket", lit(newBucket))

@@ -1,8 +1,8 @@
 package graft.search
 
 import graft.core.{EditDistance, Glob, ParsedQuery, QueryParser, Tokenizer}
-import graft.index.TermDict
-import graft.index.DocSidecar.{DocMeta, DocRow}
+import graft.index.{DocSidecar, TermDict}
+import graft.index.DocSidecar.DocMeta
 
 /** One query description for the batch (`SegmentSearch.evaluate`) and
   * serving (`ServingEngine.evaluate`) tiers: the reference's AND/OR/NOT
@@ -13,14 +13,14 @@ import graft.index.DocSidecar.{DocMeta, DocRow}
   * itself, the AND of the phrase's terms, or the OR of an expansion's
   * matched terms in byte-lex order. A phrase or a filter then only FILTERS
   * (scores never change), so the exact answer is the top-k of the docs that
-  * pass. The two checks run in different places. A metadata filter reads
-  * a doc's pinned filter fields (`DocSidecar.DocMeta`), never its row: the
-  * tiers hand it to WAND's top-k collector
-  * (`Wand.searchSegment`'s `accept`), which checks only candidates that
-  * would enter the top-k, so pruning stays live. A phrase's adjacency check
-  * scans the text: its ranking is verified row by row in rank order and cut
-  * at k (`verifier`). The dataflow `SearchEngine` stays the independent
-  * oracle twin and does not use this type.
+  * pass. Both checks are one candidate check (`accept`) that the tiers hand
+  * to WAND's top-k collector (`Wand.searchSegment`'s `accept`), which runs
+  * it only for candidates that would enter the top-k, so pruning stays
+  * live. A metadata filter reads a doc's pinned filter fields
+  * (`DocSidecar.DocMeta`), never its row; a phrase's adjacency check reads
+  * the text, and a filtered phrase reads it only for a doc whose fields
+  * pass. The dataflow `SearchEngine` stays the independent oracle twin and
+  * does not use this type.
   */
 sealed trait Query extends Serializable
 
@@ -61,7 +61,6 @@ object Query {
   final case class Filter(lang: Option[String], source: Option[String]) {
     def accepts(m: DocMeta): Boolean =
       (lang.isEmpty || lang.get == m.lang) && (source.isEmpty || source.get == m.source)
-    def accepts(r: DocRow): Boolean = accepts(r.meta)
   }
   object Filter {
     /** None when neither field is set (no row check at all). */
@@ -110,15 +109,20 @@ object Query {
     case Expand(e) => ParsedQuery(expand(e), Nil, isOr = true)
   }
 
-  /** The rank-order row check: Some only for a phrase — adjacency, plus the
-    * filter when one is set — verified over the ranking in rank order before
-    * truncation. A non-phrase query's filter is not here: the tiers pass
-    * `Filter.accepts` to the top-k collector instead. None = no rank-order
-    * pass (no enumeration, no text reads).
+  /** The candidate check for WAND's top-k collector, or null when there is
+    * nothing to check. A filter reads `docs.meta`; a phrase also needs its
+    * terms adjacent in `docs`' text, read only when the filter passes.
+    * `docs` is by-name: it is evaluated only when a check runs, so a query
+    * with nothing to check never opens a doc store.
     */
-  def verifier(q: Query, filter: Option[Filter]): Option[DocRow => Boolean] = q match {
-    case Phrase(terms) =>
-      Some(r => filter.forall(_.accepts(r)) && graft.core.Phrase.containsPhrase(r.text, terms))
-    case _ => None
+  def accept(q: Query, filter: Option[Filter], docs: => DocSidecar.Docs): Long => Boolean = {
+    val metaOk: Long => Boolean =
+      filter.map(f => (d: Long) => { val m = docs.meta(d); m != null && f.accepts(m) }).orNull
+    q match {
+      case Phrase(terms) =>
+        d => (metaOk == null || metaOk(d)) &&
+          docs(d).exists(r => graft.core.Phrase.containsPhrase(r.text, terms))
+      case _ => metaOk
+    }
   }
 }

@@ -137,15 +137,13 @@ object SegmentSearch {
     * resolves every expansion — vocabulary never leaves the executors.
     * Phase 1 (tiny): global df (sum of per-segment local dfs) for the
     * batch's scored terms; it warms the executor segment caches. Phase 2:
-    * zero-shuffle fan-out — per segment task, block-max WAND per query. The
-    * metadata filter of a non-phrase query runs inside WAND's top-k
-    * collector against the segment's sibling doc sidecar, only for
-    * candidates that would enter the top-k (no budget: the answer is exact).
-    * A phrase enumerates its FULL ranking instead (adjacency is a text scan)
-    * and verifies it IN RANK ORDER with early exit at k accepted: any global
-    * top-k survivor in this segment is among its first k survivors, so the
-    * merge stays exact while text reads drop to ~k per segment. Then the
-    * distributed per-query merge — the only exchange.
+    * zero-shuffle fan-out — per segment task, block-max WAND per query. A
+    * query's candidate check (`Query.accept`: the metadata filter, a
+    * phrase's adjacency, or both) runs inside WAND's top-k collector against
+    * the segment's sibling doc sidecar, only for candidates that would enter
+    * the top-k, with no budget: the answer is exact. The sidecar opens only
+    * when some query has a check. Then the distributed per-query merge — the
+    * only exchange.
     */
   def evaluate(
       spark: SparkSession,
@@ -165,7 +163,7 @@ object SegmentSearch {
     }
     if (files.isEmpty || plans.forall(_._3.isEmpty))
       return queries.indices.map(_ -> Seq.empty[(Long, Double)]).toMap
-    if (filter.isDefined || plans.exists { case (_, q, _) => Query.verifier(q, filter).isDefined })
+    if (plans.exists { case (_, q, _) => Query.accept(q, filter, DocSidecar.Docs.empty) != null })
       DocSidecar.ensure(spark, indexDir) // idempotent; sidecars are derived data
 
     val fileDs = segmentFileDs(spark, files)
@@ -176,22 +174,12 @@ object SegmentSearch {
     val hits = fileDs
       .mapPartitions { paths =>
         val (qs, idfMap, flt) = bc.value
-        val checked = qs.map { case (qid, q, pq) => (qid, pq, Query.verifier(q, flt)) }
         paths.flatMap { p =>
           val seg = loadCached(p)
           lazy val sidecar = sidecarCache.get(sidecarOf(p))
-          lazy val accept: Long => Boolean =
-            flt.map(f => (d: Long) => { val m = sidecar.meta(d); m != null && f.accepts(m) }).orNull
-          checked.iterator.flatMap {
-            case (qid, pq, None) =>
-              Wand.searchSegment(seg, pq, idfMap, avgdl, kk, accept = accept).iterator
-                .map(h => QueryHit(qid, h.docId, h.score))
-            case (qid, pq, Some(ok)) =>
-              val raw = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
-              Bm25.sortHits(raw.map(h => (h.docId, h.score))).iterator
-                .filter { case (d, _) => sidecar.get(d).exists(ok) }
-                .take(kk)
-                .map { case (d, s) => QueryHit(qid, d, s) }
+          qs.iterator.flatMap { case (qid, q, pq) =>
+            Wand.searchSegment(seg, pq, idfMap, avgdl, kk, accept = Query.accept(q, flt, sidecar)).iterator
+              .map(h => QueryHit(qid, h.docId, h.score))
           }
         }
       }(Encoders.product[QueryHit])
@@ -430,12 +418,15 @@ object SegmentSearch {
         if (df > 0) Bm25.idf(meta.n, df) else Double.NaN // NaN marks absent
       })
 
-    /** The serving tier's evaluator: the exact top-k of `q` under the
-      * reference comparator. A query without a filter runs top-k WAND; a
-      * filtered one runs top-k WAND with the filter checked inside the
-      * collector against `docs.meta` (`searchFiltered`); a phrase verifies
-      * its full ranking in rank order against the rows of `docs` (see
-      * `Query.verifier`). `maxTerms` caps an
+    /** The serving tier's evaluator: the top-k of `q` under the reference
+      * comparator. A query with nothing to check runs top-k WAND with one
+      * threshold shared across segments; otherwise its candidate check
+      * (`Query.accept`: the filter against `docs.meta`, a phrase's adjacency
+      * against the text of `docs`, or both) runs inside each segment's
+      * collector under `searchFiltered`'s per-segment, doc-order budget of
+      * ⌈maxVerify / segments⌉ checks. The answer is exact unless a segment
+      * spends its budget; a filter or phrase that rarely passes then returns
+      * the best-effort top-k of the candidates checked. `maxTerms` caps an
       * expansion to its byte-lex-first matches — a latency guard for
       * degenerate patterns; the default is UNCAPPED so this tier scores the
       * exact term set the dataflow twin does (a cap makes results diverge on
@@ -449,12 +440,8 @@ object SegmentSearch {
         maxTerms: Int = Int.MaxValue,
         maxVerify: Int = 100000): Seq[(Long, Double)] = {
       val pq = Query.scored(q, expand(_, maxTerms))
-      (Query.verifier(q, filter), filter) match {
-        case (Some(ok), _) => verifyInRankOrder(pq, k, id => docs(id).exists(ok), maxVerify)
-        case (None, Some(f)) =>
-          searchFiltered(pq, k, id => { val m = docs.meta(id); m != null && f.accepts(m) }, maxVerify)
-        case (None, None) => search(pq, k)
-      }
+      val accept = Query.accept(q, filter, docs)
+      if (accept == null) search(pq, k) else searchFiltered(pq, k, accept, maxVerify)
     }
 
     /** Ranked top-k (reference epsilon comparator) for one query. */
@@ -510,37 +497,11 @@ object SegmentSearch {
       } finally inFlight.decrementAndGet()
     }
 
-    /** A phrase's check: adjacency is a text scan, so the FULL ranking is
-      * enumerated and `pred` runs IN RANK ORDER with early exit at k
-      * accepted — expected text reads ≈ k / selectivity. `maxVerify`
-      * hard-bounds the checked candidates (the first `maxVerify` in rank
-      * order): a phrase that never occurs adjacently returns
-      * best-effort-truncated results instead of a full-corpus text scan.
-      */
-    private def verifyInRankOrder(
-        pq: ParsedQuery,
-        k: Int,
-        pred: Long => Boolean,
-        maxVerify: Int): Seq[(Long, Double)] = {
-      val kk = math.max(1, k)
-      val out = Seq.newBuilder[(Long, Double)]
-      var found = 0
-      var checked = 0
-      val it = search(pq, Int.MaxValue).iterator
-      while (found < kk && checked < maxVerify && it.hasNext) {
-        val hit = it.next()
-        checked += 1
-        if (pred(hit._1)) {
-          out += hit
-          found += 1
-        }
-      }
-      out.result()
-    }
-
     /** Phrase-adjacent top-k — EXTENSION (the reference's deferred phrase
       * phase; see `graft.core.Phrase` and SURVEY §2.12): the AND of the
-      * phrase's terms, adjacency verified against `textOf` in rank order.
+      * phrase's terms, adjacency checked against `textOf` inside the top-k
+      * collector for competitive candidates only, at most ⌈maxVerify /
+      * segments⌉ texts per segment in doc order (see `evaluate`).
       */
     def searchPhrase(
         phrase: String,

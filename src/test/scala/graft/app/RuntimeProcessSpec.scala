@@ -115,7 +115,7 @@ class RuntimeProcessSpec extends SparkTestBase {
       assert(get(s"$base/health") == ((200, "OK")))
       // query a term that provably exists: the most frequent token of the
       // first source document
-      val content = spark.read.parquet(srcDir).select("content").head.getString(0)
+      val content = spark.read.parquet(srcDir).select("content").head().getString(0)
       val term = graft.core.Tokenizer.tokenize(content)
         .groupBy(identity).view.mapValues(_.length).maxBy(_._2)._1
       val (qc, qbody) = get(s"$base/search?q=$term&k=3")

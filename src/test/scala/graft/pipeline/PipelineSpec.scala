@@ -310,7 +310,7 @@ class PipelineSpec extends SparkTestBase {
     // draining through the async ContextCleaner when the full suite runs;
     // this test owns only the RDDs created after its baseline snapshot
     val base = spark.sparkContext.getPersistentRDDs.keySet
-    def fresh = spark.sparkContext.getPersistentRDDs.keySet -- base
+    def fresh = spark.sparkContext.getPersistentRDDs.keySet.diff(base)
     val docs = docsDF((1L to 30L).map(i =>
       i -> s"tok${i % 9} word${i % 5} filler${i % 3} alpha bravo charlie delta"))
     val vecs = (0L to 9L).map(i =>

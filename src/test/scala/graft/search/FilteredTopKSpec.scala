@@ -5,25 +5,32 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
 import graft.core.{Bm25, QueryParser}
-import graft.index.SegmentIndex
+import graft.index.{DocSidecar, SegmentIndex}
 
 /** The serving tier's filtered top-k (`ServingEngine.searchFiltered`): the
   * predicate runs inside each segment's WAND collector under a per-segment
   * check budget of ⌈maxVerify / segments⌉. Four segments and one request in
-  * flight, so every call takes the parallel segment fan-out.
+  * flight, so every call takes the parallel segment fan-out. A phrase's
+  * adjacency check is the same collector predicate (`ServingEngine.evaluate`).
   */
 class FilteredTopKSpec extends SparkTestBase {
 
   private val Words = Seq("scan", "merge", "sort", "hash", "join", "table", "row", "data")
 
+  /** Seeded texts in which "data" is never directly followed by "scan". */
+  private lazy val texts: Map[Long, String] = {
+    val rnd = new scala.util.Random(11)
+    (1L to 2000L).map { id =>
+      id -> (0 until 4 + rnd.nextInt(12)).map(_ => Words(rnd.nextInt(Words.size))).mkString(" ")
+        .replace("data scan", "data row scan")
+    }.toMap
+  }
+
   private lazy val engine: SegmentSearch.ServingEngine = {
     val sp = spark
     import sp.implicits._
-    val rnd = new scala.util.Random(11)
-    val docs = (1L to 2000L).map { id =>
-      val text = (0 until 4 + rnd.nextInt(12)).map(_ => Words(rnd.nextInt(Words.size))).mkString(" ")
-      (id, text, "src", "en")
-    }.toDF("doc_id", "text", "source", "lang")
+    val docs = texts.toSeq.sortBy(_._1).map { case (id, text) => (id, text, "src", "en") }
+      .toDF("doc_id", "text", "source", "lang")
     val dir = Files.createTempDirectory("graft-filtered-topk").toString
     SegmentIndex.build(docs, dir, buckets = 4)
     val meta = SegmentIndex.readMeta(dir)
@@ -68,5 +75,39 @@ class FilteredTopKSpec extends SparkTestBase {
     assert(first.size == 3 && first.forall { case (id, _) => pred(id) })
     assert(Bm25.sortHits(first) == first)
     (1 to 20).foreach(i => assert(engine.searchFiltered(pq, 3, pred, maxVerify) == first, s"repetition $i"))
+  }
+
+  test("phrase never adjacent: at most maxVerify + segments text reads, and every AND match read once unbounded") {
+    val phrase = Query.parse("phrase", "data scan")
+    val andMatches = engine.search(QueryParser.parse("data scan"), Int.MaxValue).size
+    assert(andMatches > 500, "dense terms expected")
+    def reading(reads: AtomicInteger) = DocSidecar.Docs(id => {
+      reads.incrementAndGet()
+      texts.get(id).map(DocSidecar.DocRow(_, "src", "en"))
+    })
+    for (m <- Seq(1, 10, 33)) {
+      val reads = new AtomicInteger(0)
+      assert(engine.evaluate(phrase, 10, reading(reads), maxVerify = m).isEmpty)
+      assert(reads.get > 0 && reads.get <= m + engine.segments.size, s"maxVerify=$m: ${reads.get} reads")
+    }
+    val reads = new AtomicInteger(0)
+    assert(engine.evaluate(phrase, 10, reading(reads)).isEmpty)
+    assert(reads.get == andMatches)
+  }
+
+  test("filtered phrase: a filter that rejects every doc makes zero text reads") {
+    val reads = new AtomicInteger(0)
+    val metas = new AtomicInteger(0)
+    val docs = new DocSidecar.Docs {
+      def apply(docId: Long): Option[DocSidecar.DocRow] = {
+        reads.incrementAndGet()
+        texts.get(docId).map(DocSidecar.DocRow(_, "src", "en"))
+      }
+      def meta(docId: Long): DocSidecar.DocMeta = { metas.incrementAndGet(); DocSidecar.DocMeta("src", "en") }
+    }
+    val got = engine.evaluate(Query.parse("phrase", "scan merge"), 10, docs, Query.Filter.of(Some("fr"), None))
+    assert(got.isEmpty)
+    assert(metas.get > 0)
+    assert(reads.get == 0)
   }
 }

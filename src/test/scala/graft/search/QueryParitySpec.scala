@@ -2,12 +2,13 @@ package graft.search
 
 import java.net.{HttpURLConnection, URL, URLEncoder}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
 import graft.app.SearchServer
 import graft.core.Bm25
-import graft.index.{IndexBuilder, SegmentIndex}
-import graft.index.DocSidecar.DocRow
+import graft.index.{DocSidecar, IndexBuilder, SegmentIndex}
+import graft.index.DocSidecar.{DocMeta, DocRow}
 
 /** Table-driven parity of every query family × filter × tier against one
   * definition of the answer: the dataflow `SearchEngine`'s full ranking
@@ -15,9 +16,10 @@ import graft.index.DocSidecar.DocRow
   * only restricts candidates, so that is the exact filtered top-k.
   *
   * Families: q (the reference language), phrase, prefix, wildcard, fuzzy.
-  * Filters: none, `lang=en`; for q also a selective `source=` (12.5% of
-  * docs) and a source on fewer than k docs in the whole index, which the
-  * top-k collector must fill from the bottom of the ranking. Tiers: the
+  * Filters: none, `lang=en`; for q and phrase also a selective `source=`
+  * (12.5% of docs, checked before a phrase reads any text); for q a source
+  * on fewer than k docs in the whole index, which the top-k collector must
+  * fill from the bottom of the ranking. Tiers: the
   * serving evaluator (`ServingEngine.evaluate`), the batch evaluator
   * (`SegmentSearch.evaluate`) and HTTP `/search`.
   *
@@ -84,7 +86,7 @@ class QueryParitySpec extends SparkTestBase {
     "fuzzy" -> Seq("dat", "rowz", "hasx"))
   private val Filters: Seq[(String, Option[Query.Filter])] =
     Seq("none" -> None, "lang=en" -> Query.Filter.of(Some("en"), None))
-  /** Filter rows run for the q family only. */
+  /** Filter rows run for the q family; the first also for phrase. */
   private val QFilters: Seq[(String, Option[Query.Filter])] = Seq(
     "source=src3" -> Query.Filter.of(None, Some("src3")),
     s"source=$Rare" -> Query.Filter.of(None, Some(Rare)))
@@ -102,7 +104,7 @@ class QueryParitySpec extends SparkTestBase {
   }
 
   private def expected(family: String, raw: String, filter: Option[Query.Filter]): Seq[(Long, Double)] =
-    ranked(family, raw).filter { case (id, _) => filter.forall(_.accepts(rowOf(id))) }.take(K)
+    ranked(family, raw).filter { case (id, _) => filter.forall(_.accepts(rowOf(id).meta)) }.take(K)
 
   private def serving(family: String, raws: Seq[String], filter: Option[Query.Filter]): Seq[Seq[(Long, Double)]] = {
     val st = server.current
@@ -149,7 +151,8 @@ class QueryParitySpec extends SparkTestBase {
 
   private val Rows: Seq[(String, Seq[String], String, Option[Query.Filter])] =
     (for ((family, raws) <- Queries; (fname, f) <- Filters) yield (family, raws, fname, f)) ++
-      QFilters.map { case (fname, f) => ("q", Queries.head._2, fname, f) }
+      QFilters.map { case (fname, f) => ("q", Queries.head._2, fname, f) } :+
+      ("phrase", Queries(1)._2, QFilters.head._1, QFilters.head._2)
 
   for {
     (family, raws, fname, filter) <- Rows
@@ -162,6 +165,22 @@ class QueryParitySpec extends SparkTestBase {
       got.zip(exp).foreach { case ((_, a), (_, b)) =>
         assert(math.abs(a - b) <= 1e-9, s"$family '$raw' ($fname, $tier): score $a vs $b")
       }
+    }
+  }
+
+  test("phrase text reads on serving: counted per query at k=5 and k=10, never above the AND matches") {
+    val st = server.current
+    for (k <- Seq(K, 2 * K); raw <- Queries(1)._2) {
+      val reads = new AtomicInteger(0)
+      val counted = new DocSidecar.Docs {
+        def apply(docId: Long): Option[DocRow] = { reads.incrementAndGet(); st.docs(docId) }
+        def meta(docId: Long): DocMeta = st.docs.meta(docId)
+      }
+      val got = st.engine.evaluate(Query.parse("phrase", raw), k, counted)
+      assert(got.map(_._1) == ranked("phrase", raw).take(k).map(_._1), s"phrase '$raw' k=$k")
+      val andMatches = ranked("q", raw).size
+      assert(reads.get > 0 && reads.get <= andMatches, s"phrase '$raw' k=$k: ${reads.get} reads")
+      info(s"phrase '$raw' k=$k: ${reads.get} text reads of $andMatches AND matches")
     }
   }
 }

@@ -41,7 +41,7 @@ class PdfSourceSpec extends SparkTestBase {
         badDs.collect().map(b => b.source_path -> b.reason).toMap)
     }
     // loan scope released its scratch cache — nothing NEW persists after it
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- base).isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(base).isEmpty)
 
     // corrupt + empty land in the bad side output; good files are unaffected
     assert(bad.keySet == Set("/corpus/corrupt.pdf", "/corpus/empty.pdf"))
