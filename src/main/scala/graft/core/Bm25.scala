@@ -30,13 +30,6 @@ object Bm25 extends Serializable {
   @inline def termPart(tf: Int, idf: Double, norm: Double): Double =
     idf * (tf * (K1 + 1.0)) / (tf + K1 * norm)
 
-  /** Upper bound of termPart over any document for this (term, tf): norm's
-    * infimum over dl >= 0 is (1 - b), so this bound is >= any realizable
-    * score contribution — the safety invariant block-max WAND relies on.
-    */
-  @inline def termPartUpperBound(maxTf: Int, idf: Double): Double =
-    idf * (maxTf * (K1 + 1.0)) / (maxTf + K1 * (1.0 - B))
-
   /** Statistics-free block score bound. Rewrite termPart per posting p as
     *   s_p = idf*(k1+1) / (1 + k1*(1-b)/tf_p + (k1*b/avgdl) * (dl_p/tf_p)),
     * which is decreasing in 1/tf_p and in dl_p/tf_p for every avgdl > 0. So

@@ -19,8 +19,10 @@ package graft.core
   * "stream table hash"); token boundaries are exactly the tokenizer's.
   *
   * The scan is single-pass over the text with a circular window of the last
-  * m tokens — no token list is materialized, so verifying a candidate is
-  * O(len(text)) time and O(m) space regardless of document size.
+  * m tokens' (start, end) offsets, compared char by char against the phrase
+  * (ASCII-lowered, as the tokenizer lowers): no token string is built, so
+  * verifying a candidate is O(len(text)) time, O(m) space and allocates only
+  * the two m-slot offset arrays regardless of document size.
   */
 object Phrase extends Serializable {
 
@@ -30,40 +32,49 @@ object Phrase extends Serializable {
   def containsPhrase(text: String, terms: IndexedSeq[String]): Boolean = {
     val m = terms.length
     if (m == 0 || text == null) return false
-    val win = new Array[String](m) // circular buffer of the last m tokens
+    val starts = new Array[Int](m) // circular buffer of the last m tokens
+    val ends = new Array[Int](m)
     var seen = 0 // tokens emitted so far
-    val cur = new java.lang.StringBuilder
 
     // Compare the window [seen-m, seen) against the phrase; called when a
     // token ends. Overlapping / repeated-prefix phrases ("a a b" in
     // "a a a b") need no restart logic — every window position is checked.
-    @inline def windowMatches(): Boolean = {
+    def windowMatches(): Boolean = {
       var j = 0
       while (j < m) {
-        if (win((seen - m + j) % m) != terms(j)) return false
+        val slot = (seen - m + j) % m
+        if (!tokenIs(text, starts(slot), ends(slot), terms(j))) return false
         j += 1
       }
       true
     }
 
-    @inline def flush(): Boolean = {
-      if (cur.length() == 0) false
-      else {
-        win(seen % m) = cur.toString
-        cur.setLength(0)
-        seen += 1
-        seen >= m && windowMatches()
-      }
-    }
-
+    var start = -1 // start of the token being read; -1 between tokens
     var i = 0
     val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (Tokenizer.isAsciiAlnum(c)) cur.append(Tokenizer.asciiLower(c))
-      else if (flush()) return true
+    while (i <= n) {
+      if (i < n && Tokenizer.isAsciiAlnum(text.charAt(i))) {
+        if (start < 0) start = i
+      } else if (start >= 0) {
+        starts(seen % m) = start
+        ends(seen % m) = i
+        seen += 1
+        start = -1
+        if (seen >= m && windowMatches()) return true
+      }
       i += 1
     }
-    flush()
+    false
+  }
+
+  /** `text[start, end)` lowered equals `term`. */
+  private def tokenIs(text: String, start: Int, end: Int, term: String): Boolean = {
+    if (end - start != term.length) return false
+    var x = 0
+    while (x < term.length) {
+      if (Tokenizer.asciiLower(text.charAt(start + x)) != term.charAt(x)) return false
+      x += 1
+    }
+    true
   }
 }

@@ -24,8 +24,9 @@ import graft.core.Bm25
   *     driver (the Lucene/ES sharding model, which is what survives 1000
   *     executors);
   *   - per-term posting lists sorted by docId, stored as delta+varint blocks
-  *     with per-block max-score metadata (BlockCodec) — block-max WAND skips
-  *     whole blocks during top-k;
+  *     with per-block bound metadata (BlockCodec); at query time WAND skips
+  *     whole blocks and doc-id windows by the exact maxima of the decoded
+  *     impacts (TermData below);
   *   - segments are APPEND-ONLY: per-term df is LOCAL to its segment (the
   *     global df used for idf is the sum of local dfs across segments at
   *     query time), block bounds are statistics-free (maxTf, min dl/tf —
@@ -100,47 +101,90 @@ object SegmentIndex {
       live: Option[Seq[Int]] = None
   )
 
+  /** One term's scored postings under ONE (idf, avgdl): `impact(i)` is
+    * `Bm25.termPart(tf, idf, norm(dl, avgdl))` of the term's i-th posting in
+    * doc order — block `b`'s postings, whose doc ids are `docIds(b)`, follow
+    * those of blocks 0 until b. `blockMax(b)` is the exact maximum of block
+    * `b`'s impacts and `termMax` that of the term: tight bounds, where the
+    * on-disk `Bm25.partBound` only dominates them. Immutable once built: a
+    * scorer holds the object it started with, so a concurrent stats change
+    * never mixes two generations' values in one query.
+    */
+  final class Impacts(
+      val idf: Double,
+      val avgdl: Double,
+      val docIds: Array[Array[Long]],
+      val impact: Array[Double],
+      val blockMax: Array[Double],
+      val termMax: Double
+  )
+
   /** One term's postings inside ONE segment. `df` is the LOCAL document
     * frequency (this segment only); the GLOBAL df used for idf is the sum of
     * local dfs across segments — which is what lets new segments be appended
-    * without rewriting old ones (the Lucene sharding model). Score bounds are
-    * derived at query time from the blocks' statistics-free (maxTf, minDl)
-    * metadata plus the CURRENT (idf, avgdl).
+    * without rewriting old ones (the Lucene sharding model). The blocks'
+    * statistics-free (maxTf, minDl/tf) metadata stays the format's bound
+    * contract; scoring reads `impacts` instead.
     *
     * Blocks load LAZILY through `blocksLoader` (a positional read of this
     * term's record — df comes from the dictionary, so loading a segment
     * touches only its term dictionary, and a query touches only its own
     * terms' postings). `lazy val` gives thread-safe load-once.
+    *
+    * Decoded state on the heap: each block's doc ids (`docIds`, decoded once
+    * per segment lifetime) and ONE `Impacts` object, memoized for the last
+    * (idf, avgdl) seen. tf and dl are not retained: a query under other
+    * stats (a reload that changed N or avgdl, a carried segment served by
+    * two generations) re-decodes the blocks from `blocks`' compressed bytes
+    * and swaps the memo. Benign racy fills: decoding is deterministic.
     */
   final class TermData(val df: Long, blocksLoader: () => IndexedSeq[BlockCodec.Block]) {
     lazy val blocks: IndexedSeq[BlockCodec.Block] = blocksLoader()
-    /** Safe score upper bound for one block under the current stats. */
-    @inline def blockBound(bi: Int, idf: Double, avgdl: Double): Double = {
-      val b = blocks(bi)
-      Bm25.partBound(b.maxTf, b.minDlOverTf, idf, avgdl)
-    }
 
-    /** Safe term-level upper bound = max over blocks. */
-    def termBound(idf: Double, avgdl: Double): Double = {
-      var m = 0.0
-      var i = 0
-      while (i < blocks.length) {
-        val ub = blockBound(i, idf, avgdl)
-        if (ub > m) m = ub
-        i += 1
-      }
-      m
-    }
+    @transient private lazy val idCache = new Array[Array[Long]](blocks.length)
+    @volatile @transient private var memo: Impacts = _
 
-    /** Decode-once cache: blocks decompress to primitive arrays on first
-      * access and are reused by every subsequent query against this (live)
-      * segment. Benign racy fill — decoding is idempotent and deterministic.
-      */
-    @transient private lazy val decodedCache = new Array[BlockCodec.DecodedBlock](blocks.length)
-    def decoded(bi: Int): BlockCodec.DecodedBlock = {
-      var d = decodedCache(bi)
-      if (d == null) { d = BlockCodec.decodePrimitive(blocks(bi)); decodedCache(bi) = d }
+    /** Block `bi`'s doc ids, decoded on first access. */
+    def docIds(bi: Int): Array[Long] = {
+      var d = idCache(bi)
+      if (d == null) { d = BlockCodec.decodePrimitive(blocks(bi)).docIds; idCache(bi) = d }
       d
+    }
+
+    /** Every posting's BM25 part under (idf, avgdl): the memo when its stats
+      * are these, else a fresh object from one decode of every block.
+      */
+    def impacts(idf: Double, avgdl: Double): Impacts = {
+      val m = memo
+      if (m != null && m.idf == idf && m.avgdl == avgdl) m
+      else { val fresh = buildImpacts(idf, avgdl); memo = fresh; fresh }
+    }
+
+    private def buildImpacts(idf: Double, avgdl: Double): Impacts = {
+      val nb = blocks.length
+      val imp = new Array[Double](blocks.iterator.map(_.count).sum)
+      val bmax = new Array[Double](nb)
+      var tmax = 0.0
+      var at = 0
+      var bi = 0
+      while (bi < nb) {
+        val d = BlockCodec.decodePrimitive(blocks(bi))
+        if (idCache(bi) == null) idCache(bi) = d.docIds
+        var mx = 0.0
+        var p = 0
+        while (p < d.length) {
+          val x = Bm25.termPart(d.tfs(p), idf, Bm25.norm(d.dls(p).toDouble, avgdl))
+          imp(at + p) = x
+          if (x > mx) mx = x
+          p += 1
+        }
+        at += d.length
+        bmax(bi) = mx
+        if (mx > tmax) tmax = mx
+        bi += 1
+      }
+      // every slot is filled now, so the scorer can share the cache itself
+      new Impacts(idf, avgdl, idCache, imp, bmax, tmax)
     }
   }
 

@@ -412,11 +412,18 @@ object SegmentSearch {
     private val parThreshold =
       math.max(1, Runtime.getRuntime.availableProcessors() / 4)
 
-    private def idfOf(t: String): Double =
-      idfCache.computeIfAbsent(t, tt => {
+    // Only present terms are cached (a null mapping stores nothing): an
+    // absent term (NaN) costs a hash probe per segment each time, and
+    // distinct unknown tokens from clients cannot grow the cache.
+    private def idfOf(t: String): Double = {
+      val v = idfCache.computeIfAbsent(t, tt => {
         val df = TermDict.df(segments, tt)
-        if (df > 0) Bm25.idf(meta.n, df) else Double.NaN // NaN marks absent
+        if (df > 0) java.lang.Double.valueOf(Bm25.idf(meta.n, df)) else null
       })
+      if (v == null) Double.NaN else v.doubleValue
+    }
+
+    private[search] def idfCacheSize: Int = idfCache.size
 
     /** The serving tier's evaluator: the top-k of `q` under the reference
       * comparator. A query with nothing to check runs top-k WAND with one
@@ -454,7 +461,7 @@ object SegmentSearch {
       * global-idf BM25, unchanged), so `pred` runs inside each segment's
       * top-k collector, only for a candidate that would enter the top-k, and
       * a rejected doc is dropped: the threshold tracks the kth-best ACCEPTED
-      * doc, block-max skipping and pivoting stay live, and the answer is the
+      * doc, block and window skipping stay live, and the answer is the
       * exact filtered top-k. `maxVerify` hard-bounds the `pred` calls: each
       * segment may check ⌈maxVerify / segments⌉ candidates, in doc order,
       * and stops there — a never-matching predicate on a frequent-term query

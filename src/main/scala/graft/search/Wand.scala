@@ -1,25 +1,40 @@
 package graft.search
 
 import graft.core.{Bm25, ParsedQuery}
-import graft.index.BlockCodec
-import graft.index.SegmentIndex.LoadedSegment
+import graft.index.SegmentIndex.{Impacts, LoadedSegment, TermData}
 
 import scala.collection.mutable
 
-/** Block-max WAND top-k scorer over one loaded doc-partitioned segment.
+/** Top-k BM25 scorer over one loaded doc-partitioned segment: block-max
+  * conjunction for AND, windowed MaxScore for OR.
   *
   * Semantics contract: identical candidate set and scores (within the 1e-9
   * tolerance) to the reference's search_scored
   * (/root/reference/src/core/search_service.cpp:196-297):
   *   - AND: doc must contain every distinct positive term — evaluated as a
-  *     conjunctive k-way cursor merge (the reference's iterated sorted-merge
+  *     leapfrog conjunction of cursors (the reference's iterated sorted-merge
   *     intersection, search_service.cpp:61-86, computes the same set);
-  *   - OR: union of term postings — evaluated with block-max WAND pruning;
+  *   - OR: union of term postings — evaluated in doc-id windows (MaxScore);
   *   - NOT terms exclude docs and never affect scores;
   *   - duplicate query terms score once per occurrence (weight = count);
   *   - ranking: rank fully, truncate last — pruning is UPPER-BOUND-SAFE with
   *     the threshold relaxed by the 1e-9 tie epsilon, so no doc that could
   *     appear in the reference's top-k (including epsilon ties) is dropped.
+  *
+  * Scoring reads impacts, not tf/dl: a posting scores `weight × impact`,
+  * where `TermData.impacts` holds every posting's `Bm25.termPart` under the
+  * query's (idf, avgdl), built once per stats change and shared by every
+  * query. Bounds are the EXACT maxima of those impacts per block and per
+  * term (the on-disk `partBound` metadata is the format's contract, not the
+  * scorer's), so a skip rule `Σ bounds <= θ` prunes only docs that score at
+  * most θ.
+  *
+  * Summation order: a doc's score is `0.0 + w1·p1 + w2·p2 + …` over the
+  * query's distinct terms in query order (`qpos`) on every path — the AND
+  * loop, the OR accumulator and therefore both tiers — so equal inputs give
+  * bit-identical scores (the add-parity contract). Bound sums that gate a
+  * skip are taken in the same order: float addition is monotone, so a sum
+  * of bounds in qpos order dominates the sum of parts in qpos order.
   *
   * Per-segment results are merged at the driver with the reference's exact
   * epsilon comparator; `heapSlack` extra results per segment cover ties at
@@ -30,6 +45,16 @@ object Wand {
   final case class SegmentHit(docId: Long, score: Double)
 
   val HeapSlack = 64
+
+  /** Doc ids per OR window: the accumulator's size. */
+  private val Window = 4096
+
+  /** Windows the OR loop skipped whole, and windows that ran with at least
+    * one non-essential cursor: test-visible evidence that both pruning paths
+    * ran (one increment per window, never per doc).
+    */
+  private[search] val windowsSkipped = new java.util.concurrent.atomic.LongAdder
+  private[search] val windowsSplit = new java.util.concurrent.atomic.LongAdder
 
   /** Cross-segment threshold shared by the per-segment scorers of ONE query
     * running in parallel: any segment's local kth-best score lower-bounds the
@@ -50,73 +75,150 @@ object Wand {
     }
   }
 
-  /** One term's cursor over its block list. curDoc == Long.MaxValue at end.
-    * Blocks decode to primitive arrays once per segment lifetime (TermData's
-    * decode cache) — queries share the decoded form, no per-posting objects.
+  /** One term's cursor over its block list; `curDoc == Long.MaxValue` at the
+    * end. A scoring cursor reads the `Impacts` it was built with (`imps`),
+    * never the term's memo again, so a stats change mid-query cannot mix two
+    * generations. A NOT-term cursor (`imps == null`) reads only doc ids,
+    * decoded per block on first touch. The current block's ids, its offset
+    * into the flat impacts and its bound live in fields; `advanceTo` gallops
+    * from the current position before it binary-searches the bracket, so
+    * adjacent targets cost O(1).
     */
-  private final class Cursor(
-      val weight: Double, // duplicate-occurrence count
-      val idf: Double,
-      val termUb: Double, // weight * max block bound
-      val avgdlV: Double,
-      td: graft.index.SegmentIndex.TermData,
-      val qpos: Int // position among the query's distinct terms (tie order)
-  ) {
+  private final class Cursor(val weight: Double, td: TermData, imps: Impacts, val qpos: Int) {
     private val blocks = td.blocks
+    private val nBlocks = blocks.length
+    /** weight × the term's exact maximum impact */
+    val termBound: Double = if (imps == null) 0.0 else weight * imps.termMax
+    private val imp: Array[Double] = if (imps == null) null else imps.impact
     private var bi = 0
-    private var decoded: BlockCodec.DecodedBlock = _
+    private var off = 0 // flat index of the current block's first posting
+    private var ids: Array[Long] = _
+    private var lastDoc = 0L // current block's last doc id
     private var pos = 0
-    loadBlock()
+    var curDoc: Long = Long.MaxValue
+    /** weight × the current block's exact maximum impact (0 at end). */
+    var blockBound: Double = 0.0
+    if (nBlocks > 0) load(0, 0)
 
-    private def loadBlock(): Unit = {
-      if (bi < blocks.length) { decoded = td.decoded(bi); pos = 0 }
-      else decoded = null
+    private def idsOf(b: Int): Array[Long] = if (imps == null) td.docIds(b) else imps.docIds(b)
+
+    private def load(b: Int, at: Int): Unit = {
+      bi = b
+      off = at
+      ids = idsOf(b)
+      if (imps != null) blockBound = weight * imps.blockMax(b)
+      lastDoc = ids(ids.length - 1)
+      pos = 0
+      curDoc = ids(0)
     }
 
-    def curDoc: Long = if (decoded == null) Long.MaxValue else decoded.docIds(pos)
+    private def finish(): Unit = { curDoc = Long.MaxValue; blockBound = 0.0; ids = null }
 
-    /** weight * current block's score upper bound (0 at end). Derived from
-      * the block's statistics-free (maxTf, minDl) under the CURRENT
-      * (idf, avgdl) — safe for any index state, including after incremental
-      * document adds.
-      */
-    def blockUb: Double =
-      if (decoded == null) 0.0
-      else weight * Bm25.partBound(blocks(bi).maxTf, blocks(bi).minDlOverTf, idf, avgdlV)
-
-    /** first docId after the current block (for shallow advance). */
+    /** First doc id after the current block (Long.MaxValue on the last). */
     def nextBlockBoundary: Long =
-      if (decoded == null) Long.MaxValue
-      else if (bi + 1 < blocks.length) blocks(bi).maxDoc + 1
-      else Long.MaxValue
+      if (curDoc == Long.MaxValue || bi + 1 >= nBlocks) Long.MaxValue else lastDoc + 1
 
     def next(): Unit = {
-      if (decoded == null) return
+      if (curDoc == Long.MaxValue) return
       pos += 1
-      if (pos >= decoded.length) { bi += 1; loadBlock() }
+      if (pos < ids.length) curDoc = ids(pos)
+      else if (bi + 1 < nBlocks) load(bi + 1, off + ids.length)
+      else finish()
     }
 
-    /** advance to the first doc >= target (block skip + in-block search). */
+    /** Advance to the first doc >= target: skip whole blocks by their
+      * metadata (a skipped block is never decoded), then gallop and
+      * binary-search inside the block.
+      */
     def advanceTo(target: Long): Unit = {
-      if (decoded == null || curDoc >= target) return
-      if (blocks(bi).maxDoc < target) {
-        while (bi < blocks.length && blocks(bi).maxDoc < target) bi += 1
-        loadBlock()
-        if (decoded == null) return
+      if (curDoc >= target) return
+      if (lastDoc < target) {
+        var b = bi + 1
+        var at = off + ids.length
+        while (b < nBlocks && blocks(b).maxDoc < target) { at += blocks(b).count; b += 1 }
+        if (b >= nBlocks) { finish(); return }
+        load(b, at)
+        if (curDoc >= target) return
       }
-      // block maxDoc >= target, so a qualifying position exists
-      val ids = decoded.docIds
+      // ids(pos) < target <= ids(last)
+      val a = ids
+      val last = a.length - 1
       var lo = pos
-      var hi = decoded.length - 1
-      while (lo < hi) {
+      var step = 1
+      var hi = lo + 1
+      while (hi < last && a(hi) < target) { lo = hi; step <<= 1; hi = lo + step }
+      if (hi > last) hi = last
+      while (lo + 1 < hi) {
         val mid = (lo + hi) >>> 1
-        if (ids(mid) < target) lo = mid + 1 else hi = mid
+        if (a(mid) < target) lo = mid else hi = mid
       }
-      pos = lo
+      pos = hi
+      curDoc = a(hi)
     }
 
-    def score(avgdl: Double): Double =
-      weight * Bm25.termPart(decoded.tfs(pos), idf, Bm25.norm(decoded.dls(pos).toDouble, avgdl))
+    def score: Double = weight * imp(off + pos)
+
+    /** weight × the max impact over this cursor's blocks holding a doc in
+      * [curDoc, end): a bound on its part of any doc in that range.
+      */
+    def windowBound(end: Long): Double = {
+      if (curDoc >= end) return 0.0
+      var m = imps.blockMax(bi)
+      var b = bi + 1
+      while (b < nBlocks && imps.docIds(b)(0) < end) {
+        if (imps.blockMax(b) > m) m = imps.blockMax(b)
+        b += 1
+      }
+      weight * m
+    }
+
+    /** Set the bit of each of this cursor's docs in [base, end), in place. */
+    def mark(base: Long, end: Long, bits: Array[Long]): Unit = {
+      if (curDoc >= end) return
+      var b = bi
+      var a = ids
+      var p = pos
+      while (true) {
+        while (p < a.length) {
+          val d = a(p)
+          if (d >= end) return
+          val o = (d - base).toInt
+          bits(o >>> 6) |= 1L << o
+          p += 1
+        }
+        b += 1
+        if (b >= nBlocks) return
+        a = imps.docIds(b)
+        p = 0
+      }
+    }
+
+    /** Add this cursor's part of each of its docs in [base, end) into `acc`
+      * and set the doc's bit; stops on the first doc >= end.
+      */
+    def scanAdd(base: Long, end: Long, acc: Array[Double], bits: Array[Long]): Unit = {
+      while (curDoc < end) {
+        val o = (curDoc - base).toInt
+        acc(o) += weight * imp(off + pos)
+        bits(o >>> 6) |= 1L << o
+        next()
+      }
+    }
+
+    /** Add this cursor's part of the candidates `cand(0 until nc)` (window
+      * offsets, ascending) it holds, galloping to each; then move to `end`.
+      */
+    def addAt(base: Long, end: Long, cand: Array[Int], nc: Int, acc: Array[Double]): Unit = {
+      var j = 0
+      while (j < nc && curDoc < end) {
+        val o = cand(j)
+        val d = base + o
+        if (curDoc < d) advanceTo(d)
+        if (curDoc == d) acc(o) += weight * imp(off + pos)
+        j += 1
+      }
+      advanceTo(end)
+    }
   }
 
   /** Ascending-probe NOT-term exclusion over block cursors. */
@@ -159,7 +261,7 @@ object Wand {
     * `accept` (null = none) is a row check that only RESTRICTS candidates:
     * it runs only for a candidate that would enter the heap or the tie
     * buffer, and a rejected doc is dropped — so the threshold, and with it
-    * block-max skipping and pivoting, tracks the kth-best ACCEPTED doc: the
+    * block and window skipping, tracks the kth-best ACCEPTED doc: the
     * exact top-k of the accepted set, with pruning. `maxChecks` bounds the
     * calls to `accept`; once spent, `exhausted` ends the scan. That best
     * effort is deterministic when `shared` is null: candidates then arrive
@@ -243,53 +345,55 @@ object Wand {
   ): Seq[SegmentHit] = {
     if (pq.terms.isEmpty) return Nil
 
-    // weights = occurrence counts in query order
-    val weights = mutable.LinkedHashMap[String, Int]()
-    pq.terms.foreach(t => weights.update(t, weights.getOrElse(t, 0) + 1))
-    val distinct = weights.keys.toIndexedSeq
+    // distinct terms in query order; weight = occurrence count
+    val distinct = pq.terms.distinct
+    // AND requires every distinct term present in the CORPUS-wide postings.
+    // A term absent from this segment but present globally still means no
+    // local doc can match (docs are whole within a segment); a term with
+    // GLOBAL df == 0 kills the query everywhere. Either way: all distinct
+    // terms must have postings here for any local match.
+    if (!pq.isOr && !distinct.forall(seg.terms.contains)) return Nil
+    val counts =
+      if (distinct.length == pq.terms.length) null
+      else pq.terms.groupMapReduce(identity)(_ => 1)(_ + _)
 
     // NOT-term exclusion via monotone cursors: candidates are produced in
-    // ascending docId order by both the conjunctive merge and WAND (cursors
-    // only advance), so exclusion probes gallop instead of materializing a
-    // hash set of the whole (often dense) NOT posting list per query.
+    // ascending docId order by both the conjunction and the OR windows, so
+    // exclusion probes gallop instead of materializing a hash set of the
+    // whole (often dense) NOT posting list per query.
     val excluded = new Excluder(
-      pq.notTerms.distinct.flatMap(t => seg.terms.get(t))
-        .map(td => new Cursor(0.0, 0.0, 0.0, avgdl, td, 0)))
+      pq.notTerms.distinct.flatMap(t => seg.terms.get(t)).map(td => new Cursor(0.0, td, null, 0)))
 
-    val cursors: IndexedSeq[Cursor] = distinct.zipWithIndex.flatMap { case (t, qi) =>
+    val cursors = new mutable.ArrayBuffer[Cursor](distinct.length)
+    var qi = 0
+    distinct.foreach { t =>
       // local presence implies global df >= 1, so idfs always has the term
-      seg.terms.get(t).map { td =>
-        val w = weights(t).toDouble
-        val idf = idfs(t)
-        new Cursor(w, idf, w * td.termBound(idf, avgdl), avgdl, td, qi)
+      seg.terms.get(t).foreach { td =>
+        val w = if (counts == null) 1.0 else counts(t).toDouble
+        cursors += new Cursor(w, td, td.impacts(idfs(t), avgdl), qi)
       }
+      qi += 1
     }
-
-    if (!pq.isOr) {
-      // AND requires every distinct term present in the CORPUS-wide postings.
-      // A term absent from this segment but present globally still means no
-      // local doc can match (docs are whole within a segment); a term with
-      // GLOBAL df == 0 kills the query everywhere. Either way: all distinct
-      // terms must have a cursor here for any local match.
-      if (cursors.length < distinct.length) return Nil
-      andMerge(cursors, excluded, avgdl, new TopK(k, shared, accept, maxChecks))
-    } else {
-      orWand(cursors, excluded, avgdl, new TopK(k, shared, accept, maxChecks))
+    val top = new TopK(k, shared, accept, maxChecks)
+    if (!pq.isOr) andMerge(cursors.toArray, excluded, top)
+    else {
+      // taken off the thread while in use and put back only on a normal
+      // return: a check that throws mid-window leaves it dirty, and the
+      // next call on this thread allocates a clean one
+      val w = scratch.get
+      if (w != null) scratch.set(null)
+      val ws = if (w != null) w else new Scratch
+      val r = orWindows(cursors.toArray, excluded, top, ws)
+      scratch.set(ws)
+      r
     }
   }
 
-  /** Conjunctive k-way merge with galloping; exact scoring per matched doc.
-    * Hot-loop discipline (same as orWand): a plain array and index loops —
-    * the old `exists`/`foreach` combinators allocated an iterator per loop
-    * iteration and were the top leaf frames of the query phase in JFR.
+  /** Leapfrog conjunction with block-max skipping; exact scoring per
+    * matched doc. Cursors stay in query order, so both the score and the
+    * block-bound sum add in qpos order.
     */
-  private def andMerge(
-      cursorsIn: IndexedSeq[Cursor],
-      excluded: Excluder,
-      avgdl: Double,
-      top: TopK
-  ): Seq[SegmentHit] = {
-    val cursors: Array[Cursor] = cursorsIn.toArray
+  private def andMerge(cursors: Array[Cursor], excluded: Excluder, top: TopK): Seq[SegmentHit] = {
     val n = cursors.length
     if (n == 0) return Nil
     var continue = true
@@ -322,7 +426,7 @@ object Wand {
         if (theta > Double.NegativeInfinity) {
           var ubs = 0.0
           var j = 0
-          while (j < n) { ubs += cursors(j).blockUb; j += 1 }
+          while (j < n) { ubs += cursors(j).blockBound; j += 1 }
           if (ubs <= theta) {
             var d = Long.MaxValue
             var m = 0
@@ -348,7 +452,7 @@ object Wand {
           if (!excluded.contains(target)) {
             var s = 0.0
             var j = 0
-            while (j < n) { s += cursors(j).score(avgdl); j += 1 }
+            while (j < n) { s += cursors(j).score; j += 1 }
             top.offer(target, s)
             if (top.exhausted) continue = false
           }
@@ -365,137 +469,163 @@ object Wand {
     top.results
   }
 
-  /** Disjunctive block-max WAND.
-    *
-    * Hot-loop discipline (this runs millions of iterations per dense query
-    * under 50-way load): cursors live in a plain array kept curDoc-ascending
-    * by an in-place insertion pass — no per-iteration allocation (the old
-    * `sortBy` built a fresh buffer every loop, pure GC churn at saturation).
-    * When laggards must reach the pivot, only the HIGHEST-impact one (max
-    * termUb) advances per iteration — the classic WAND selection: if the
-    * pivot doc fails, the cheap low-impact lists were never decoded.
+  /** The OR loop's per-thread working set: one window's score accumulator
+    * and candidate bitset (kept zeroed between windows), the candidate
+    * offsets, and per-cursor bound scratch grown to the widest query seen.
     */
-  private def orWand(
-      cursorsIn: IndexedSeq[Cursor],
-      excluded: Excluder,
-      avgdl: Double,
-      top: TopK
-  ): Seq[SegmentHit] = {
-    val arr: Array[Cursor] = cursorsIn.filter(_.curDoc != Long.MaxValue).toArray
-    var n = arr.length
-    // Sort key is (curDoc, qpos): cursors parked on the SAME doc stay in
-    // query order, so the evaluate branch sums term parts in exactly the
-    // reference's query-order summation (bit-identical scores).
-    java.util.Arrays.sort(arr, 0, n, Ordering.by[Cursor, (Long, Int)](c => (c.curDoc, c.qpos)))
-
-    /** Restore ascending order after advances (in-place insertion pass —
-      * nearly-sorted input => ~O(n)) and drop exhausted cursors off the tail.
-      */
-    def repair(): Unit = {
-      var i = 1
-      val hi = n
-      while (i < hi) {
-        val c = arr(i)
-        val d = c.curDoc
-        val q = c.qpos
-        var j = i - 1
-        while (j >= 0 && (arr(j).curDoc > d || (arr(j).curDoc == d && arr(j).qpos > q))) {
-          arr(j + 1) = arr(j); j -= 1
-        }
-        arr(j + 1) = c
-        i += 1
-      }
-      while (n > 0 && arr(n - 1).curDoc == Long.MaxValue) n -= 1
+  private final class Scratch {
+    val acc = new Array[Double](Window)
+    val bits = new Array[Long](Window / 64)
+    val cand = new Array[Int](Window)
+    var bound = new Array[Double](16)
+    var sorted = new Array[Double](16)
+    var nonEssential = new Array[Boolean](16)
+    def fit(n: Int): Unit = if (bound.length < n) {
+      bound = new Array[Double](n); sorted = new Array[Double](n); nonEssential = new Array[Boolean](n)
     }
+  }
+  private val scratch = new ThreadLocal[Scratch]
 
-    while (n > 0) {
+  /** Disjunction as windowed MaxScore (Turtle & Flood 1995, evaluated in
+    * doc-id windows as Lucene's MaxScoreBulkScorer does). Each window
+    * starts at the lowest cursor doc and spans `Window` doc ids:
+    *   - each cursor's window bound is weight × the max impact of its blocks
+    *     that overlap the window; if their sum (qpos order) is <= θ, no doc
+    *     in the window can compete and the window is skipped;
+    *   - otherwise the cursors sorted by bound split at the longest prefix
+    *     whose bound sum is <= θ: a doc found only in those NON-ESSENTIAL
+    *     cursors cannot compete, so the candidates are the essential
+    *     cursors' docs in the window;
+    *   - the cursors then add `weight × impact` into the accumulator in
+    *     qpos order — an essential cursor by scanning, a non-essential one
+    *     by galloping to each candidate — so each doc's sum is the same
+    *     `0.0 + p(q1) + p(q2) + …` the conjunction computes;
+    *   - candidates go to `TopK` in ascending doc order, so `accept`, its
+    *     budget and NOT exclusion see docs in doc order, as in the AND loop.
+    * θ is read once per window; it only rises, so the window's split stays
+    * safe for every doc in it.
+    */
+  private def orWindows(cursors: Array[Cursor], excluded: Excluder, top: TopK, ws: Scratch): Seq[SegmentHit] = {
+    val n = cursors.length
+    ws.fit(n)
+    val acc = ws.acc
+    val bits = ws.bits
+    val cand = ws.cand
+    val bound = ws.bound
+    val sorted = ws.sorted
+    val ne = ws.nonEssential
+    while (true) {
+      var base = Long.MaxValue
+      var i = 0
+      while (i < n) { val d = cursors(i).curDoc; if (d < base) base = d; i += 1 }
+      if (base == Long.MaxValue) return top.results
+      val end = base + Window
       val theta = top.threshold
 
-      // pivot: first prefix whose term-UB sum exceeds theta
-      var acc = 0.0
-      var pivotIdx = -1
-      var i = 0
-      while (i < n && pivotIdx < 0) {
-        acc += arr(i).termUb
-        if (acc > theta) pivotIdx = i
+      var termSum = 0.0
+      var winSum = 0.0
+      i = 0
+      while (i < n) {
+        val c = cursors(i)
+        if (c.curDoc != Long.MaxValue) termSum += c.termBound
+        bound(i) = c.windowBound(end)
+        winSum += bound(i)
         i += 1
       }
-      if (pivotIdx < 0) return top.results // nothing can beat theta
-
-      val pivotDoc = arr(pivotIdx).curDoc
-
-      // block-max check over the pivot prefix
-      var blockUb = 0.0
-      var j = 0
-      while (j <= pivotIdx) { blockUb += arr(j).blockUb; j += 1 }
-
-      // Skip window target (computed only when the block-max predicate
-      // holds — it is an O(prefix) loop on the hot path): the earliest
-      // prefix block boundary, pivot+1, and the first post-pivot cursor's
-      // doc. The post-pivot cap is a SAFETY bound, not just an
-      // optimization: a doc at or past it is covered by cursors whose UB
-      // is NOT in the prefix blockUb sum.
-      //
-      // r6 FIX: the round-5 code forced forward progress here with
-      // `if (d <= arr(0).curDoc) d = arr(0).curDoc + 1` — which OVERRODE
-      // the post-pivot cap exactly when a post-pivot cursor was parked on
-      // the SAME doc as arr(0) (all cursors aligned on one doc, pivot
-      // mid-prefix): the doc's true bound includes the post-pivot
-      // cursor's contribution, exceeds theta, and the doc was skipped
-      // unsafely — reproduced as missing members of large equal-score tie
-      // groups (RoundTripSoak / WandTieSpec). When the window cannot
-      // advance safely (skipTarget <= arr(0).curDoc), fall through to
-      // normal evaluation instead.
-      var skipTarget = Long.MinValue
-      if (blockUb <= theta && theta > Double.NegativeInfinity) {
-        var d = pivotDoc + 1
-        var m = 0
-        while (m <= pivotIdx) {
-          val b = arr(m).nextBlockBoundary
-          if (b < d) d = b
-          m += 1
-        }
-        if (pivotIdx + 1 < n && arr(pivotIdx + 1).curDoc < d)
-          d = arr(pivotIdx + 1).curDoc
-        skipTarget = d
-      }
-
-      if (skipTarget > arr(0).curDoc) {
-        // Safe skip: every doc in [arr(0).curDoc, skipTarget) is covered
-        // only by the prefix cursors' CURRENT blocks (UB sum <= theta).
-        arr(0).advanceTo(skipTarget)
-        repair()
-      } else if (arr(0).curDoc == pivotDoc) {
-        // fully evaluate pivotDoc
-        var m = 0
-        if (!excluded.contains(pivotDoc)) {
-          var s = 0.0
-          while (m < n && arr(m).curDoc == pivotDoc) {
-            s += arr(m).score(avgdl)
-            m += 1
-          }
-          top.offer(pivotDoc, s)
-          if (top.exhausted) return top.results
-        } else {
-          while (m < n && arr(m).curDoc == pivotDoc) m += 1
-        }
-        var a = 0
-        while (a < m) { arr(a).next(); a += 1 }
-        repair()
+      if (termSum <= theta) return top.results // no remaining doc can compete
+      if (winSum <= theta) {
+        windowsSkipped.increment()
+        i = 0
+        while (i < n) { cursors(i).advanceTo(end); i += 1 }
       } else {
-        // advance ONE laggard — the highest-impact cursor below the pivot —
-        // to pivotDoc; if the pivot doc ends up failing, the other laggards'
-        // postings were never touched.
-        var best = 0
-        var m = 1
-        while (m < pivotIdx && arr(m).curDoc < pivotDoc) {
-          if (arr(m).termUb > arr(best).termUb) best = m
-          m += 1
+        val nNe = splitNonEssential(n, theta, bound, sorted, ne)
+        var nc = 0
+        if (nNe > 0) {
+          windowsSplit.increment()
+          i = 0
+          while (i < n) { if (!ne(i)) cursors(i).mark(base, end, bits); i += 1 }
+          nc = collect(bits, cand)
         }
-        arr(best).advanceTo(pivotDoc)
-        repair()
+        i = 0
+        while (i < n) {
+          val c = cursors(i)
+          if (nNe > 0 && ne(i)) c.addAt(base, end, cand, nc, acc)
+          else c.scanAdd(base, end, acc, bits)
+          i += 1
+        }
+        if (nNe == 0) nc = collect(bits, cand)
+        else java.util.Arrays.fill(bits, 0L)
+
+        var stop = false
+        var j = 0
+        while (j < nc) {
+          val o = cand(j)
+          val s = acc(o)
+          acc(o) = 0.0
+          if (!stop && !excluded.contains(base + o)) {
+            top.offer(base + o, s)
+            stop = top.exhausted
+          }
+          j += 1
+        }
+        if (stop) return top.results
       }
     }
     top.results
+  }
+
+  /** Mark in `ne` the longest prefix of the cursors sorted by (bound, qpos)
+    * whose bound sum is <= θ; returns its size. The sum that decides is
+    * re-taken over the marked cursors in qpos order, the order scores add
+    * in, and the prefix shrinks until that sum is <= θ too.
+    */
+  private def splitNonEssential(
+      n: Int, theta: Double, bound: Array[Double], sorted: Array[Double], ne: Array[Boolean]): Int = {
+    java.util.Arrays.fill(ne, 0, n, false)
+    if (theta == Double.NegativeInfinity) return 0
+    System.arraycopy(bound, 0, sorted, 0, n)
+    java.util.Arrays.sort(sorted, 0, n)
+    var p = 0
+    var run = 0.0
+    while (p < n && run + sorted(p) <= theta) { run += sorted(p); p += 1 }
+    while (p > 0) {
+      val cut = sorted(p - 1)
+      var below = 0
+      var i = 0
+      while (i < n) { if (bound(i) < cut) below += 1; i += 1 }
+      var ties = p - below
+      var s = 0.0
+      i = 0
+      while (i < n) {
+        ne(i) = bound(i) < cut || (bound(i) == cut && ties > 0 && { ties -= 1; true })
+        if (ne(i)) s += bound(i)
+        i += 1
+      }
+      if (s <= theta) return p
+      java.util.Arrays.fill(ne, 0, n, false)
+      p -= 1
+    }
+    0
+  }
+
+  /** Move the set bits' offsets into `cand` in ascending order, clearing
+    * `bits`; returns the count.
+    */
+  private def collect(bits: Array[Long], cand: Array[Int]): Int = {
+    var nc = 0
+    var w = 0
+    while (w < bits.length) {
+      var x = bits(w)
+      if (x != 0L) {
+        bits(w) = 0L
+        while (x != 0L) {
+          cand(nc) = (w << 6) + java.lang.Long.numberOfTrailingZeros(x)
+          nc += 1
+          x &= x - 1
+        }
+      }
+      w += 1
+    }
+    nc
   }
 }

@@ -4,15 +4,17 @@ import java.nio.file.Files
 import scala.util.Random
 
 import graft.core.RefEngine
-import graft.index.SegmentIndex
+import graft.index.{BlockCodec, SegmentIndex}
 import graft.search.SegmentSearch
 
 /** Deep randomized soak: WAND-over-segments vs the pure RefEngine oracle on
   * random corpora, random bucket counts, random queries (AND/OR/NOT/dup
   * terms/absent terms), every k ∈ {1, 3, 10, ∞} — far past the committed
-  * suite's 6 fixed-seed trials. Also add-parity each trial: the same corpus
-  * split into base+incremental must serve bit-identical scores to the full
-  * rebuild. Usage: `sbt 'Test/runMain graft.SoakMain <trials> [seed]'`.
+  * suite's slice (`graft.search.WandKernelSpec`), drawn from the same
+  * generator (`KernelCorpus`): each trial picks a shape (small single-block,
+  * dense multi-block, Zipf-skewed) and a codec (varint, PFOR). Also
+  * add-parity: the same corpus split into base+incremental must serve
+  * bit-identical scores to the full rebuild. Usage: `sbt 'Test/runMain graft.SoakMain <trials> [seed]'`.
   * Prints one line per 20 trials and exits nonzero on the first mismatch.
   */
 object SoakMain {
@@ -24,49 +26,32 @@ object SoakMain {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new Random(seed)
-    val vocabFull = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
-      "golf", "hotel", "india", "juliet", "kilo", "lima", "x9", "y", "zz7")
 
     def docsDF(docs: Seq[(Long, String)]) = docs.toDF("doc_id", "text")
 
     var t = 0
     while (t < trials) {
-      val vocab = vocabFull.take(4 + rnd.nextInt(vocabFull.size - 3))
-      val nDocs = 3 + rnd.nextInt(80)
-      val docs = (1L to nDocs.toLong).map { id =>
-        id -> Seq.fill(rnd.nextInt(25))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      }
+      val shape = KernelCorpus.Shapes(rnd.nextInt(KernelCorpus.Shapes.size))
+      val codec = if (rnd.nextBoolean()) BlockCodec.CodecVarint else BlockCodec.CodecPfor
+      val corpus = KernelCorpus.corpus(shape, rnd)
+      val docs = corpus.docs
+      val nDocs = docs.size
       val buckets = 1 + rnd.nextInt(5)
       val dir = { val p = Files.createTempDirectory("graft-soak"); p.toString }
-      SegmentIndex.build(docsDF(docs), dir, buckets)
+      SegmentIndex.build(docsDF(docs), dir, buckets, codec = codec)
       val meta = SegmentIndex.readMeta(dir)
       val segs = SegmentIndex.liveSegmentFiles(dir, meta).map(SegmentIndex.loadSegment(_))
       val ref = new RefEngine
       docs.foreach { case (id, x) => ref.addDocument(id, x) }
 
-      def randTerm(): String =
-        if (rnd.nextInt(8) == 0) "absent" + rnd.nextInt(3) else vocab(rnd.nextInt(vocab.size))
-      def randQuery(): String = {
-        val n = 1 + rnd.nextInt(4)
-        val parts = Seq.fill(n) {
-          val tq = randTerm()
-          rnd.nextInt(6) match {
-            case 0 => "-" + tq
-            case 1 => tq + " OR"
-            case _ => tq
-          }
-        }
-        parts.mkString(" ")
-      }
-
-      val queries = Seq.fill(8)(randQuery())
+      val queries = KernelCorpus.queries(corpus, rnd, 8)
       for (q <- queries) {
         val exp = ref.searchScored(q)
-        for (k <- Seq(1, 3, 10, Int.MaxValue)) {
+        for (k <- KernelCorpus.Ks) {
           val got = SegmentSearch.searchBatchInMemory(segs, meta, Seq(q), k)(0)
           val expK = exp.take(k)
           if (got.map(_._1) != expK.map(_._1)) {
-            System.err.println(s"[soak] RANK MISMATCH seed=$seed trial=$t q='$q' k=$k\n got=$got\n exp=$expK\n docs=$docs")
+            System.err.println(s"[soak] RANK MISMATCH seed=$seed trial=$t $shape/$codec q='$q' k=$k\n got=$got\n exp=$expK\n docs=$docs")
             sys.exit(1)
           }
           got.zip(expK).foreach { case ((_, a), (_, b)) =>
@@ -83,7 +68,7 @@ object SoakMain {
         val cut = 1 + rnd.nextInt(nDocs - 2)
         val (base, delta) = docs.splitAt(cut)
         val dirInc = Files.createTempDirectory("graft-soak-inc").toString
-        SegmentIndex.build(docsDF(base), dirInc, buckets)
+        SegmentIndex.build(docsDF(base), dirInc, buckets, codec = codec)
         SegmentIndex.addDocuments(docsDF(delta), dirInc, newBuckets = 1 + rnd.nextInt(3))
         val mInc = SegmentIndex.readMeta(dirInc)
         val segsInc = SegmentIndex.liveSegmentFiles(dirInc, mInc).map(SegmentIndex.loadSegment(_))
@@ -107,7 +92,7 @@ object SoakMain {
           val exp = ref.searchScored(q)
           val got = eng.searchScored(q)
           if (got.map(_._1) != exp.map(_._1)) {
-            System.err.println(s"[soak] DATAFLOW RANK MISMATCH seed=$seed trial=$t q='$q'\n got=$got\n exp=$exp")
+            System.err.println(s"[soak] DATAFLOW RANK MISMATCH seed=$seed trial=$t $shape/$codec q='$q'\n got=$got\n exp=$exp")
             sys.exit(1)
           }
           got.zip(exp).foreach { case ((_, a), (_, b)) =>

@@ -38,6 +38,35 @@ class PhraseSpec extends SparkTestBase {
     assert(Phrase.containsPhrase("solo", terms("solo"))) // single-term phrase
   }
 
+  test("containsPhrase: seeded differential against the token-list definition") {
+    // the definition the matcher must equal, token list and all
+    def reference(text: String, ts: IndexedSeq[String]): Boolean =
+      Tokenizer.tokenize(text).sliding(ts.length).contains(ts)
+    val rnd = new scala.util.Random(31)
+    val words = Vector("a", "b", "ab", "ba", "Ab", "B", "x1", "X1")
+    val seps = Vector(" ", "  ", "-", "\t", ".", "é", "日本", "\u00e9A")
+    def text(): String = (0 until rnd.nextInt(12)).map { _ =>
+      (if (rnd.nextInt(6) == 0) "" else words(rnd.nextInt(words.size))) + seps(rnd.nextInt(seps.size))
+    }.mkString
+    var matched = 0
+    for (_ <- 0 until 4000) {
+      val t = text()
+      val phrase: IndexedSeq[String] =
+        if (rnd.nextInt(10) == 0) Vector("a", "", "b").take(1 + rnd.nextInt(3)) // an empty token never matches
+        else if (rnd.nextBoolean()) {
+          // a window of the text's own token stream, so matches are common
+          val toks = Tokenizer.tokenize(t).toIndexedSeq
+          if (toks.isEmpty) Vector("a")
+          else { val m = 1 + rnd.nextInt(math.min(3, toks.size)); val at = rnd.nextInt(toks.size - m + 1); toks.slice(at, at + m) }
+        } else Vector.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.size)).toLowerCase)
+      val want = reference(t, phrase)
+      if (want) matched += 1
+      assert(Phrase.containsPhrase(t, phrase) == want, s"text='$t' phrase=$phrase")
+    }
+    assert(matched > 1000, s"only $matched matching cases")
+    assert(Phrase.containsPhrase("a a a b", terms("a a b")) == reference("a a a b", terms("a a b")))
+  }
+
   test("phraseScoredDF: filters AND candidates to adjacent ones, score parity") {
     val eng = new SearchEngine(IndexBuilder.build(docsDF(Seq(
       1L -> "alpha bravo charlie", // adjacent
