@@ -1,5 +1,7 @@
 package graft.app
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 import graft.search.{Query, SegmentSearch}
@@ -15,14 +17,32 @@ import graft.search.{Query, SegmentSearch}
   * `wildcard:<pat>` run the matching extension family (SURVEY §2.12);
   * plain queries keep the reference-exact language. All of them run as ONE
   * distributed batch (`SegmentSearch.evaluate`).
+  *
+  * Same exit-code discipline as the other jobs: 2 usage (missing arguments,
+  * a non-integer k), 3 runtime (a dir without index_meta.json, checked
+  * before Spark starts; a failed query batch).
   */
 object QueryJob {
-  def main(args: Array[String]): Unit = {
-    if (args.contains("--help")) { println("usage: QueryJob <indexDir> <k> <query>..."); return }
-    if (args.length < 3) { System.err.println("usage: QueryJob <indexDir> <k> <query>..."); sys.exit(2) }
+  private val Usage = "usage: QueryJob <indexDir> <k> <query>..."
+
+  private def usageErr(msg: String): Int = {
+    System.err.println(s"QueryJob: $msg")
+    System.err.println(Usage)
+    2
+  }
+  private def runtimeErr(msg: String): Int = { System.err.println(s"QueryJob: $msg"); 3 }
+
+  def run(args: Array[String]): Int = {
+    if (args.contains("--help")) { println(Usage); return 0 }
+    if (args.length < 3) return usageErr("missing required <indexDir> <k> <query>")
     val indexDir = args(0)
-    val k = math.max(1, args(1).toInt)
+    val k = args(1).toIntOption match {
+      case Some(v) => math.max(1, v)
+      case None => return usageErr(s"<k> must be an integer: ${args(1)}")
+    }
     val queries = args.drop(2).toSeq
+    if (!Files.exists(Paths.get(indexDir, "index_meta.json")))
+      return runtimeErr(s"not an index (no index_meta.json): $indexDir")
 
     // under spark-submit the master comes from the launcher; when driven
     // directly (sbt runMain / tests) fall back to local[*]
@@ -41,8 +61,14 @@ object QueryJob {
         val hits = byInput(i).map { case (d, s) => s"""{"docId":$d,"score":$s}""" }.mkString("[", ",", "]")
         println(s"""{"query":"${esc(q)}","results":$hits}""")
       }
+      0
     } catch {
-      case e: Throwable => System.err.println(s"query job failed: ${e.getMessage}"); sys.exit(3)
+      case e: Exception => runtimeErr(s"query job failed: ${e.getMessage}")
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val code = run(args)
+    if (code != 0) sys.exit(code)
   }
 }

@@ -2,7 +2,6 @@ package graft.app
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.concurrent.{ExecutorService, Executors}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
@@ -573,7 +572,8 @@ object SearchServer {
   /** Build one serving generation from an on-disk index dir: pinned segments
     * + sidecar-backed doc store (dictionaries only — NO corpus text on the
     * heap). Missing sidecars are backfilled with a short-lived local Spark
-    * session (one column-pruned docstore pass), so any index — including one
+    * session (one exchange-free pass over the missing buckets' docstore
+    * files), so any index — including one
     * just produced by CompactJob — becomes servable; steady-state loads and
     * reloads after addDocuments touch no Spark at all.
     *
@@ -592,8 +592,7 @@ object SearchServer {
         k -> prev.flatMap(_.segmentsByKey.get(k)).getOrElse(SegmentIndex.loadSegment(f))
       }
     val segs = segEntries.map(_._2).toIndexedSeq
-    val missing = segs.map(_.bucket).filterNot(b =>
-      Files.exists(DocSidecar.sidecarPath(indexDir, b)))
+    val missing = DocSidecar.missingBuckets(indexDir, meta)
     if (missing.nonEmpty) {
       // reuse a live session when embedded (specs, benches) — never stop a
       // session this method did not create; standalone serving spins up a

@@ -4,8 +4,10 @@ import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Encoders, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Positional-read document sidecar for the SERVING tier — the fix for the
   * searchd memory model (the reference pins every document's full text in RAM,
@@ -23,9 +25,10 @@ import org.apache.spark.sql.functions._
   * docs; a metadata filter reads only the pinned fields, never a row.
   *
   * Sidecars are DERIVED data: generated lazily at server load when missing
-  * (one column-pruned pass over the docstore parquet — off the build hot
-  * path, so index-build throughput is untouched) and maintained eagerly by
-  * addDocuments for delta buckets once an index has them.
+  * (one column-pruned, exchange-free pass over the missing buckets' docstore
+  * files — off the build hot path, so index-build throughput is untouched)
+  * and maintained eagerly by addDocuments and compactBuckets for their new
+  * buckets once an index has them.
   */
 object DocSidecar {
 
@@ -86,43 +89,43 @@ object DocSidecar {
     sidecarFiles(indexDir).filter(f => live(sidecarBucket(f)))
   }
 
-  /** Write sidecars for every docstore bucket missing one (idempotent; safe
-    * to call at every server load). Returns the buckets written.
+  /** Live segment buckets that have no sidecar yet — what `ensure` and the
+    * serving load (`SearchServer.loadState`) backfill. A directory listing:
+    * no Spark job. Orphan buckets of a crashed add and dead pre-compaction
+    * buckets are not live, so they get no sidecar.
     */
-  def ensure(spark: SparkSession, indexDir: String): Seq[Int] = {
-    // LIVE buckets only: docstore part-files of a crashed add (bucket >=
-    // meta.buckets) or of dead pre-compaction buckets may still be on disk;
-    // they are not part of the committed index and get no sidecar
-    val live = SegmentIndex.liveBucketSet(SegmentIndex.readMeta(indexDir))
-    val buckets = spark.read.parquet(s"$indexDir/docstore")
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSeq.sorted
-      .filter(live)
-    val missing = buckets.filterNot(b => Files.exists(sidecarPath(indexDir, b)))
-    if (missing.isEmpty) Nil else writeBuckets(spark, indexDir, missing)
-  }
+  def missingBuckets(indexDir: String, meta: SegmentIndex.Meta): Seq[Int] =
+    SegmentIndex.liveSegmentFiles(indexDir, meta).map(SegmentIndex.bucketOf)
+      .filterNot(b => Files.exists(sidecarPath(indexDir, b)))
 
-  /** Write sidecars for exactly `target` buckets (used by addDocuments for
-    * the delta buckets and by ensure for the missing set). One column-pruned
-    * pass: (bucket, doc_id, text, source, lang), re-co-located per bucket,
-    * streamed to `.tmp` + atomic rename — same persistence discipline as
-    * segments.
+  /** Write sidecars for every live bucket missing one (idempotent; safe to
+    * call at every server load — on a complete index it starts no Spark
+    * job). Returns the buckets written.
     */
-  def writeBuckets(spark: SparkSession, indexDir: String, target: Seq[Int]): Seq[Int] = {
-    if (target.isEmpty) return Nil
-    val rows = spark.read.parquet(s"$indexDir/docstore")
-      .filter(col("bucket").isInCollection(target))
-      .select(col("bucket"), col("doc_id"), col("text"), col("source"), col("lang"))
-      .repartition(target.size, col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("doc_id"))
-    val out = indexDir
-    rows.mapPartitions(it => writePartition(it, out))(Encoders.scalaInt)
-      .collect().toSeq.sorted
-  }
+  def ensure(spark: SparkSession, indexDir: String): Seq[Int] =
+    writeBuckets(spark, indexDir, missingBuckets(indexDir, SegmentIndex.readMeta(indexDir)))
 
-  /** Stream one shuffle partition (sorted by bucket, doc_id; possibly several
-    * buckets per partition under hash collisions) into one sidecar per bucket.
+  /** Write sidecars for exactly `target` buckets (used by addDocuments and
+    * compactBuckets for their new buckets, and by ensure for the missing
+    * set). Exchange-free: each task streams one docstore bucket file's
+    * (doc_id, text, source, lang) through [[SegmentIndex.scanBuckets]] to
+    * `.tmp` + atomic rename — same persistence discipline as segments.
     */
-  private def writePartition(it: Iterator[Row], indexDir: String): Iterator[Int] = {
+  def writeBuckets(spark: SparkSession, indexDir: String, target: Seq[Int]): Seq[Int] =
+    if (target.isEmpty) Nil
+    else {
+      val out = indexDir
+      SegmentIndex.scanBuckets(spark, s"$indexDir/docstore",
+        Seq(col("text"), col("source"), col("lang")), col("bucket").isInCollection(target))(
+        it => writePartition(it, out)).sorted
+    }
+
+  /** Stream one scan partition — (bucket, doc_id, text, source, lang) rows,
+    * grouped by bucket and doc_id-sorted within it (the docstore file
+    * layout, guarded by the scan, so `BucketReader`'s binary search over
+    * `docIds` holds) — into one sidecar per bucket.
+    */
+  private def writePartition(it: Iterator[InternalRow], indexDir: String): Iterator[Int] = {
     val written = scala.collection.mutable.ArrayBuffer[Int]()
     val buffered = it.buffered
     while (buffered.hasNext) {
@@ -139,9 +142,9 @@ object DocSidecar {
         while (buffered.hasNext && buffered.head.getInt(0) == bucket) {
           val r = buffered.next()
           val off = counting.count
-          writeStr(out, r.getString(2)) // text (int length — no 64 KiB cap)
-          writeStr(out, r.getString(3)) // source
-          writeStr(out, r.getString(4)) // lang
+          writeStr(out, r.getUTF8String(2)) // text (int length — no 64 KiB cap)
+          writeStr(out, r.getUTF8String(3)) // source
+          writeStr(out, r.getUTF8String(4)) // lang
           dict += ((r.getLong(1), off, (counting.count - off).toInt))
         }
         val dictOffset = counting.count
@@ -159,8 +162,8 @@ object DocSidecar {
     written.iterator
   }
 
-  private def writeStr(out: DataOutputStream, s: String): Unit = {
-    val b = (if (s == null) "" else s).getBytes(StandardCharsets.UTF_8)
+  private def writeStr(out: DataOutputStream, s: UTF8String): Unit = {
+    val b = (if (s == null) "" else s.toString).getBytes(StandardCharsets.UTF_8)
     out.writeInt(b.length)
     out.write(b)
   }

@@ -5,11 +5,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.reflect.ClassTag
 import scala.util.chaining._
 
 import graft.core.Bm25
@@ -301,12 +302,9 @@ object SegmentIndex {
       // them (the serving tier regenerates at load via DocSidecar.ensure)
       DocSidecar.sidecarFiles(outDir).foreach(f => Files.deleteIfExists(Paths.get(f)))
       storeWriter(withDlTfbin(
-        docs.select(
+        rangeLayout(docs.select(
           Seq(col("doc_id").cast("long").as("doc_id"), col("text")) ++
-            IndexBuilder.metaColumns(docs): _*)
-          .repartitionByRange(buckets, col("doc_id"))
-          .sortWithinPartitions(col("doc_id"))
-          .withColumn("bucket", spark_partition_id()),
+            IndexBuilder.metaColumns(docs): _*), buckets),
         codeAware
       )
         .withColumn("sha", sha2(col("text"), 256)))
@@ -333,11 +331,10 @@ object SegmentIndex {
     // df-denormalizing join — a second full-postings exchange — disappears
     // too. And the docstore is ALREADY the partitioning this job needs: job
     // 1 range-partitioned rows by doc_id into exactly one doc_id-sorted
-    // parquet file per bucket, so reading ONE FILE PER TASK (maxPartitionBytes
-    // >= the largest file so nothing splits; openCostInBytes equally large so
-    // nothing packs) hands each write task its whole bucket in order — the
-    // round-3 bucket re-shuffle of the entire tf-payload corpus is gone.
-    val manifests = writeSegmentsFileAligned(spark, storePath, outDir, agg.map(_.lineage), codec)
+    // parquet file per bucket, so `scanBuckets` reads ONE FILE PER TASK and
+    // hands each write task its whole bucket in order — the round-3 bucket
+    // re-shuffle of the entire tf-payload corpus is gone.
+    val manifests = writeSegments(spark, storePath, outDir, agg.map(_.lineage), codec)
 
     // corpus scalars: from the resume aggregation when it ran, else from the
     // write tasks' own counts (fresh manifests always carry sumDl)
@@ -377,12 +374,10 @@ object SegmentIndex {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("source"), col("lang"), col("dl").cast("int").as("dl"),
         call_function("map_to_tfbin", col("tfmap")).as("tfbin"))
-      .repartitionByRange(buckets, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .withColumn("bucket", spark_partition_id())
+      .pipe(rangeLayout(_, buckets))
       .withColumn("sha", sha2(col("text"), 256))
       .pipe(storeWriter).mode("overwrite").parquet(storePath)
-    val manifests = writeSegmentsFileAligned(spark, storePath, outDir, None, codec)
+    val manifests = writeSegments(spark, storePath, outDir, None, codec)
     val (n, sumDl) = (manifests.map(_.nDocs).sum, manifests.map(_.sumDl).sum)
     val avgdl = if (n == 0) 0.0 else sumDl.toDouble / n
     writeMeta(outDir, Meta(SchemaVersion, n, sumDl, avgdl, buckets, BlockCodec.BlockSize,
@@ -430,34 +425,22 @@ object SegmentIndex {
     sweepBuckets(spark, outDir, b => b >= offset)
 
     withDlTfbin(
-      delta
-        .select(
-          Seq(col("doc_id").cast("long").as("doc_id"), col("text")) ++
-            IndexBuilder.metaColumns(delta): _*)
-        .repartitionByRange(newBuckets, col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .withColumn("bucket", spark_partition_id() + lit(offset)),
+      rangeLayout(delta.select(
+        Seq(col("doc_id").cast("long").as("doc_id"), col("text")) ++
+          IndexBuilder.metaColumns(delta): _*), newBuckets, offset),
       codeAware
     )
       .withColumn("sha", sha2(col("text"), 256))
       .pipe(storeWriter).mode("append").parquet(storePath)
 
-    // stats + lineage over the NEW buckets only (column-pruned, no text read)
-    val newStore = spark.read.parquet(storePath).filter(col("bucket") >= offset)
-    val agg = bucketLineage(newStore)
+    // exchange-free segment pass over the delta's own files (one per new
+    // bucket, as in a fresh build). Nothing can be skipped — the sweep above
+    // deleted every manifest at or above offset — and the delta's n/sumDl
+    // are the figures its manifests carry.
+    val manifests = writeSegments(spark, storePath, outDir, None, old.codec, col("bucket") >= offset)
 
-    // compact-row exchange, in-task inversion (see build job 3)
-    val rows = segmentRows(newStore, newBuckets)
-    val out = outDir
-    val codec = old.codec
-    val manifests = rows.queryExecution.toRdd
-      .mapPartitions(it => writePartition(it, out, Some(agg.lineage), codec))
-      .collect()
-      .toSeq
-      .sortBy(_.bucket)
-
-    val n = old.n + agg.n
-    val sumDl = old.sumDl + agg.sumDl
+    val n = old.n + manifests.map(_.nDocs).sum
+    val sumDl = old.sumDl + manifests.map(_.sumDl).sum
     val avgdl = if (n == 0) 0.0 else sumDl.toDouble / n
     writeMeta(outDir, Meta(SchemaVersion, n, sumDl, avgdl, offset + newBuckets, BlockCodec.BlockSize,
       old.codec, codeAware, batchId.orElse(old.lastBatchId),
@@ -494,9 +477,7 @@ object SegmentIndex {
       // compaction) or orphan parts (crashed add) are not in the index
       .filter(col("bucket").isInCollection(liveBucketSet(meta)))
       .drop("bucket")
-      .repartitionByRange(buckets, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .withColumn("bucket", spark_partition_id())
+      .pipe(rangeLayout(_, buckets))
       .pipe(storeWriter).mode("overwrite").parquet(dstStore)
 
     val agg = bucketLineage(spark.read.parquet(dstStore))
@@ -507,7 +488,7 @@ object SegmentIndex {
 
     // exchange-free segment pass: the compacted docstore just written above
     // is one doc_id-sorted file per bucket, same as a fresh build's
-    val manifests = writeSegmentsFileAligned(spark, dstStore, dstDir, Some(agg.lineage), meta.codec)
+    val manifests = writeSegments(spark, dstStore, dstDir, Some(agg.lineage), meta.codec)
 
     // lastBatchId travels with the data: if the caller swaps the compacted
     // dir in under a live streaming checkpoint, replayed batches stay no-ops
@@ -518,8 +499,8 @@ object SegmentIndex {
 
   /** Docstore rows' per-bucket (lineage XOR, doc count) — the XOR of a
     * 60-bit slice of sha256(doc_id:sha) per doc — plus their total doc count
-    * and dl sum. `writePartition` computes the same figures in-task for a
-    * fresh build; resume, add and compact compare against this form.
+    * and dl sum. `writePartition` computes the same figures in-task, into
+    * the manifests; build resume and compact compare against this form.
     */
   private def bucketLineage(store: DataFrame): BucketLineage = {
     val rows = store
@@ -663,7 +644,7 @@ object SegmentIndex {
       .pipe(storeWriter).mode("overwrite").parquet(staging)
 
     // 1b. segment-B from the staged file (exchange-free single-task read)
-    val ms = writeSegmentsFileAligned(spark, staging, outDir, None, meta.codec)
+    val ms = writeSegments(spark, staging, outDir, None, meta.codec)
     require(ms.size == 1 && ms.head.bucket == newBucket,
       s"compactBuckets: expected one bucket $newBucket, got ${ms.map(_.bucket)}")
     val m = ms.head
@@ -761,7 +742,7 @@ object SegmentIndex {
     */
   private def storeWriter(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
     df.write
-      .option("compression", sys.props.getOrElse("graft.docstore.codec", "snappy"))
+      .option("compression", "snappy")
       .option("parquet.enable.dictionary#text", "false")
       .option("parquet.enable.dictionary#sha", "false")
       .option("parquet.enable.dictionary#tfbin", "false")
@@ -779,72 +760,87 @@ object SegmentIndex {
     TfBin.encode(ks, cs, m.size)
   }
 
-  /** Compact doc rows (bucket, doc_id, dl:int, tfbin) hashed to their bucket
-    * and doc_id-sorted within it. The write task inverts to term-major IN
-    * MEMORY ([[Inverter]]) — no exploded-posting rows exist anywhere: the
-    * explode would multiply the sorted row count ~40x and push it through
-    * Spark's external sorter, whose page-allocation contention produced 4x
-    * task-time variance at 32 threads (the measured straggler that set the
-    * whole stage wall). Sorting ~20k (int, long) doc keys per bucket is
-    * radix-cheap; posting order falls out of doc order.
+  /** The one writer of the docstore layout: range-partitioned by doc_id,
+    * doc_id-sorted, the partition id (+ `offset`, an add's first new bucket)
+    * frozen as `bucket`. Written as is, that is one doc_id-sorted parquet
+    * file per bucket — what [[scanBuckets]] reads.
     */
-  private def segmentRows(store: DataFrame, buckets: Int): DataFrame =
-    store
-      .select(col("bucket"), col("doc_id"), col("dl").cast("int").as("dl"), col("tfbin"), col("sha"))
-      .repartition(buckets, col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("doc_id"))
+  private def rangeLayout(rows: DataFrame, buckets: Int, offset: Int = 0): DataFrame =
+    rows
+      .repartitionByRange(buckets, col("doc_id"))
+      .sortWithinPartitions(col("doc_id"))
+      .withColumn("bucket", spark_partition_id() + lit(offset))
 
-  /** The EXCHANGE-FREE segment pass shared by build and compact: the
-    * docstore at `storePath` is one doc_id-sorted parquet file per bucket,
-    * so each write task reads exactly one file (maxPartitionBytes pinned
-    * above the largest file so nothing splits; openCostInBytes equally
-    * large so nothing packs) and inverts it in place.
+  /** The one reader of the docstore layout: each task reads exactly one
+    * bucket file (maxPartitionBytes pinned above the largest file so nothing
+    * splits; openCostInBytes equally large so nothing packs), so writers need
+    * no exchange. `write` consumes one task's (bucket, doc_id, `columns`...)
+    * rows of the buckets `keep` selects; its results return in task order.
+    * A layout breach fails loudly: a bucket's rows in two runs of one task
+    * or in two tasks (two files), or a doc_id out of order within a bucket —
+    * a silent one would truncate a segment or break block bounds and the
+    * sidecar's binary search.
     */
-  private def writeSegmentsFileAligned(
+  private[index] def scanBuckets[T: ClassTag](
       spark: SparkSession,
       storePath: String,
-      outDir: String,
-      lineage: Option[Map[Int, (Long, Long)]],
-      codec: String = BlockCodec.CodecVarint
-  ): Seq[Manifest] = {
+      columns: Seq[Column],
+      keep: Column = lit(true)
+  )(write: Iterator[InternalRow] => Iterator[T]): Seq[T] = {
     val prevMaxPart = spark.conf.get("spark.sql.files.maxPartitionBytes")
     val prevOpenCost = spark.conf.get("spark.sql.files.openCostInBytes")
     try {
-      val maxFileBytes = {
-        import scala.jdk.CollectionConverters._
-        val sizes = Files.list(Paths.get(storePath)).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(Files.size).toSeq
-        if (sizes.isEmpty) 1L else sizes.max
-      }
-      val noSplit = (maxFileBytes + (1L << 20)).toString
+      val sizes = Option(new java.io.File(storePath).listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).map(_.length)
+      val noSplit = ((if (sizes.isEmpty) 1L else sizes.max) + (1L << 20)).toString
       spark.conf.set("spark.sql.files.maxPartitionBytes", noSplit)
       spark.conf.set("spark.sql.files.openCostInBytes", noSplit)
-      val rows = spark.read.parquet(storePath)
-        .select(col("bucket"), col("doc_id"), col("dl").cast("int").as("dl"), col("tfbin"), col("sha"))
-      val out = outDir
-      val ms = rows.queryExecution.toRdd
-        .mapPartitions(it => writePartition(it, out, lineage, codec))
+      val perTask = spark.read.parquet(storePath).filter(keep)
+        .select(col("bucket") +: col("doc_id") +: columns: _*)
+        .queryExecution.toRdd
+        .mapPartitions { it =>
+          val seen = scala.collection.mutable.HashSet[Int]()
+          var cur = Int.MinValue
+          var prevDocId = Long.MinValue
+          val out = write(it.map { r =>
+            val b = r.getInt(0)
+            val docId = r.getLong(1)
+            if (b != cur) {
+              require(seen.add(b), s"bucket $b rows are not contiguous — docstore layout violated")
+              cur = b
+            } else require(docId > prevDocId, s"doc_id order violated in bucket $b ($docId after $prevDocId)")
+            prevDocId = docId
+            r
+          }).toVector
+          Iterator((seen, out))
+        }
         .collect()
-        .toSeq
-        .sortBy(_.bucket)
-      // cross-partition twin of the in-task contiguity guard: a bucket split
-      // across two scan partitions would produce two manifests (and two
-      // racing segment writes) — fail loudly instead
-      require(ms.map(_.bucket).distinct.size == ms.size,
-        s"bucket split across scan partitions: ${ms.map(_.bucket).groupBy(identity).collect { case (b, g) if g.size > 1 => b }.toSeq.sorted}")
-      ms
+      val split = perTask.toSeq.flatMap(_._1).groupBy(identity).collect { case (b, g) if g.size > 1 => b }
+      require(split.isEmpty,
+        s"bucket split across docstore files: ${split.toSeq.sorted.mkString(",")} — docstore layout violated")
+      perTask.toSeq.flatMap(_._2)
     } finally {
       spark.conf.set("spark.sql.files.maxPartitionBytes", prevMaxPart)
       spark.conf.set("spark.sql.files.openCostInBytes", prevOpenCost)
     }
   }
 
+  /** The segment pass of every writer: one segment per bucket `keep` selects. */
+  private def writeSegments(spark: SparkSession, storePath: String, outDir: String,
+      lineage: Option[Map[Int, (Long, Long)]], codec: String, keep: Column = lit(true)): Seq[Manifest] = {
+    val out = outDir
+    scanBuckets(spark, storePath, Seq(col("dl").cast("int").as("dl"), col("tfbin"), col("sha")), keep)(
+      it => writePartition(it, out, lineage, codec)).sortBy(_.bucket)
+  }
+
   /** Per-bucket in-memory term inversion — the reference's `add_document`
     * loop (/root/reference/src/core/inverted_index.cpp:21-41) run once per
     * bucket on the executor. Zero-copy probes: the packed tfbin's term bytes are
     * compared in place and copied only on a term's FIRST occurrence in the
-    * bucket; postings live in per-term primitive arrays.
+    * bucket; postings live in per-term primitive arrays. No exploded-posting
+    * rows exist anywhere: the explode would multiply the sorted row count
+    * ~40x and push it through Spark's external sorter, whose page-allocation
+    * contention produced 4x task-time variance at 32 threads.
     *
     * MEMORY BOUND (the scale contract): peak per concurrent write task =
     * this bucket's postings as primitive arrays (~16 B/posting, i.e. ~3-4x
@@ -941,30 +937,28 @@ object SegmentIndex {
   }
 
   /** Stream one scan partition's rows — (bucket, doc_id, dl, tfbin, sha),
-    * bucket-grouped and doc_id-sorted (the docstore file layout) — into one
-    * segment per bucket. Per-bucket lineage XOR, doc count, and dl sum are
-    * computed HERE from the same rows (sha256 per row is noise next to the
-    * inversion), so a fresh build needs no separate stats job. `lineage` is
-    * the RESUME map: when present, buckets whose existing manifest matches it
-    * are skipped without inverting.
+    * bucket-grouped and doc_id-sorted (the docstore file layout, guarded by
+    * [[scanBuckets]]) — into one segment per bucket. Per-bucket lineage XOR,
+    * doc count, and dl sum are computed HERE from the same rows (sha256 per
+    * row is noise next to the inversion), so no write path needs a separate
+    * stats job. `lineage` is the RESUME map: when present, buckets whose
+    * existing manifest matches it are skipped without inverting.
     */
   private def writePartition(
       it: Iterator[InternalRow],
       outDir: String,
       lineage: Option[Map[Int, (Long, Long)]],
-      codec: String = BlockCodec.CodecVarint
+      codec: String
   ): Iterator[Manifest] = {
     val pfor = codec == BlockCodec.CodecPfor
     val results = scala.collection.mutable.ArrayBuffer[Manifest]()
     val md = MessageDigest.getInstance("SHA-256")
-    val seenBuckets = scala.collection.mutable.HashSet[Int]()
     var cur = Int.MinValue
     var skipping = false
     var inv: Inverter = null
     var nDocs = 0L
     var sumDl = 0L
     var lineageXor = 0L
-    var prevDocId = Long.MinValue
 
     def flush(): Unit =
       if (cur != Int.MinValue && !skipping) results += writeBucket(inv, cur, nDocs, sumDl, lineageXor, outDir, pfor)
@@ -974,11 +968,7 @@ object SegmentIndex {
       val b = r.getInt(0)
       if (b != cur) {
         flush()
-        // Loud layout guard: rows must arrive bucket-GROUPED (one run per
-        // bucket) — a revisited bucket means the scan was not file/exchange
-        // aligned and a silent write would truncate the segment.
-        require(seenBuckets.add(b), s"bucket $b rows are not contiguous — docstore layout violated")
-        cur = b; nDocs = 0L; sumDl = 0L; lineageXor = 0L; prevDocId = Long.MinValue
+        cur = b; nDocs = 0L; sumDl = 0L; lineageXor = 0L
         inv = null
         // Skip ONLY when the existing manifest provably describes this run's
         // data: same lineage XOR and doc count as the current corpus slice.
@@ -994,11 +984,6 @@ object SegmentIndex {
       }
       if (!skipping) {
         val docId = r.getLong(1)
-        // Loud order guard: postings order falls out of doc order; unsorted
-        // input would silently break block bounds and binary search.
-        require(docId > prevDocId,
-          s"doc_id order violated in bucket $cur ($docId after $prevDocId)")
-        prevDocId = docId
         val dl = r.getInt(2)
         val bin = r.getBinary(3)
         // loud guard: a null tfbin means a null text reached the docstore
@@ -1226,7 +1211,7 @@ object SegmentIndex {
   def liveBucketSet(meta: Meta): Set[Int] =
     meta.live.map(_.toSet).getOrElse((0 until meta.buckets).toSet)
 
-  private def bucketOf(segFile: String): Int =
+  private[index] def bucketOf(segFile: String): Int =
     segFile.replaceAll(".*segment-(\\d+)\\.bin$", "$1").toInt
 
   /** Committed-generation segment files: the directory listing filtered to

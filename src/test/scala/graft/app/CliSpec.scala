@@ -57,6 +57,17 @@ class CliSpec extends AnyFunSuite {
     assert(IndexJob.run(Array("/root/testdata/sf0.001/documents.parquet", tmp(), "4")) == 3)
   }
 
+  // ------------------------------------------------------------- QueryJob
+  test("QueryJob: usage errors exit 2 (a non-integer k too), a non-index dir exits 3 before Spark") {
+    assert(QueryJob.run(Array("--help")) == 0)
+    assert(QueryJob.run(Array.empty) == 2)
+    assert(QueryJob.run(Array("idx", "5")) == 2) // no query
+    assert(QueryJob.run(Array("idx", "abc", "q")) == 2) // k is not an integer
+    assert(QueryJob.run(Array(tmp(), "abc", "q")) == 2) // usage outranks the index check
+    assert(QueryJob.run(Array(tmp(), "5", "q")) == 3) // exists, but no index_meta.json
+    assert(QueryJob.run(Array("/definitely/not/here", "5", "q")) == 3)
+  }
+
   // ------------------------------------------------------------- TenantJob
   test("TenantJob: usage errors exit 2, missing corpus exits 3") {
     assert(TenantJob.run(Array.empty) == 2)
