@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.SparkSession
 import scala.collection.parallel.CollectionConverters._
 
 import graft.core.{Bm25, ParsedQuery, QueryParser}
@@ -9,12 +9,17 @@ import graft.index.SegmentIndex.LoadedSegment
 
 /** Query serving over on-disk segments (the scale path / EP2).
   *
-  * Batch mode (how QPS is measured): queries are broadcast, segments are a
-  * Dataset of file paths fanned out over executors; each task loads (or hits
-  * the executor-local cache of) its segments and runs block-max WAND locally;
-  * per-(query, segment) top-k heaps come back — k+slack rows per query per
-  * segment, NOT candidate sets — and the driver merges with the reference's
-  * epsilon comparator. No shuffle on the query path at all.
+  * Batch mode (how QPS is measured) is at most two Spark jobs and no
+  * exchange. The dictionary pass reads each live segment's `TermDict` once
+  * for the global dfs the batch needs; a warm `q` batch skips it. The
+  * fan-out slices the segment files into tasks; each task scores every query
+  * against its segments with block-max WAND, one `Wand.SharedTheta` per
+  * query across them, and returns per query only the hits within
+  * `Bm25.ScoreTieEpsilon` of its k-th best score. The driver merges those
+  * with the reference's epsilon comparator (`mergeHits`). Rows reaching the
+  * driver are at most tasks × queries × (k + live ties), and tasks are at
+  * most 4 × `defaultParallelism` for any segment count, so the driver merge
+  * is bounded by the cluster, not by the index.
   *
   * In-memory mode: all segments pinned in the JVM (the searchd serving model)
   * for single-query latency benchmarks.
@@ -57,12 +62,26 @@ object SegmentSearch {
   @transient private lazy val sidecarCache =
     new FileCache[DocSidecar.BucketReader](DocSidecar.openBucket, _.close())
 
-  /** Driver-side global-df cache, keyed by index state (dir, n, sumDl,
-    * segment-file fingerprint).
+  /** Driver-side global dfs of scored terms: one slot per index dir,
+    * replaced when the dir's index state (n, sumDl, segment-file
+    * fingerprint) changes, so a superseded state's map does not outlive it.
     */
+  private final case class DfCache(state: (Long, Long, String),
+      dfs: java.util.concurrent.ConcurrentHashMap[String, Long])
   @transient private lazy val dfCaches =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Long, String), java.util.concurrent.ConcurrentHashMap[String, Long]]()
+    new java.util.concurrent.ConcurrentHashMap[String, DfCache]()
+
+  private[search] def dfCacheSize: Int = dfCaches.size
+
+  /** The df map of `indexDir`'s current state (`files` are its live segments). */
+  private def dfCache(indexDir: String, meta: SegmentIndex.Meta, files: Seq[String]) = {
+    val fp = SegmentIndex.sha256Hex(
+      files.map(SegmentIndex.fileKey).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val state = (meta.n, meta.sumDl, fp)
+    dfCaches.compute(indexDir, (_, cur) =>
+      if (cur != null && cur.state == state) cur
+      else DfCache(state, new java.util.concurrent.ConcurrentHashMap[String, Long]())).dfs
+  }
 
   /** Executor-local load-once per segment file identity (see `FileCache`). */
   def loadCached(path: String): LoadedSegment = segmentCache.get(path)
@@ -75,20 +94,12 @@ object SegmentSearch {
     sp.resolveSibling(sp.getFileName.toString.replace("segment-", "docs-")).toString
   }
 
-  /** Segment-file fan-out Dataset: files sliced straight into tasks via
-    * `parallelize(files, n)` — r6: the old `createDataset(...).repartition(n)`
-    * paid a full Exchange stage (map + fetch) in EVERY batch job before any
-    * search work started. Slice count keeps the one-segment-per-task
-    * granularity up to 4x core count (straggler rebalance), grouping only
-    * past that.
+  /** The segment files sliced straight into tasks: one segment per task up
+    * to 4x the core count (straggler rebalance), grouped only past that.
     */
-  private def segmentFileDs(
-      spark: SparkSession,
-      files: Seq[String]
-  ): org.apache.spark.sql.Dataset[String] = {
-    val n = math.max(1, math.min(files.size, 4 * spark.sparkContext.defaultParallelism))
-    spark.createDataset(spark.sparkContext.parallelize(files, n))(Encoders.STRING)
-  }
+  private def segmentTasks(spark: SparkSession, files: Seq[String]) =
+    spark.sparkContext.parallelize(files,
+      math.max(1, math.min(files.size, 4 * spark.sparkContext.defaultParallelism)))
 
   final case class QueryHit(qid: Int, docId: Long, score: Double)
 
@@ -133,17 +144,20 @@ object SegmentSearch {
   /** The batch tier's evaluator: all queries against all live segments, per
     * query (by position) the exact top-k under the reference comparator.
     *
-    * Phase 0 (only for `Expand` queries): ONE distributed dictionary scan
-    * resolves every expansion — vocabulary never leaves the executors.
-    * Phase 1 (tiny): global df (sum of per-segment local dfs) for the
-    * batch's scored terms; it warms the executor segment caches. Phase 2:
-    * zero-shuffle fan-out — per segment task, block-max WAND per query. A
-    * query's candidate check (`Query.accept`: the metadata filter, a
-    * phrase's adjacency, or both) runs inside WAND's top-k collector against
-    * the segment's sibling doc sidecar, only for candidates that would enter
-    * the top-k, with no budget: the answer is exact. The sidecar opens only
-    * when some query has a check. Then the distributed per-query merge — the
-    * only exchange.
+    * Job 1, the dictionary pass (`dictionaryPass`): the global df of every
+    * scored term not yet cached for this index state and of every term an
+    * expansion matches; a batch with every term cached and no expansion
+    * starts no job. Job 2, the fan-out: each task runs block-max WAND per
+    * query over the segments it holds, with one `Wand.SharedTheta` per query
+    * across them. A query's candidate check (`Query.accept`: the metadata
+    * filter, a phrase's adjacency, or both) runs inside WAND's top-k
+    * collector against the segment's sibling doc sidecar, only for
+    * candidates that would enter the top-k; the sidecar opens only when some
+    * query has a check. There is no check budget, so the threshold a
+    * segment publishes is the k-th best ACCEPTED score and sharing it is
+    * exact. Per query a task returns only the hits within
+    * `Bm25.ScoreTieEpsilon` of its k-th best score (`withinTies`), and the
+    * driver merges those rows with `mergeHits`. No exchange.
     */
   def evaluate(
       spark: SparkSession,
@@ -154,64 +168,85 @@ object SegmentSearch {
   ): Map[Int, Seq[(Long, Double)]] = {
     val meta = SegmentIndex.readMeta(indexDir)
     val files = SegmentIndex.liveSegmentFiles(indexDir, meta)
-    val avgdl = meta.avgdl
-
-    val expansions = queries.collect { case Query.Expand(e) => e }.distinct
-    val matched = dictionaryScan(spark, files, expansions).keys.toSeq.sorted
-    val plans: Seq[(Int, Query, ParsedQuery)] = queries.zipWithIndex.map { case (q, i) =>
-      (i, q, Query.scored(q, e => matched.filter(e.matches)))
-    }
-    if (files.isEmpty || plans.forall(_._3.isEmpty))
+    val dfs = dictionaryPass(spark, indexDir, meta, files,
+      queries.flatMap(Query.scored(_, _ => Nil).terms).distinct,
+      queries.collect { case Query.Expand(e) => e }.distinct)
+    // every term an expansion matches is present, so it is among these
+    val present = dfs.keys.toSeq.sorted
+    val plans = queries.map(Query.scored(_, e => present.filter(e.matches))).toIndexedSeq
+    if (files.isEmpty || plans.forall(_.terms.isEmpty))
       return queries.indices.map(_ -> Seq.empty[(Long, Double)]).toMap
-    if (plans.exists { case (_, q, _) => Query.accept(q, filter, DocSidecar.Docs.empty) != null })
+    if (queries.exists(Query.accept(_, filter, DocSidecar.Docs.empty) != null))
       DocSidecar.ensure(spark, indexDir) // idempotent; sidecars are derived data
 
-    val fileDs = segmentFileDs(spark, files)
-    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, plans.flatMap(_._3.terms).distinct)
-    val bc = spark.sparkContext.broadcast((plans, idfs, filter))
+    val idfs = dfs.map { case (t, df) => t -> Bm25.idf(meta.n, df) }
+    val avgdl = meta.avgdl
     val kk = math.max(1, k)
-
-    val hits = fileDs
-      .mapPartitions { paths =>
-        val (qs, idfMap, flt) = bc.value
-        paths.flatMap { p =>
-          val seg = loadCached(p)
-          lazy val sidecar = sidecarCache.get(sidecarOf(p))
-          qs.iterator.flatMap { case (qid, q, pq) =>
-            Wand.searchSegment(seg, pq, idfMap, avgdl, kk, accept = Query.accept(q, flt, sidecar)).iterator
-              .map(h => QueryHit(qid, h.docId, h.score))
-          }
+    val qs = queries.toIndexedSeq
+    val hits = segmentTasks(spark, files).mapPartitions { paths =>
+      val thetas = plans.map(_ => new Wand.SharedTheta)
+      val found = plans.map(_ => scala.collection.mutable.ArrayBuffer.empty[Wand.SegmentHit])
+      paths.foreach { p =>
+        val seg = loadCached(p)
+        lazy val sidecar = sidecarCache.get(sidecarOf(p))
+        plans.indices.foreach { i =>
+          found(i) ++= Wand.searchSegment(seg, plans(i), idfs, avgdl, kk, thetas(i),
+            Query.accept(qs(i), filter, sidecar))
         }
-      }(Encoders.product[QueryHit])
-
-    mergeDistributed(hits, queries.size, k)
+      }
+      plans.indices.iterator.flatMap(i => withinTies(found(i), kk).map(h => QueryHit(i, h.docId, h.score)))
+    }.collect()
+    mergeHits(hits, queries.size, k)
   }
 
-  /** The batch tier's ONE dictionary pass: every term of a live segment
-    * that some expansion matches (`TermDict.expand` on each segment's own
-    * dictionary), with its GLOBAL df (sum of the segments' local dfs). Only
-    * matched (term, local df) rows leave the executors — a
-    * vocabulary-bounded, usually tiny set — and sum driver-side.
+  /** The hits that can still reach a top-k: those scoring at least the k-th
+    * best score minus `Bm25.ScoreTieEpsilon` (`Wand`'s `TopK` tie rule, one
+    * level up). Every other hit has k hits ahead of it under the reference
+    * comparator.
     */
-  private def dictionaryScan(
+  private def withinTies(hits: scala.collection.Seq[Wand.SegmentHit], k: Int): Iterator[Wand.SegmentHit] =
+    if (hits.size <= k) hits.iterator
+    else {
+      val kth = hits.map(_.score).sorted(Ordering.Double.TotalOrdering)(hits.size - k)
+      hits.iterator.filter(_.score >= kth - Bm25.ScoreTieEpsilon)
+    }
+
+  /** The batch tier's ONE dictionary pass: the global df (the sum of the
+    * live segments' local dfs) of each present term of `terms` and of every
+    * term an expansion in `exps` matches (`TermDict.expand` on each
+    * segment's own dictionary). Each task reads the dictionaries of the
+    * segments it holds once; only (term, local df) rows of present terms
+    * leave it. The dfs of `terms` are cached per index state (`dfCache`), so
+    * only uncached terms are looked up, and a pass with none and no
+    * expansion starts no job.
+    */
+  private def dictionaryPass(
       spark: SparkSession,
+      indexDir: String,
+      meta: SegmentIndex.Meta,
       files: Seq[String],
+      terms: Seq[String],
       exps: Seq[Query.Expansion]
-  ): Map[String, Long] =
-    if (files.isEmpty || exps.isEmpty) Map.empty
-    else segmentFileDs(spark, files)
-      .mapPartitions { paths =>
-        paths.flatMap { p =>
+  ): Map[String, Long] = {
+    val cache = dfCache(indexDir, meta, files)
+    val missing = terms.filterNot(cache.containsKey)
+    val found =
+      if (files.isEmpty || (missing.isEmpty && exps.isEmpty)) Map.empty[String, Long]
+      else segmentTasks(spark, files)
+        .mapPartitions(_.flatMap { p =>
           val dict = loadCached(p).dict
-          exps.flatMap(dict.expand(_, Int.MaxValue)).distinct.map(t => (t, dict.df(t)))
-        }
-      }(Encoders.product[(String, Long)])
-      .collect()
-      .groupMapReduce(_._1)(_._2)(_ + _)
+          (missing ++ exps.flatMap(dict.expand(_, Int.MaxValue))).distinct
+            .map(t => (t, dict.df(t))).filter(_._2 > 0)
+        })
+        .collect()
+        .groupMapReduce(_._1)(_._2)(_ + _)
+    missing.foreach(t => cache.put(t, found.getOrElse(t, 0L)))
+    found ++ terms.map(t => t -> cache.get(t)).filter(_._2 > 0)
+  }
 
   /** Distributed did-you-mean — the batch twin of the dataflow
     * `SearchEngine.didYouMeanDF` and the serving `ServingEngine.didYouMean`:
-    * the dictionary scan collects the Levenshtein<=maxDist candidates of
+    * the dictionary pass collects the Levenshtein<=maxDist candidates of
     * every query term with their global dfs, then the shared pick rule:
     * exact presence wins, else argmax global df (ties byte-lex), else the
     * term itself with df 0. Output rows: (pos, term, suggestion, df).
@@ -225,8 +260,7 @@ object SegmentSearch {
     val terms = QueryParser.parse(query).terms
     // zero live segments (empty corpus / streaming dir before the first
     // commit): every term falls through to (itself, df 0), as on serving
-    val dfs = dictionaryScan(spark, SegmentIndex.liveSegmentFiles(indexDir),
-      terms.distinct.map(Query.Fuzzy(_, maxDist)))
+    val dfs = expansions(spark, indexDir, terms.distinct.map(Query.Fuzzy(_, maxDist)))
     terms.zipWithIndex.map { case (t, i) =>
       val near = Query.Fuzzy(t, maxDist)
       val pick = pickSuggestion(t, dfs.view.filter { case (cand, _) => near.matches(cand) })
@@ -236,7 +270,7 @@ object SegmentSearch {
 
   /** Distributed prefix suggestions — EXTENSION (deferred Phase 9
     * "autocomplete"), the batch twin of `ServingEngine.suggest`: the
-    * dictionary scan's prefix matches ranked by global df desc, term asc.
+    * dictionary pass's prefix matches ranked by global df desc, term asc.
     */
   def suggestBatch(
       spark: SparkSession,
@@ -246,79 +280,16 @@ object SegmentSearch {
   ): Seq[(String, Long)] =
     Query.parse("prefix", prefix) match {
       case Query.Expand(e) =>
-        dictionaryScan(spark, SegmentIndex.liveSegmentFiles(indexDir), Seq(e))
-          .toSeq.sortBy { case (t, df) => (-df, t) }.take(k)
+        expansions(spark, indexDir, Seq(e)).toSeq.sortBy { case (t, df) => (-df, t) }.take(k)
       case _ => Nil
     }
 
-  final case class RankedHit(qid: Int, rank: Int, docId: Long, score: Double)
-
-  /** Phase 1 of a batch: global df (sum of per-segment local dfs) for the
-    * batch's positive terms. Results are cached per INDEX STATE — (dir, n,
-    * sumDl) plus a fingerprint of the segment files' identities, so any
-    * add/compact/in-place rebuild (even one that happens to preserve n and
-    * sumDl) changes the key. Repeated batches against a warm index skip the
-    * job entirely.
+  /** Every term of `indexDir`'s live segments that one of `exps` matches,
+    * with its global df: the dictionary pass with no scored terms.
     */
-  private def batchIdfs(
-      spark: SparkSession,
-      indexDir: String,
-      meta: SegmentIndex.Meta,
-      files: Seq[String],
-      fileDs: org.apache.spark.sql.Dataset[String],
-      allTerms: Seq[String]
-  ): Map[String, Double] = {
-    val filesFp = SegmentIndex.sha256Hex(
-      files.map(SegmentIndex.fileKey).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val cacheKey = (indexDir, meta.n, meta.sumDl, filesFp)
-    val dfCache = dfCaches.computeIfAbsent(
-      cacheKey, _ => new java.util.concurrent.ConcurrentHashMap[String, Long]())
-    val missing = allTerms.filterNot(dfCache.containsKey)
-    if (missing.nonEmpty) {
-      val tbc = spark.sparkContext.broadcast(missing)
-      val found = fileDs
-        .mapPartitions { paths =>
-          paths.flatMap { p =>
-            val seg = loadCached(p)
-            tbc.value.iterator.flatMap(t => seg.terms.get(t).map(td => (t, td.df)))
-          }
-        }(Encoders.product[(String, Long)])
-        .collect()
-        .groupBy(_._1)
-        .map { case (t, v) => t -> v.map(_._2).sum }
-      missing.foreach(t => dfCache.put(t, found.getOrElse(t, 0L)))
-    }
-    allTerms.flatMap { t =>
-      val df = dfCache.get(t)
-      if (df > 0) Some(t -> Bm25.idf(meta.n, df)) else None
-    }.toMap
-  }
-
-  /** Per-query merge runs DISTRIBUTED (one group per query, epsilon
-    * comparator inside) so the driver collects only nQueries * k final rows
-    * — a driver-side merge would grow with segment count and anti-scale.
-    */
-  private def mergeDistributed(
-      hits: org.apache.spark.sql.Dataset[QueryHit],
-      nQueries: Int,
-      k: Int
-  ): Map[Int, Seq[(Long, Double)]] = {
-    val kk = k
-    val merged = hits
-      .groupByKey(_.qid)(Encoders.scalaInt)
-      .flatMapGroups { (qid, it) =>
-        Bm25.sortHits(it.map(h => (h.docId, h.score)).toIndexedSeq)
-          .take(kk)
-          .zipWithIndex
-          .map { case ((d, s), i) => RankedHit(qid, i + 1, d, s) }
-          .iterator
-      }(Encoders.product[RankedHit])
-      .collect()
-
-    val byQ = merged.groupBy(_.qid)
-    (0 until nQueries).map { qid =>
-      qid -> byQ.getOrElse(qid, Array.empty[RankedHit]).sortBy(_.rank).map(h => (h.docId, h.score)).toSeq
-    }.toMap
+  private def expansions(spark: SparkSession, indexDir: String, exps: Seq[Query.Expansion]): Map[String, Long] = {
+    val meta = SegmentIndex.readMeta(indexDir)
+    dictionaryPass(spark, indexDir, meta, SegmentIndex.liveSegmentFiles(indexDir, meta), Nil, exps)
   }
 
   /** Same batch contract served from pre-loaded in-memory segments (no Spark

@@ -85,4 +85,25 @@ class ShingleExprsSpec extends SparkTestBase {
     val fpv = ShingleFingerprint(toks, 3, 4).eval(null).toString
     assert(fpv == modelFingerprint("alpha bravo charlie", 3, 4))
   }
+
+  test("spark.sql.extensions=graft.spark.GraftExtensions registers ref_tokenize_native") {
+    // what a session does with the config value: load the named class, apply
+    // it to the session's extensions, register their functions
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.StringType
+    val ext = new SparkSessionExtensions
+    Class.forName("graft.spark.GraftExtensions").getConstructor().newInstance()
+      .asInstanceOf[SparkSessionExtensions => Unit](ext)
+    val registry = new SimpleFunctionRegistry
+    // `registerFunctions` is private to Spark's sql package
+    ext.getClass.getMethod("registerFunctions", classOf[FunctionRegistry]).invoke(ext, registry)
+    val fn = FunctionIdentifier("ref_tokenize_native")
+    assert(registry.functionExists(fn))
+    val toks = registry.lookupFunction(fn, Seq(Literal("Foo-Bar Baz"))).eval(null).asInstanceOf[ArrayData]
+    assert(toks.toSeq[AnyRef](StringType).map(_.toString) == Seq("foo", "bar", "baz"))
+  }
 }
